@@ -1,7 +1,11 @@
 package graft.hl7
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
 /** Spark-native re-expression of the reference's full data plane:
   *
@@ -165,20 +169,42 @@ object Pipeline {
     withZone(ingestedEvents.unionByName(staged))
   }
 
+  /** A17 — the catalog row of each lake row: five of the six lake columns
+    * it reads, the row's key prefix and the catalog write time.
+    * The batch writer, the streaming lake sink and [[retrieve]] share this
+    * one definition, so their catalogs cannot drift apart. */
+  def catalogRows(lake: DataFrame): DataFrame = lake.select(
+    col("message_id"),
+    concat(lit("zone="), col("zone"), lit("/protocol="), col("protocol")).as("path"),
+    col("source"), col("zone"), col("format"), col("content_type"),
+    current_timestamp().as("ingest_ts"))
+
+  /** The lake columns [[catalogRows]] reads. */
+  private val CatalogSource: StructType = StructType(
+    Seq("message_id", "source", "zone", "protocol", "format", "content_type")
+      .map(StructField(_, StringType)))
+
+  /** The catalog table's schema as read back, derived from [[catalogRows]]. */
+  def catalogSchema(spark: SparkSession): StructType = nullable(
+    catalogRows(spark.createDataFrame(java.util.List.of[Row](), CatalogSource)).schema
+  ).asInstanceOf[StructType]
+
   /** A16/A17 — partitioned lake sink + catalog append. Partition layout
     * mirrors the reference's key scheme `zone/protocol=…`
     * (`core_stack.yml:151`); the catalog is a queryable table instead of
     * DynamoDB. At 100 TB the zone/protocol partitioning gives consumers
-    * partition pruning exactly like the reference's prefix-scoped readers. */
+    * partition pruning exactly like the reference's prefix-scoped readers.
+    *
+    * `events` is evaluated once: the catalog is built from a column-pruned
+    * read of the rows just written, because a second pass over an uncached
+    * `events` would redo its whole chain (source listing and read, dedup
+    * shuffle, parse). */
   def writeLake(events: DataFrame, lakeRoot: String): Unit = {
+    val messages = s"$lakeRoot/messages"
     events.write.mode("overwrite")
       .partitionBy("zone", "protocol")
-      .parquet(s"$lakeRoot/messages")
-    events.select(
-        col("message_id"),
-        concat(lit("zone="), col("zone"), lit("/protocol="), col("protocol")).as("path"),
-        col("source"), col("zone"), col("format"), col("content_type"),
-        current_timestamp().as("ingest_ts"))
+      .parquet(messages)
+    catalogRows(events.sparkSession.read.schema(CatalogSource).parquet(messages))
       .write.mode("overwrite").parquet(s"$lakeRoot/catalog")
   }
 
@@ -217,7 +243,6 @@ object Pipeline {
     * the directory swap — the exact window a racing append lands in. */
   private[graft] def compactLake(spark: SparkSession, messagesDir: String,
                                  targetBytes: Long, beforeSwap: () => Unit): Int = {
-    import org.apache.hadoop.fs.Path
     val path = new Path(messagesDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new Path(messagesDir + "__old")
@@ -226,25 +251,7 @@ object Pipeline {
     if (!fs.exists(path) && fs.exists(old)) fs.rename(old, path)
     fs.delete(old, true)
     fs.delete(tmp, true)
-    // committed data files relative to `dir` (skips _SUCCESS/_temporary/hidden)
-    def dataFiles(dir: Path): Seq[(String, Long)] = {
-      if (!fs.exists(dir)) return Nil
-      // listFiles returns scheme-qualified paths — qualify the root the
-      // same way or the relative-path strip silently no-ops
-      val prefix = fs.makeQualified(dir).toString + "/"
-      val it = fs.listFiles(dir, true)
-      val buf = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-      while (it.hasNext) {
-        val st = it.next()
-        val f = st.getPath
-        val rel = f.toString.stripPrefix(prefix)
-        if (!f.getName.startsWith("_") && !f.getName.startsWith(".") &&
-            !rel.contains("/_") && !rel.contains("/."))
-          buf += ((rel, st.getLen))
-      }
-      buf.toSeq
-    }
-    val snapshot = dataFiles(path)
+    val snapshot = dataFiles(fs, path).toVector
     if (snapshot.isEmpty) return 0
     val snapSet = snapshot.map(_._1).toSet
     val totalBytes = snapshot.map(_._2).sum
@@ -262,7 +269,7 @@ object Pipeline {
     fs.rename(path, old)
     // carry files committed after the snapshot (racing appender) into the
     // compacted table, preserving their partition subpaths
-    dataFiles(old).foreach { case (rel, _) =>
+    dataFiles(fs, old).foreach { case (rel, _) =>
       if (!snapSet.contains(rel)) {
         val dest = new Path(tmp, rel)
         fs.mkdirs(dest.getParent)
@@ -272,7 +279,7 @@ object Pipeline {
     if (!fs.rename(tmp, path)) {
       // an appender recreated the live dir inside the swap window: merge
       // the compacted files into it instead of failing the promote
-      dataFiles(tmp).foreach { case (rel, _) =>
+      dataFiles(fs, tmp).foreach { case (rel, _) =>
         val dest = new Path(path, rel)
         fs.mkdirs(dest.getParent)
         fs.rename(new Path(tmp, rel), dest)
@@ -283,9 +290,60 @@ object Pipeline {
     nFiles
   }
 
-  /** A19 — point retrieval: catalog filter + payload join, LIMIT 1 semantics.
-    * At scale this is a partition-pruned scan (zone/protocol from the catalog
-    * row) + broadcast of the single catalog hit. */
+  /** Committed data files under `dir`, as paths relative to it with their
+    * lengths. `_SUCCESS`, `_temporary` and hidden files and directories are
+    * skipped by their names below `dir`, so a lake whose own path passes
+    * through a hidden directory still lists. */
+  private def dataFiles(fs: FileSystem, dir: Path): Iterator[(String, Long)] = {
+    if (!fs.exists(dir)) return Iterator.empty
+    // listFiles returns scheme-qualified paths — qualify the root the
+    // same way or the relative-path strip silently no-ops
+    val prefix = fs.makeQualified(dir).toString + "/"
+    val it = fs.listFiles(dir, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(st => (st.getPath.toString.stripPrefix(prefix), st.getLen))
+      .filterNot(_._1.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+  }
+
+  /** Footer key under which Spark stores a parquet file's row schema; Spark's
+    * own schema inference reads it. */
+  private val SparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Schema of a lake's `messages` table with its zone/protocol partition
+    * columns, read on the driver from one data file's footer, so no
+    * schema-inference job runs. A table with no data file, or files not
+    * written by Spark, falls back to Spark's inference. */
+  private def messagesSchema(spark: SparkSession, messagesDir: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(messagesDir)
+    val fs = root.getFileSystem(conf)
+    dataFiles(fs, root).nextOption().flatMap { case (rel, _) =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(root, rel), conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkRowSchemaKey))
+      finally reader.close()
+    }.map(json => nullable(DataType.fromJson(json)).asInstanceOf[StructType]
+        .add("zone", StringType).add("protocol", StringType))
+      .getOrElse(spark.read.parquet(messagesDir).schema)
+  }
+
+  /** `t` with every field, element and map value nullable, as Spark reads a
+    * file's schema. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(m.keyType, nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Materializations of one message, in the order a format-less
+    * [[retrieve]] picks them: the ingested original, its parsed form, then
+    * the error-zone text. */
+  val FormatOrder: Seq[String] = Seq("er7", "json", "txt")
+
+  /** A19 — point retrieval: one catalog lookup, then one fetch from the
+    * lake partition the catalog row names. Without a format the first
+    * materialization in [[FormatOrder]] is returned, so the er7 original
+    * whenever the message was ingested. */
   def retrieve(spark: SparkSession, lakeRoot: String, messageId: String): DataFrame =
     retrieve(spark, lakeRoot, messageId, None)
 
@@ -293,15 +351,35 @@ object Pipeline {
     * `GET /hl7v2/format/{format}/msg_uuid/{msg_uuid}`
     * (`old_reference/hcdl_stack.txt:503-510`): the same message exists in
     * both er7 (ingestion zone) and json (staging zone); the format picks
-    * which materialization to fetch. */
+    * which materialization to fetch.
+    *
+    * The catalog lookup runs when this is called (one Spark job, and
+    * PATH_NOT_FOUND for a missing lake); the returned frame reads only the
+    * hit's `zone=…/protocol=…` directory, with the id and format filters
+    * pushed into the parquet scan and the catalog's `path` and `ingest_ts`
+    * attached as literals. On a miss it is an empty frame of the same
+    * schema. Both reads use declared schemas, so neither launches a
+    * schema-inference job. */
   def retrieve(spark: SparkSession, lakeRoot: String, messageId: String,
                format: Option[String]): DataFrame = {
-    val cat = spark.read.parquet(s"$lakeRoot/catalog")
+    val catSchema = catalogSchema(spark)
+    val matches = spark.read.schema(catSchema).parquet(s"$lakeRoot/catalog")
       .filter(col("message_id") === messageId)
-    val hit = format.fold(cat)(f => cat.filter(col("format") === f)).limit(1)
-    spark.read.parquet(s"$lakeRoot/messages")
-      .join(broadcast(hit.select("message_id", "path", "format", "ingest_ts")),
-            Seq("message_id", "format"))
+    val hit = format.fold(matches)(f => matches.filter(col("format") === f))
+      .select("path", "format", "ingest_ts").collect()
+      .sortBy(r => FormatOrder.indexOf(r.getString(1)))
+      .headOption
+    val messagesDir = s"$lakeRoot/messages"
+    val schema = messagesSchema(spark, messagesDir)
+    val lake = hit.fold(spark.createDataFrame(java.util.List.of[Row](), schema)) { h =>
+      spark.read.schema(schema).option("basePath", messagesDir)
+        .parquet(s"$messagesDir/${h.getString(0)}")
+        .filter(col("message_id") === messageId && col("format") === h.getString(1))
+    }
+    val keys = Seq("message_id", "format")
+    lake.select(keys.map(col) ++ schema.fieldNames.filterNot(keys.contains).map(col) ++ Seq(
+      lit(hit.map(_.get(0)).orNull).cast(catSchema("path").dataType).as("path"),
+      lit(hit.map(_.get(2)).orNull).cast(catSchema("ingest_ts").dataType).as("ingest_ts")): _*)
   }
 
   // ------------------------------------------------------------------

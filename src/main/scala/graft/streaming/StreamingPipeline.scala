@@ -132,12 +132,9 @@ object StreamingPipeline {
         batch.write.mode("append")
           .partitionBy("zone", "protocol")
           .parquet(s"$lakeRoot/messages")
-        batch.select(
-            col("message_id"),
-            concat(lit("zone="), col("zone"), lit("/protocol="), col("protocol")).as("path"),
-            col("source"), col("zone"), col("format"), col("content_type"),
-            current_timestamp().as("ingest_ts"))
-          .write.mode("append").parquet(s"$lakeRoot/catalog")
+        // an append cannot read its rows back as writeLake does, so the
+        // batch is persisted for its second write
+        Pipeline.catalogRows(batch).write.mode("append").parquet(s"$lakeRoot/catalog")
         batch.unpersist()
         ()
       }

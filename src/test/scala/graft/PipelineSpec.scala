@@ -1,9 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.hl7.Pipeline
+import graft.streaming.StreamingPipeline
 
 /** Pipeline E2E vs goldens (SURVEY.md §5.2.2, Q21): replaces the reference's
   * eyeballed prints (`test_services.py:82-83`) with asserted counts. */
@@ -147,5 +150,131 @@ class PipelineSpec extends AnyFunSuite {
     assert(er7.head.getAs[String]("zone") == "ingestion")
     assert(json.head.getAs[String]("zone") == "staging")
     assert(Pipeline.retrieve(spark, root, anyId, Some("txt")).isEmpty)
+  }
+
+  // ------------------------------------------------------------------
+  // Lake write and point retrieval over a hand-written inbox
+
+  private val adt = Seq(
+    "MSH|^~\\&|ADT1|GOOD HEALTH|REG|HOSP|20240101120000||ADT^A01|MSG0001|P|2.5",
+    "EVN|A01|20240101120000",
+    "PID|1||PAT123^^^HOSP^MR||DOE^JANE||19800101|F",
+    "PV1|1|I|W^389^1")
+
+  /** A valid ADT, an exact duplicate of it, an unparseable payload and the
+    * ADT with CRLF line endings: 3 distinct messages, 2 of which parse. */
+  private def writeInbox(dir: Path): Unit = {
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("adt.txt"), adt.mkString("\n") + "\n")
+    Files.writeString(dir.resolve("adt_resent.txt"), adt.mkString("\n") + "\n")
+    Files.writeString(dir.resolve("junk.txt"), "I'm just a random number: 42\n")
+    Files.writeString(dir.resolve("adt_crlf.txt"), adt.mkString("\r\n") + "\r\n")
+  }
+
+  /** A batch lake under a dot-directory, with the events written. */
+  private lazy val batchLake: (String, DataFrame) = {
+    val tmp = Files.createTempDirectory("graft-retrieve")
+    writeInbox(tmp.resolve("inbox"))
+    val root = tmp.resolve(".runs/lake").toString
+    val events = Pipeline.allEvents(spark, tmp.resolve("inbox").toString)
+    Pipeline.writeLake(events, root)
+    (root, events)
+  }
+
+  private def ids(root: String): Seq[String] =
+    spark.read.parquet(s"$root/catalog").select("message_id").distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  /** The catalog-join form of A19 that `retrieve` replaced: the reference
+    * its rows and schema are checked against. */
+  private def joinRetrieve(root: String, id: String, format: Option[String]): DataFrame = {
+    val cat = spark.read.parquet(s"$root/catalog").filter(col("message_id") === id)
+    val hit = format.fold(cat)(f => cat.filter(col("format") === f)).limit(1)
+    spark.read.parquet(s"$root/messages")
+      .join(broadcast(hit.select("message_id", "path", "format", "ingest_ts")),
+            Seq("message_id", "format"))
+  }
+
+  /** `retrieve(format)` has the join form's columns, types and rows
+    * (ingest_ts aside) for the join form's `reference` format. */
+  private def assertSameAsJoin(root: String, id: String, format: Option[String],
+                               reference: Option[String]): Unit = {
+    val got = Pipeline.retrieve(spark, root, id, format)
+    val want = joinRetrieve(root, id, reference)
+    assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType))
+    assert(got.drop("ingest_ts").collect().toSeq == want.drop("ingest_ts").collect().toSeq,
+      s"id $id format $format")
+  }
+
+  test("retrieve matches the catalog-join form on every format, and a miss is empty") {
+    val (root, _) = batchLake
+    val all = ids(root)
+    assert(all.length == 3)
+    val formats = spark.read.parquet(s"$root/catalog").groupBy("message_id")
+      .agg(collect_set("format").as("f")).collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap
+    for (id <- all) {
+      for (f <- Pipeline.FormatOrder) assertSameAsJoin(root, id, Some(f), Some(f))
+      // format-less: the er7 original, which every ingested message has
+      assert(formats(id).contains("er7"))
+      assertSameAsJoin(root, id, None, Some("er7"))
+      assert(Pipeline.retrieve(spark, root, id).count() == 1)
+    }
+    // every id has er7 and exactly one of json/txt
+    assert(formats.values.map(_ - "er7").toSeq.sortBy(_.mkString) ==
+      Seq(Set("json"), Set("json"), Set("txt")))
+    val miss = "0" * 64
+    assertSameAsJoin(root, miss, None, None)
+    assert(Pipeline.retrieve(spark, root, miss).isEmpty)
+  }
+
+  test("retrieve reads a lakeSink lake, which has no segments column") {
+    val tmp = Files.createTempDirectory("graft-retrieve-stream")
+    writeInbox(tmp.resolve("inbox"))
+    val root = tmp.resolve(".runs/lake").toString
+    StreamingPipeline.run(spark, tmp.resolve("inbox").toString, root, tmp.resolve("ckpt").toString)
+    assert(!spark.read.parquet(s"$root/messages").columns.contains("segments"))
+    val all = ids(root)
+    assert(all.length == 3)
+    for (id <- all) {
+      val f = spark.read.parquet(s"$root/catalog").filter(col("message_id") === id)
+        .select("format").collect().map(_.getString(0)).toSeq
+      assert(f.length == 1) // the stream lake holds the staged branch only
+      assertSameAsJoin(root, id, None, Some(f.head))
+      for (g <- Pipeline.FormatOrder) assertSameAsJoin(root, id, Some(g), Some(g))
+    }
+    assertSameAsJoin(root, "0" * 64, None, None)
+  }
+
+  test("retrieve on a missing lake raises PATH_NOT_FOUND instead of returning empty") {
+    val root = Files.createTempDirectory("graft-retrieve-missing").resolve("nope").toString
+    val e = intercept[AnalysisException](Pipeline.retrieve(spark, root, "0" * 64))
+    assert(e.getCondition == "PATH_NOT_FOUND")
+  }
+
+  test("the written catalog is the events' catalog projection, row for row") {
+    val (root, events) = batchLake
+    val want = Pipeline.catalogRows(events)
+    val written = spark.read.parquet(s"$root/catalog")
+    assert(written.schema.map(f => f.name -> f.dataType) ==
+      Pipeline.catalogSchema(spark).map(f => f.name -> f.dataType))
+    def rows(df: DataFrame) = df.drop("ingest_ts").collect().map(_.mkString("|")).sorted.toSeq
+    assert(rows(written).length == 6)
+    assert(rows(written) == rows(want))
+  }
+
+  test("writeLake evaluates the events chain once") {
+    val tmp = Files.createTempDirectory("graft-write-once")
+    writeInbox(tmp.resolve("inbox"))
+    val evaluated = spark.sparkContext.longAccumulator("events evaluated")
+    // a nondeterministic filter is neither pushed down nor pruned: it runs
+    // once per events row on every pass over the chain
+    val tick = udf { (_: String) => evaluated.add(1); true }.asNondeterministic()
+    val events = Pipeline.allEvents(spark, tmp.resolve("inbox").toString).filter(tick(col("zone")))
+    val root = tmp.resolve("lake").toString
+    Pipeline.writeLake(events, root)
+    val rows = spark.read.parquet(s"$root/messages").count()
+    assert(rows == 6)
+    assert(evaluated.value == rows)
   }
 }
