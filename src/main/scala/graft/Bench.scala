@@ -1,63 +1,72 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Suite timer. Protocol: after the warm-up, each selected query runs once,
+  * its `.count()` wall and process-CPU delta are recorded, and a query that
+  * throws is a failure, not a timing.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_CPUS (cores),
+  * SPARK_GRAFT_ONLY (comma-separated name prefixes), SPARK_GRAFT_TIER
+  * (`full` adds the anti-baseline tier), SPARK_GRAFT_OUT (artifact path).
+  * Prints one short JSON line, writes the full-detail artifact, and exits 1
+  * when any query failed. */
 object Bench {
+  final case class Timing(name: String, wall: Double, cpu: Double)
+  /** Timed queries in run order, and the names of those that threw. */
+  final case class Run(timings: Seq[Timing], failed: Seq[String]) {
+    def total: Double = timings.map(_.wall).sum
+  }
+
+  /** Total CPU seconds this process has burned. */
+  private def processCpuSec(): Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1e9
+      case _ => -1.0
+    }
+
+  /** The timing loop of the protocol above. */
+  def time(spark: SparkSession, sfDir: String,
+           queries: Seq[(String, (SparkSession, String) => DataFrame)]): Run = {
+    val timings = Seq.newBuilder[Timing]
+    val failed = Seq.newBuilder[String]
+    queries.foreach { case (name, fn) =>
+      val c0 = processCpuSec()
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).count()
+        timings += Timing(name, (System.nanoTime() - t0) / 1e9, processCpuSec() - c0)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+        failed += name
+      }
+    }
+    Run(timings.result(), failed.result())
+  }
+
+  private def r3(v: Double): String = f"$v%.3f"
+  private def quote(s: String): String = "\"" + s + "\""
+
+  /** One bench JSON line: the run's total and failures, `fields` (run-level
+    * fields, comma-separated, no braces), then the walls of `listed`. */
+  def jsonLine(run: Run, fields: String, listed: Seq[Timing]): String =
+    s"""{"metric":"total","value":${r3(run.total)},"unit":"sec",""" +
+      s""""n_queries":${run.timings.size},"n_failed":${run.failed.size},""" +
+      s""""failed":${run.failed.map(quote).mkString("[", ",", "]")},$fields,""" +
+      s""""queries":${listed.map(t => quote(t.name) + ":" + r3(t.wall)).mkString("{", ",", "}")}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r13 (VERDICT-r12 #1): the r12 sort-writer forcing
-      // (bypassMergeThreshold=0) is REVERTED to the Spark default. The
-      // demanded clean-window full-suite 32-core A/B (calib_par 165-237 ms
-      // both runs, same code, back-to-back on a fresh-boot host):
-      //   sort writer forced: 326.8 s wall, 2196 cpu_sec (1880 adjusted
-      //     for its 40 rerun second-samples)
-      //   Spark default:      311.1 s wall, 1380 cpu_sec (1341 adjusted)
-      // — the default wins the suite wall AND burns ~40% less process
-      // CPU (the starvation-robust signal); the r12 same-window A/Bs that
-      // motivated the forcing were loaded-window walls. At cluster scale
-      // R > 200 keeps bypass off anyway, so reverting changes nothing at
-      // scale. Env-overridable so the pair stays reproducible
-      // (SPARK_GRAFT_BYPASS_THRESHOLD=0 restores the r12 behavior).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "200"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // r13: generic conf passthrough for isolated A/Bs (e.g. the VERDICT
-    // #7 state-partition floor sweep: SPARK_GRAFT_CONF=
-    // "spark.graft.streaming.statePartitions=4"). Semicolon-separated
-    // k=v pairs; never set by the driver → no effect on official runs.
-    val builder2 = sys.env.get("SPARK_GRAFT_CONF").map(_.split(";").toSeq)
-      .getOrElse(Nil).filter(_.contains("="))
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-    val spark = builder2.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     // warm up the JVM/codegen/file-index paths so the first timed query
     // doesn't absorb session startup
     spark.range(1000000).selectExpr("sum(id)").collect()
     graft.core.Tables.names.foreach { t =>
       graft.core.Tables.table(spark, sfDir, t).selectExpr("count(*)").collect()
     }
-    // optional per-query warm-up pass at the smallest SF (off by default:
-    // measured 53s cold vs 88s warmed at sf0.1 — the 67-query compile burst
-    // costs more in code-cache/GC churn than recompilation saves, even with
-    // the enlarged ReservedCodeCacheSize in build.sbt)
-    if (sys.env.getOrElse("SPARK_GRAFT_WARM", "0") == "1") {
-      val warmDir = "/root/testdata/sf0.001"
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-    }
-    // host-starvation marker: this VM suffers hypervisor CPU-starvation
-    // windows that uniformly inflate wall-clock (measured 45s..589s for
-    // identical builds). A fixed single-thread spin timed before and after
-    // the suite gives the reader an objective scale factor: steady state is
-    // ~250-350 ms; a starved run shows a multiple.
+    // Host-speed markers taken before and after the suite: a fixed
+    // single-thread spin (calib_ms) and one spin per core (calib_par_ms).
+    // A run on a CPU-starved host shows a multiple of the usual 250-350 ms.
     def spin(): Long = {
       var acc = 0L; var i = 0L
       while (i < 400000000L) { acc += i; i += 1 }
@@ -68,9 +77,6 @@ object Bench {
       if (spin() == 42) println("") // defeat dead-code elimination
       (System.nanoTime() - t0) / 1e6
     }
-    // parallel variant: starvation windows observed here leave single-thread
-    // speed intact but stall multi-core scheduling (the VM gets a few vCPUs'
-    // worth of time) — 32 concurrent spins expose exactly that
     def calibParMs(): Double = {
       val n = Runtime.getRuntime.availableProcessors()
       val t0 = System.nanoTime()
@@ -78,206 +84,75 @@ object Bench {
       ts.foreach(_.start()); ts.foreach(_.join())
       (System.nanoTime() - t0) / 1e6
     }
-    // process-CPU marker: total CPU seconds the suite actually burned.
-    // Starvation inflates wall-clock but not CPU-work, so wall >> cpu/cores
-    // with normal cpu identifies a throttled run even when the window falls
-    // between the spin samples.
-    def processCpuSec(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1e9
-        case _ => -1.0
-      }
-    // discard one sample of each marker first: the JIT compiles the spin
-    // loop / thread-startup path on the first call, inflating it ~1.5-2×
-    // and masquerading as starvation in the before/after comparison
+    // discard one sample of each marker: the first call includes JIT
+    // compilation of the spin loop and thread startup
     calibMs(); calibParMs()
     val cpuBefore = processCpuSec()
     val calibBefore = calibMs()
     val calibParBefore = calibParMs()
-    // local-iteration filter (same contract as Verify): SPARK_GRAFT_ONLY=
-    // q86,q130 times just those queries — for isolating a perf target from
-    // suite-order effects; the committed BENCH_local.json is always a full run
+    // SPARK_GRAFT_ONLY=q86,q130 times just those prefixes; a committed
+    // BENCH_local.json is always a full run
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    // Anti-baseline tier (VERDICT-r11 #4): q09 is the registry's one
-    // DELIBERATELY quadratic-output query — 1003 s of the 3182 s sf10
-    // full-suite wall (31.5%) for a number that is already pinned and
-    // priced (its scale-survivable twins q09b/q09c are in the suite).
-    // The default bench run excludes it; SPARK_GRAFT_TIER=full includes
-    // it, and either way the artifact reports suite_wall and
-    // anti_baseline_wall separately. Correctness (Verify) always runs it.
+    // Anti-baseline tier: q09 is the registry's one deliberately
+    // quadratic-output query (a third of the sf10 suite wall for a number
+    // already pinned; its bounded twins q09b/q09c are in the suite). The
+    // default run excludes it, SPARK_GRAFT_TIER=full includes it, and the
+    // artifact reports suite_wall and anti_baseline_wall separately.
+    // Verify always runs it.
     val antiBaseline = Set("q09_range_join")
     val tier = sys.env.getOrElse("SPARK_GRAFT_TIER", "suite")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
       .filter { case (n, _) =>
         tier == "full" || only.nonEmpty || !antiBaseline(n) }
-    // Starvation-aware timing protocol, v2. The hypervisor intermittently
-    // withholds cycles from this VM, uniformly inflating wall-clock
-    // (committed rounds 3-5 were each ~2-5× inflated vs isolated reruns).
-    // The v1 trigger (wall > 1.5× the query's own process-CPU delta) can
-    // NEVER fire for a well-parallelized query: whatever cores the JVM does
-    // get still burn CPU, so on 32 threads cpuDelta ≥ wall even under 80%
-    // steal — r05 shipped ~5×-inflated entries with n_rerun: 0.
-    //
-    // v2 uses two INDEPENDENT signals, both required before substituting a
-    // rerun sample (so legitimately-slower-than-history queries are never
-    // silently replaced by a warm-cache second run):
-    //  1. FLOOR: first wall > 2× the query's historical floor — the min
-    //     wall across every committed bench artifact (rounds 1-5, 38
-    //     BENCH_local.json revisions, plus the round-5 verdict's isolated
-    //     reruns), pinned in resources/graft/bench_floors.txt. Unlike the
-    //     CPU ratio this fires exactly when a run is slow vs recorded
-    //     evidence. Queries with no floor yet (new this round) never rerun.
-    //  2. PROBE: a parallel-spin calibration run immediately after the
-    //     suspect query shows withheld cycles (probe wall > 1.6× steady
-    //     state; steady state is ~250 ms here, clamped from the pre-suite
-    //     sample in case that one was itself starved). This is the
-    //     adjacency the endpoint markers lack — r05's markers were flat
-    //     (150/147 ms) while mid-suite queries starved 5×.
-    // FLOOR-only (probe clean) keeps the FIRST wall and flags floor_stale:
-    // the query is genuinely slower than history (e.g. q115's floor
-    // predates its deliberate two-pass rewrite) and a warm-run min would
-    // bias the artifact downward — ADVICE r05. Both-signals queries rerun
-    // once and keep the min; every sample (both walls, both cpu deltas,
-    // probe ms) lands in BENCH_local.json so the decision is auditable.
-    // floors are sf0.1 measurements — at any other scale factor the table
-    // would mark every query suspect and double the suite, so skip it
-    val floors: Map[String, Double] = {
-      val in = if (sfDir.contains("sf0.1")) getClass.getResourceAsStream("/graft/bench_floors.txt") else null
-      if (in == null) Map.empty
-      else try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filterNot(l => l.startsWith("#") || l.isEmpty)
-        .map { l => val a = l.split(" "); a(0) -> a(1).toDouble }.toMap
-      finally in.close()
-    }
-    val parSteadyMs = math.min(calibParBefore, 300.0)
-    case class QRes(name: String, w1: Double, c1: Double,
-                    rerun: Option[(Double, Double, Double)], // (wall2, cpu2, probeMs)
-                    floorStale: Option[Double]) {            // probeMs when clean
-      def wall: Double = rerun.map(t => math.min(w1, t._1)).getOrElse(w1)
-    }
-    val results = selected.map { case (name, fn) =>
-      def once(): (Double, Double) = {
-        val c0 = processCpuSec()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            -1L
-        }
-        ((System.nanoTime() - t0) / 1e9, processCpuSec() - c0)
-      }
-      val (w1, c1) = once()
-      val floor = floors.get(name)
-      // Streaming twins are fixed-cost TRIGGER TRAINS (5-15 micro-batch
-      // commits of ~0.2-1 s each), not throughput measurements: ambient
-      // load stretches every commit, so their wall/floor ratio runs
-      // 2-3.5× on mildly-loaded windows where throughput queries stay
-      // under 2× (r09/r10: q176/q176b/q35b flagged stale on every loaded
-      // window). Wider band for them; same 2× elsewhere (VERDICT-r10 #8).
-      val tol = if (name.contains("stream")) 3.5 else 2.0
-      if (w1 > 0.4 && floor.exists(f => w1 > tol * f)) {
-        val probe = calibParMs()
-        if (probe > 1.6 * parSteadyMs) {
-          val (w2, c2) = once()
-          QRes(name, w1, c1, Some((w2, c2, probe)), None)
-        } else {
-          // Probe read clean but the wall tripped the floor — on loaded
-          // hosts a 175 ms spin can sneak through a scheduling gap while
-          // the multi-second query still absorbed the load (q184,
-          // VERDICT-r11 #4). Grant the one rerun BEFORE flagging: only if
-          // the min of both samples still exceeds the band is the floor
-          // genuinely stale; otherwise the first sample was transient
-          // load-noise and no flag is emitted. Both samples land in
-          // rerun_detail either way, so the decision stays auditable.
-          val (w2, c2) = once()
-          val stale = if (math.min(w1, w2) > tol * floor.get) Some(probe) else None
-          QRes(name, w1, c1, Some((w2, c2, probe)), stale)
-        }
-      } else QRes(name, w1, c1, None, None)
-    }
+    val run = time(spark, sfDir, selected)
     val calibAfter = calibMs()
     val calibParAfter = calibParMs()
-    def r3(v: Double): String = f"$v%.3f"
-    // Keep the JSON line SHORT (<1k chars): the driver captures only a tail
-    // window of stdout, and a 62-query dict overflows it (round-1 parse
-    // failure). Per-query detail for the headline Q1-Q20 protocol set
-    // (BASELINE.md); the rest is summarized, full detail in BENCH_local.json.
-    val headline = results.filter { r =>
-      val num = r.name.drop(1).takeWhile(_.isDigit)
-      num.nonEmpty && num.toInt <= 20
-    }
-    val qs = headline.map(r => "\"" + r.name + "\":" + r3(r.wall))
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_.wall).sum else 0.0
-    // two-tier walls (VERDICT-r11 #4): suite_wall excludes the
-    // anti-baseline members; anti_baseline_wall is their sum when they ran
-    // (0 under the default tier). value/total remains sum-of-ran.
-    val suiteWall = results.filterNot(r => antiBaseline(r.name)).map(_.wall).sum
-    val antiWall = results.filter(r => antiBaseline(r.name)).map(_.wall).sum
-    val nRerun = results.count(_.rerun.isDefined)
-    val nStale = results.count(_.floorStale.isDefined)
-    // Sample process CPU exactly once so cpu_sec and effective_cores are
-    // computed from the same value. Numerator spans the whole run
-    // (calibration + setup + queries); denominator is sum-of-query walls —
-    // so the ratio slightly OVERSTATES per-query parallelism, which is the
-    // conservative direction for the steal diagnosis.
+    val (anti, suite) = run.timings.partition(t => antiBaseline(t.name))
+    // cpu_sec spans the whole run (markers + warm-up + queries) while the
+    // denominator of effective_cores is the sum of query walls, so the ratio
+    // slightly overstates per-query parallelism. Reference points on an
+    // unstarved host: ~3 at sf0.1, ~9 at sf1, ~21 at sf5.
     val cpuTotal = processCpuSec() - cpuBefore
-    val calib = s""""calib_ms":[${calibBefore.round},${calibAfter.round}],""" +
+    val fields =
+      s""""tier":"$tier","suite_wall":${r3(suite.map(_.wall).sum)},""" +
+      s""""anti_baseline_wall":${r3(anti.map(_.wall).sum)},""" +
+      s""""anti_baseline":${antiBaseline.map(quote).mkString("[", ",", "]")},""" +
+      s""""calib_ms":[${calibBefore.round},${calibAfter.round}],""" +
       s""""calib_par_ms":[${calibParBefore.round},${calibParAfter.round}],""" +
       s""""cpu_sec":${r3(cpuTotal)},""" +
-      // cpu/wall — the one number that separates hypervisor parallelism
-      // steal (flat calib, flat cpu, inflated wall ⇒ low effective cores)
-      // from a real regression; committed-clean reference points: ~3 at
-      // sf0.1 (latency-bound), ~9 at sf1, ~21 at sf5
-      s""""effective_cores":${r3(cpuTotal / math.max(total, 0.001))},""" +
-      s""""n_rerun":$nRerun,"n_floor_stale":$nStale"""
-    val fullQs = results.map(r => "\"" + r.name + "\":" + r3(r.wall))
-      .mkString("{", ",", "}")
-    // audit trail: for each starvation-confirmed rerun, BOTH samples' wall
-    // AND cpu deltas plus the probe that authorized the substitution —
-    // [w1, c1, w2, c2, probe_ms, floor]; for floor-only suspects whose probe
-    // came back clean, [w1, c1, probe_ms, floor] under floor_stale. The
-    // reader can recheck every min-keep decision from the artifact alone.
-    val rerunQs = results.filter(_.rerun.isDefined)
-      .map { r =>
-        val (w2, c2, probe) = r.rerun.get
-        "\"" + r.name + s"""\":[${r3(r.w1)},${r3(r.c1)},${r3(w2)},${r3(c2)},${probe.round},${r3(floors.getOrElse(r.name, -1.0))}]"""
-      }.mkString("{", ",", "}")
-    val staleQs = results.filter(_.floorStale.isDefined)
-      .map(r => "\"" + r.name + s"""\":[${r3(r.w1)},${r3(r.c1)},${r.floorStale.get.round},${r3(floors.getOrElse(r.name, -1.0))}]""")
-      .mkString("{", ",", "}")
-    val tiers = s""""tier":"$tier","suite_wall":${r3(suiteWall)},""" +
-      s""""anti_baseline_wall":${r3(antiWall)},""" +
-      s""""anti_baseline":[${antiBaseline.map("\"" + _ + "\"").mkString(",")}]"""
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},$tiers,$calib,"queries":$fullQs,"rerun_detail":$rerunQs,"floor_stale":$staleQs,"sf":"$sfDir"}"""
+      s""""effective_cores":${r3(cpuTotal / math.max(run.total, 0.001))},""" +
+      s""""sf":"$sfDir""""
     // SPARK_GRAFT_OUT redirects the full-detail artifact (e.g. a scale run
-    // at sf1 → BENCH_sf1.json); without it, never let a filtered run
-    // overwrite the committed full-suite sf0.1 artifact. A filtered run
-    // must not reach a committed full-suite artifact even via the
-    // redirect: SPARK_GRAFT_ONLY + SPARK_GRAFT_OUT=BENCH_local.json (or a
-    // driver-round BENCH_rN name) would silently replace a 165-query
-    // artifact with a partial one. BENCH_sf* stays writable — the sf5
-    // heavy subset is BY DESIGN a filtered run redirected there.
+    // → BENCH_sf1.json). A filtered run never writes a committed
+    // full-suite name (BENCH_local.json, BENCH_rN.json), even when
+    // redirected there; BENCH_sf* stays writable for filtered scale subsets.
     val outPath = sys.env.get("SPARK_GRAFT_OUT")
     val protectedName = outPath.exists { p =>
       val f = java.nio.file.Paths.get(p).getFileName.toString
       f == "BENCH_local.json" || f.matches("BENCH_r\\d+\\.json")
     }
     if (only.nonEmpty && protectedName)
-      System.err.println(s"REFUSING to write filtered run (${results.size} queries) to " +
+      System.err.println(s"REFUSING to write filtered run (${selected.size} queries) to " +
         s"committed artifact name ${outPath.get}; choose a different SPARK_GRAFT_OUT")
-    else if (outPath.isDefined || only.isEmpty) try {
-      // r13 (VERDICT-r12 #7): a non-32-core run must never overwrite the
-      // committed 32-core artifact via the default name — stamp the cpu
-      // count into the default path so scaling runs land beside it.
+    else if (outPath.isDefined || only.isEmpty) {
+      // the default name carries the core count unless it is the committed
+      // 32-core run, so runs on other hosts land beside it
       val defaultName =
         if (cpus == "32") "BENCH_local.json" else s"BENCH_local_c$cpus.json"
+      val queryCpu = run.timings.map(t => quote(t.name) + ":" + r3(t.cpu)).mkString("{", ",", "}")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outPath.getOrElse(defaultName)),
-        (full + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},$tiers,$calib,"queries":$qs,"sf":"$sfDir"}""")
+        (jsonLine(run, s"""$fields,"query_cpu":$queryCpu""", run.timings) + "\n").getBytes("UTF-8"))
+    }
+    // The stdout line stays short (the driver keeps only a tail of stdout):
+    // per-query walls for the headline q01-q20 set; the rest is in the artifact.
+    val headline = run.timings.filter { t =>
+      val num = t.name.drop(1).takeWhile(_.isDigit)
+      num.nonEmpty && num.toInt <= 20
+    }
+    println(jsonLine(run, fields, headline))
     spark.stop()
+    if (run.failed.nonEmpty) sys.exit(1)
   }
 }

@@ -11,11 +11,12 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object Explain {
 
-  /** The near-dup/ANN entries are eager (cache-lifecycle fix): their
-    * registered form returns a materialized local relation whose plan is a
-    * bare scan. Dump the lazy plan builders instead — those are the plans
-    * that matter. q69_dedup_groups stays as-registered: it is intrinsically
-    * driver-iterative (one join+agg plan per propagation round).
+  /** The near-dup/ANN entries are eager (they release their caches before
+    * returning): their registered form returns a materialized local
+    * relation whose plan is a bare scan. Dump the lazy plan builders
+    * instead — those are the plans that matter. q69_dedup_groups stays
+    * as-registered: it is intrinsically driver-iterative (one join+agg plan
+    * per propagation round).
     *
     * Shared (private[graft]) with PlanQualitySpec's blanket sweep so every
     * eager query with a lazy builder is swept on its REAL plan, and a new
@@ -35,9 +36,9 @@ object Explain {
       graft.llm.Similarity.bitextMineLshPlan(s, d)),
     "q195_deepwalk" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
       graft.queries.Relational11.q195Plan(s, d)),
-    // LPA (r12): the registered queries checkpoint per round, so their
-    // final explain is just the post-checkpoint tail — dump the plan ONE
-    // PHASE actually runs (where the r12 max_by-for-window rewrite lives)
+    // LPA: the registered queries checkpoint per round, so their final
+    // explain is just the post-checkpoint tail — dump the plan ONE PHASE
+    // actually runs (the max_by label argmax)
     "q182_label_prop" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
       graft.queries.Relational11.q182PhasePlan(s, d)),
     "q182b_label_prop_copart" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
@@ -46,7 +47,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = graft.core.Sessions.local("explain", "8")
+    val spark = graft.core.Sessions.local(8)
+    // the committed plan files are generated at 32 shuffle partitions, the
+    // bucket count of the bucketed tables, so exchanges align with buckets
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     val sb = new StringBuilder
     sb.append(s"# Physical plans (auto-generated by graft.Explain, $sfDir)\n")
     // local-iteration filter (same contract as Verify/Bench):

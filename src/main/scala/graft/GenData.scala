@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for local scale testing above the driver-provided
@@ -68,15 +68,10 @@ object GenData {
     val vecsMode = if (args.length > 5) args(5) else "noise"
     require(vecsMode == "noise" || vecsMode == "bitext",
       s"vecs mode must be noise|bitext: $vecsMode")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // fixed at 32 on any core count so a generated corpus is the same files
+    // wherever it is built
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def write(name: String, df: DataFrame, parts: Int): Unit =

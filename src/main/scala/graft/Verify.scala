@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the driver's DuckDB compare, and failed.txt
+  * (one `name<TAB>message` line per query that threw; empty when none). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r13: r12's sort-writer forcing reverted — see Bench.scala (the
-      // clean-window A/B showed the Spark default wins wall and CPU)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: SPARK_GRAFT_ONLY=q86,q93 dumps matching
     // prefixes only (the driver never sets it → full dump)
@@ -29,16 +20,19 @@ object Verify {
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.exists(name.startsWith)) && !skip.contains(name)
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(s"$name\t${String.valueOf(e.getMessage).replaceAll("\\s+", " ")}\n")
       }
     }
+    Files.writeString(Paths.get(s"$outDir/failed.txt"), failed.mkString)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // driver's json.load fail and silently zero the correctness gate.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

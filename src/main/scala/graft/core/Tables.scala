@@ -64,22 +64,3 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
 }
-
-/** Session factory with the scale-aware defaults used across the engine. */
-object Sessions {
-  def local(appName: String = "graft", cores: String = "32"): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", "32")
-      // r13: r12's sort-writer forcing reverted — see Bench.scala (the
-      // clean-window A/B showed the Spark default wins wall and CPU)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-}

@@ -351,10 +351,10 @@ object Similarity {
     (top, Seq(withBuckets))
   }
 
-  /** Candidate stage of the LSH probe, exposed so LshStudy can measure the
-    * CANDIDATE FRACTION (|cand| / (n−1)) directly — the quantity the
-    * bits/tables capacity rule controls (≈ min(1, L/2^B) on uniform
-    * buckets). Returns (candidates, the cached bucket frame to unpersist). */
+  /** Candidate stage of the LSH probe. Its size over n−1 is the candidate
+    * fraction the bits/tables capacity rule controls (≈ min(1, L/2^B) on
+    * uniform buckets). Returns (candidates, the cached bucket frame to
+    * unpersist). */
   private[graft] def knnLshParts(s: SparkSession, d: String,
       bits: Int, tables: Int): (DataFrame, DataFrame) = {
     val e = vecs(s, d).withColumn("norm", sqrt(dot(col("v"), col("v"))))
@@ -786,8 +786,8 @@ object Similarity {
     (top, Seq(withBuckets))
   }
 
-  /** Candidate-pair stage (see knnLshParts): LshStudy measures
-    * |cand| / (queries·(n−1)) against the L/2^B rule. */
+  /** Candidate-pair stage (see knnLshParts); |cand| / (queries·(n−1)) is
+    * the candidate fraction the L/2^B rule controls. */
   private[graft] def hardNegativesLshParts(s: SparkSession, d: String,
       bits: Int, tables: Int): (DataFrame, DataFrame) = {
     val e = vecs(s, d).withColumn("norm", sqrt(dot(col("v"), col("v"))))

@@ -1,20 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Accuracy bounds for the sketch-based operators (no SQL oracle). */
-class ApproxSpec extends AnyFunSuite {
+class ApproxSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.01"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("approx_count_distinct within 5% of exact (q10 contract)") {
     val exact = SparkEntry.queries("q10_count_distinct")(spark, sf)

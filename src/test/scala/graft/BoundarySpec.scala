@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Float-rounding-boundary gate for the model-fitting query class
   * (VERDICT r09 "What's wrong #2").
@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    is astronomically large; the fit class (log-regressions, cosines)
   *    is where irrational intermediates make near-boundary values live.
   */
-class BoundarySpec extends AnyFunSuite {
+class BoundarySpec extends AnyFunSuite with LocalSpark {
 
   /** The driver gate's scale — boundary distance is only meaningful at
     * the sf the hash compare actually runs. */
@@ -40,13 +40,6 @@ class BoundarySpec extends AnyFunSuite {
     * being ~1e-12 absolute on O(1) values — 8 orders below the expected
     * ~2.5e-5 distance of a uniformly-placed value. */
   private val MinUlps = 1e4
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Assert every value of `col` in the raw frame is far from a
     * `digits`-digit rounding boundary AND not a near-zero sign hazard

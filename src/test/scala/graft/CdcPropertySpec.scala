@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -11,14 +10,7 @@ import graft.operators.Cdc
   * driver-side fold over the same random changelogs — the registered
   * queries (q104/q105) are these functions over the events table; here the
   * semantics are pinned independent of any fixed dataset. */
-class CdcPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdcPropertySpec extends AnyFunSuite with LocalSpark {
 
   /** (key, ts, seq, op, payload) — seq is globally unique so (ts, seq) is a
     * total order even with colliding timestamps. */

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llm.{Curation, Dedup}
 
@@ -9,16 +8,9 @@ import graft.llm.{Curation, Dedup}
   * oracles: permutation/partition-function invariants, determinism across
   * partition layouts, and the near-dup composition of the leakage-safe
   * split. */
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q132: epoch shard emits a bijection — every doc once, pos dense per shard") {
     val out = Curation.epochShard(spark, sf).cache()

@@ -1,22 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dispatch
 
 /** Pick-by-size dispatch (operators/Dispatch): the lever-pair selection
   * must flip at the session's broadcast threshold, and the dispatched
   * result must equal BOTH variants (they share one oracle). */
-class DispatchSpec extends AnyFunSuite {
+class DispatchSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def withThreshold[T](t: String)(body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"

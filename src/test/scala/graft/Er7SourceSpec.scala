@@ -1,20 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.hl7.Pipeline
 
 /** DataSourceV2 front door (`format("er7")`): row parity with the composed
   * text-scan reader, column pruning, and predicate-driven file skipping. */
-class Er7SourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Er7SourceSpec extends AnyFunSuite with LocalSpark {
 
   private def er7 = spark.read.format("er7").load(Pipeline.MessagesDir)
 

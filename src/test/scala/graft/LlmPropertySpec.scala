@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -9,14 +8,7 @@ import org.scalacheck.rng.Seed
 /** Property-based invariants of the text-analysis / dedup / split operators
   * (same direct-ScalaCheck pattern as Er7PropertySpec). Each property runs
   * one Spark job over a generated corpus rather than a job per case. */
-class LlmPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LlmPropertySpec extends AnyFunSuite with LocalSpark {
 
   private def sample[A](gen: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))

@@ -1,23 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, Multimodal, Similarity}
 import graft.functions.RollingHash
 
 /** Verifies the operators whose queries have no SQL oracle (hash-based and
   * approximate paths) against brute-force references on sf0.001. */
-class LlmSpec extends AnyFunSuite {
+class LlmSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("cosineNearDupLsh recovers the exact pairs on a planted near-dup corpus") {
     // the LSH-blocked variant is sound at real near-dup thresholds (≳0.8):

@@ -1,19 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SaltedJoin
 import graft.functions.GraftExtensions
 
-class OperatorsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OperatorsSpec extends AnyFunSuite with LocalSpark {
 
   test("driver smoke contract: entry returns rows; every query has a runner") {
     assert(SparkEntry.entry(spark).count() > 0)

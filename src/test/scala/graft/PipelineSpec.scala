@@ -3,21 +3,14 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.hl7.Pipeline
 import graft.streaming.StreamingPipeline
 
 /** Pipeline E2E vs goldens (SURVEY.md §5.2.2, Q21): replaces the reference's
   * eyeballed prints (`test_services.py:82-83`) with asserted counts. */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with LocalSpark {
 
   test("corpus replay: 11 unique messages, all parse to staging zone") {
     val zones = Pipeline.q21Zones(spark, "").collect()

@@ -8,16 +8,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * 100 TB, asserted so a refactor can't silently regress them (builder
   * brief: ".explain the plan and iterate until it's the plan you'd want").
   */
-class PlanQualitySpec extends AnyFunSuite {
+class PlanQualitySpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def plan(name: String): String =
     planOf(SparkEntry.queries(name)(spark, sf))
@@ -617,27 +610,6 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(stale.isEmpty, s"stale whitelist entries (prune them): ${stale.mkString(", ")}")
   }
 
-  /** Registry/floor-table consistency: the starvation protocol's FLOOR
-    * signal only protects queries with a floor row, and a row for an
-    * unregistered name is dead weight that hides a rename. Regenerate with
-    * tools/update_floors.py after registering a query (it appends the new
-    * query's first clean BENCH_local.json wall as its initial floor). */
-  test("every registered query has a bench floor row, and every floor row is registered") {
-    val in = getClass.getResourceAsStream("/graft/bench_floors.txt")
-    assert(in != null, "bench_floors.txt resource missing")
-    val floors = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-      .map(_.split(" ")(0)).toSet
-    finally in.close()
-    val registered = SparkEntry.registry.map(_.name).toSet
-    val missing = registered.diff(floors)
-    val orphaned = floors.diff(registered)
-    assert(missing.isEmpty,
-      s"registered queries without a bench floor (run tools/update_floors.py): ${missing.toSeq.sorted.mkString(", ")}")
-    assert(orphaned.isEmpty,
-      s"floor rows for unregistered queries (stale rename?): ${orphaned.toSeq.sorted.mkString(", ")}")
-  }
-
   test("whole-stage codegen covers the scan-to-aggregate pipeline of q02") {
     // AQE finalizes the plan lazily — execute, then inspect the final plan
     val df = SparkEntry.queries("q02_agg_pricing")(spark, sf)
@@ -745,7 +717,7 @@ class PlanQualitySpec extends AnyFunSuite {
       "q227_bloom_semijoin" -> "big-side LeftSemi — strategy parity with q227b keeps the bloom-vs-plain pair measurement clean",
       "q227b_plain_semijoin" -> "the measured pair's plain member: big-side LeftSemi sort-merge, the honest baseline")
     // own session at 32 shuffle partitions: PLANS_SWEEP.md is generated by
-    // PlanStats under Sessions.local (32), and a mismatched partition count
+    // PlanStats at 32 shuffle partitions, and a mismatched partition count
     // changes how EnsureRequirements aligns with the 32-bucket tables
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "32")

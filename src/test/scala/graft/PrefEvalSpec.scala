@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Properties for the round-10 preference/eval/privacy tier
   * (queries/Relational12.scala), beyond the driver's oracle gate:
@@ -12,16 +11,9 @@ import org.apache.spark.sql.SparkSession
   * oracle proves the numbers match DuckDB; these prove the numbers mean
   * what the operators claim.
   */
-class PrefEvalSpec extends AnyFunSuite {
+class PrefEvalSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.01"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

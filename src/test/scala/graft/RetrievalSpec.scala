@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.llm.Retrieval
 import graft.core.Tables
 
@@ -9,16 +8,9 @@ import graft.core.Tables
   * (q86-q90). The DuckDB oracle already hash-checks them end-to-end; these
   * specs pin the SEMANTICS against independent driver-side recomputation so
   * an oracle-side and Spark-side bug can't cancel out. */
-class RetrievalSpec extends AnyFunSuite {
+class RetrievalSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Same tokenizer contract as Retrieval.toks / the DuckDB oracle:
     * split on single spaces, keep interior empties out via filter. */

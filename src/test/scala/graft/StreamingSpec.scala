@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -10,14 +9,7 @@ import graft.hl7.Pipeline
 
 /** Streaming semantics (SURVEY.md §5.2.5): MemoryStream-driven checks of
   * stateful dedup, watermarks/late data, and foreachBatch idempotence. */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with LocalSpark {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -453,7 +445,6 @@ class StreamingSpec extends AnyFunSuite {
     // >= 2 real micro-batches.
     val src = "/root/testdata/sf0.001"
     val tmp = java.nio.file.Files.createTempDirectory("graft-dirlayout").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Seq("events", "documents").foreach { t =>
       spark.read.parquet(s"$src/$t.parquet").repartition(3)
         .write.mode("overwrite").parquet(s"$tmp/$t.parquet")
@@ -511,7 +502,6 @@ class StreamingSpec extends AnyFunSuite {
     // the complete-mode count state).
     val src = "/root/testdata/sf0.001"
     val tmp = java.nio.file.Files.createTempDirectory("graft-q09c").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$src/events.parquet").repartition(3)
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val batch = graft.SparkEntry.queries("q09b_range_join_bucketed")(spark, src)
@@ -529,7 +519,6 @@ class StreamingSpec extends AnyFunSuite {
     // the 1-hour production delay — see its doc)
     val src = "/root/testdata/sf0.001"
     val tmp = java.nio.file.Files.createTempDirectory("graft-q176").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$src/events.parquet").repartition(3)
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     def asSet(df: org.apache.spark.sql.DataFrame) =

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llm.Tokenizer
 
@@ -9,14 +8,7 @@ import graft.llm.Tokenizer
   * plain-Scala reference implementation exactly (same merges, same order,
   * same weights), independent of partition layout, with standard greedy
   * leftmost merge application. */
-class TokenizerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TokenizerSpec extends AnyFunSuite with LocalSpark {
 
   /** Reference BPE over a word-frequency map: exact integer pair counts,
     * argmax with (count DESC, left ASC, right ASC) tie-break, greedy

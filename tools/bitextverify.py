@@ -17,8 +17,8 @@ DuckDB over the planted corpus and compares BOTH dumped queries against it:
   column is excluded: it is shortlist-local BY CONTRACT (the runner-up is
   taken within the retrieved candidates, exactly how production mining
   margins over its FAISS shortlist — see bitextMineLsh's scaladoc), so it
-  legitimately differs from the full-block runner-up. (The B/L sweep in
-  graft.BitextStudy measures the recall/speed frontier separately.)
+  legitimately differs from the full-block runner-up. (The recall/speed
+  frontier over B/L is recorded in BASELINE.md.)
 """
 import sys, os, glob, json
 

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Direct-java launcher for the graft mains (Bench/Verify/GenData/LshStudy…)
+# Direct-java launcher for the graft mains (Bench/Verify/GenData/Explain…)
 # — same JVM flags as build.sbt's forked run, but no sbt lock, so scale-data
 # generation and a test run can proceed in parallel. Usage:
 #   tools/runmain.sh graft.GenData /root/testdata/sf0.1 testdata/sf1 10
