@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
+import graft.sources.Er7Source
 
 /** Spark-native re-expression of the reference's full data plane:
   *
@@ -38,9 +39,7 @@ object Pipeline {
     spark.read.option("wholetext", "true").option("pathGlobFilter", "*.txt")
       .textFile(dir).toDF("file_text")
       .withColumn("source", regexp_extract(input_file_name(), "([^/]+)\\.txt", 1))
-      .withColumn("msg", explode(split(col("file_text"), "(\\r?\\n)\\s*(\\r?\\n)+")))
-      .withColumn("msg", regexp_replace(col("msg"), "\\s+$", ""))
-      .filter(length(col("msg")) > 0)
+      .transform(Er7Source.explodeMessages(_, "file_text"))
       .select("msg", "source")
 
   /** A2-A6 — front-door semantics: deterministic id (sha-256 of the payload,
@@ -160,6 +159,13 @@ object Pipeline {
     val (ingested, staged) =
       if (dir == MessagesDir) corpusCached(spark)
       else { val i = ingest(readMessages(spark, dir)); (i, stage(i)) }
+    events(ingested, staged)
+  }
+
+  /** The lake's two event populations in one frame: the ingestion-zone
+    * envelope row of every `ingested` message and the `staged` (staged or
+    * error) branch rows, one row per (message, zone). */
+  def events(ingested: DataFrame, staged: DataFrame): DataFrame = {
     val ingestedEvents = ingested.select(
       col("msg"), col("source"), col("message_id"), col("protocol"),
       col("event"), col("format"),

@@ -606,7 +606,7 @@ object TextAnalysis {
     * score (the q86 tie lesson) + lang tiebreak. */
   private val NbScoreDocs = 50
 
-  /** Shared NB train+score builder for q192/q212 (r13, VERDICT-r12 #6).
+  /** Shared NB train+score builder for q192/q212.
     *
     * The demanded shuffle-chain audit, with its measured dead end: the
     * corpus was tokenized (scan + lower + split + explode) three times —
@@ -624,12 +624,12 @@ object TextAnalysis {
     *    so its corpus explode disappears and its subtree reuses cwl's
     *    exchange: 3 corpus tokenize passes → 2 (model + scoring, which
     *    genuinely need different keys).
-    *  - q212 persists its |docs|-row pred frame (three per-class
-    *    aggregates each replayed the corpus-scale score+argmax pipeline)
-    *    and broadcasts the |langs|-row metric joins (the dump's only
-    *    SMJs). */
+    *  - q212 leaves its |docs|-row pred frame lazy, relying on
+    *    exchange/stage reuse across its three per-class aggregates (see
+    *    [[nbEval]]), and broadcasts the |langs|-row metric joins (the
+    *    dump's only SMJs). */
   private[graft] def nbScoredPlan(s: SparkSession, d: String, scoreSliceOnly: Boolean)
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
+      : (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d)
     val tok = docs
       .select(col("doc_id"), col("lang"), explode(split(lower(col("text")), " ")).as("w"))
@@ -651,12 +651,12 @@ object TextAnalysis {
       .agg((sum(col("tf") * (log(coalesce(col("c"), lit(0L)) + 1)
             - log(col("tl") + col("v"))))
           + first("logprior")).as("score"))
-    (scored, docs, Nil)
+    (scored, docs)
   }
 
   def naiveBayes(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (scored, docs, _) = nbScoredPlan(s, d, scoreSliceOnly = true)
+    val (scored, docs) = nbScoredPlan(s, d, scoreSliceOnly = true)
     val wn = Window.partitionBy("doc_id")
       .orderBy(round(col("score"), 4).desc, col("lang"))
     scored.withColumn("rn", row_number().over(wn)).filter(col("rn") === 1)
@@ -905,7 +905,7 @@ object TextAnalysis {
     * every scale the reused exchange already covers. */
   def nbEval(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (scored, docs, _) = nbScoredPlan(s, d, scoreSliceOnly = false)
+    val (scored, docs) = nbScoredPlan(s, d, scoreSliceOnly = false)
     val wn = Window.partitionBy("doc_id")
       .orderBy(round(col("score"), 4).desc, col("lang"))
     val pred = scored.withColumn("rn", row_number().over(wn))

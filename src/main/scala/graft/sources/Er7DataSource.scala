@@ -3,10 +3,12 @@ package graft.sources
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.functions.{col, explode, length, regexp_replace, split}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -49,12 +51,24 @@ object Er7Source {
     StructField("msg", StringType, nullable = false),
     StructField("n_bytes", LongType, nullable = false)))
 
-  /** The canonical file→messages split (same semantics as the batch/stream
-    * readers): blank-line separated, trailing whitespace stripped. */
+  /** The canonical file→messages split, shared by this source,
+    * `Pipeline.readMessages` and the streaming inbox: messages are
+    * separated by a blank line (whitespace between two line breaks) and
+    * lose their trailing whitespace; empty messages are dropped. */
+  val MessageSeparator = "(\\r?\\n)\\s*(\\r?\\n)+"
+  val TrailingWhitespace = "\\s+$"
+
   def splitMessages(fileText: String): Seq[String] =
-    fileText.split("(\\r?\\n)\\s*(\\r?\\n)+").toSeq
-      .map(_.replaceAll("\\s+$", ""))
+    fileText.split(MessageSeparator).toSeq
+      .map(_.replaceAll(TrailingWhitespace, ""))
       .filter(_.nonEmpty)
+
+  /** [[splitMessages]] over the file-text column `text`: one row per
+    * message, in column `msg`. */
+  def explodeMessages(files: DataFrame, text: String): DataFrame =
+    files.withColumn("msg", explode(split(col(text), MessageSeparator)))
+      .withColumn("msg", regexp_replace(col("msg"), TrailingWhitespace, ""))
+      .filter(length(col("msg")) > 0)
 
   def listFiles(dir: String): Seq[String] = {
     val d = new java.io.File(dir)

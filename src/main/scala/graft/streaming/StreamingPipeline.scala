@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 import graft.hl7.Pipeline
+import graft.sources.Er7Source
 
 /** Streaming variants of the pipeline (SURVEY.md §2B streaming surface).
   *
@@ -18,74 +19,93 @@ import graft.hl7.Pipeline
   */
 object StreamingPipeline {
 
-  /** Scale-adaptive state partitioning for the streaming drains (r12,
-    * guide §2.2/§2.5: size partitions to DATA, not to core count — and AQE,
-    * which would do this for batch, is disabled inside stateful streaming).
+  /** Run `body` (stream start → awaitTermination) with the shuffle/state
+    * partition count sized to the bytes under `sourcePath`, and restore the
+    * session value afterwards so post-drain batch folds are unaffected.
     *
     * `spark.sql.shuffle.partitions` fixes the state-store partition count
-    * at a streaming query's first batch, and every micro-batch then pays
-    * (load + commit + snapshot bookkeeping) × partitions × state stores —
-    * a stream-stream join carries FOUR stores per partition. With the
-    * session default tied to the core count (32 locally), a 5-trigger
-    * drain over a few MB of input was paying ~640 store commits of pure
-    * fixed cost: measured on the q229 family at sf0.1, 32 state
-    * partitions = 99.6 s vs 8 = 33.7 s for identical results. So state
-    * partitions are derived from the source's byte size (~4 MB of input
-    * per partition: sf0.1 → 1, sf1 → 6, sf10 → 51, growing linearly with
-    * data — the first cut used 16 MB, which kept the sf0.1/sf1 wins but
-    * starved the complete-mode re-emission drains at sf10: q51b's
-    * session-merge state on 13 partitions ran 110 s vs 16.1 s at r11's 32;
-    * at 4 MB the sf10 count lands above the old core-count default while
-    * sf0.1 keeps the 32×-too-fine fix), capped at max(2×cores, 256) so a
-    * cluster-sized corpus still spreads over the cluster, floored at 1.
-    * Override:
-    * `spark.graft.streaming.statePartitions`. Partition count never
-    * changes results (state is hash-partitioned by key) — every streaming
-    * twin stays under its batch oracle, and the driver already varies the
-    * count across its 4-vs-32-CPU runs. */
-  private def sourceBytes(s: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-  }
-
-  private def statePartitions(s: SparkSession, inputBytes: Long, minParts: Int): Int =
-    s.conf.getOption("spark.graft.streaming.statePartitions")
-      .map { v =>
-        // validate the override (ADVICE r12): a typo'd value must fail
-        // naming the conf key, never throw a bare NumberFormatException
-        // mid-drain or silently set 0 shuffle partitions
-        v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-          s"spark.graft.streaming.statePartitions must be a positive int, got '$v'"))
-      }
-      .getOrElse {
-        val cap = math.max(2L * s.sparkContext.defaultParallelism, 256L)
-        math.max(math.max(1L, minParts.toLong),
-          math.min(inputBytes / (4L << 20) + 1L, cap)).toInt
-      }
-
-  /** Run `body` (stream start → awaitTermination) with the shuffle/state
-    * partition count sized to `inputBytes`; always restores the session
-    * default after the drain, so post-drain batch folds are unaffected.
-    * `minParts` is the floor for drains whose PER-BATCH stage is
-    * compute-bound (q128b's candidate-confirm join evaluates an
-    * array_intersect per collision pair inside the batch): there the
-    * partition count must keep the machine busy, and the state-commit
-    * overhead the floor re-admits is the smaller term — measured at
-    * sf0.1: q128b 8.2 s at 32 partitions vs 10.6 s at the 1-partition
-    * data-derived count, while the state-bound drains (q229 family) go
-    * the other way by 3×. */
-  private def withStatePartitions[T](s: SparkSession, inputBytes: Long,
+    * at a streaming query's first batch (AQE, which sizes batch shuffles to
+    * the data, is off inside stateful streaming), and every micro-batch
+    * then pays load + commit + snapshot bookkeeping per partition per state
+    * store — a stream-stream join carries four stores per partition. At a
+    * core-count default (32 locally) a 5-trigger drain over a few MB paid
+    * ~640 store commits of fixed cost: the q229 family at sf0.1 ran 99.6 s
+    * at 32 state partitions vs 33.7 s at 8, with identical results. So the
+    * count is one partition per ~4 MB of input (sf0.1 → 1, sf1 → 6,
+    * sf10 → 51); 16 MB kept the sf0.1/sf1 wins but starved the
+    * complete-mode drains at sf10 (q51b's session-merge state on 13
+    * partitions ran 110 s vs 16.1 s at 32). The count is capped at
+    * max(2×cores, 256), so a cluster-sized corpus still spreads over the
+    * cluster, and floored at `minParts`. It never changes results: state
+    * is hash-partitioned by key.
+    *
+    * `minParts` is for drains whose per-batch stage is compute-bound
+    * (q128b's candidate-confirm join evaluates an array_intersect per
+    * collision pair inside the batch): there the partition count must keep
+    * the machine busy, and the state-commit overhead the floor re-admits is
+    * the smaller term — at sf0.1 q128b ran 8.2 s at 32 partitions vs 10.6 s
+    * at the 1-partition data-derived count, while the state-bound drains
+    * (q229 family) go the other way by 3×.
+    *
+    * This sets a session-global conf for the drain's duration, which is
+    * safe because Bench and Verify run one query at a time on one session;
+    * a concurrent driver would give each drain its own `spark.newSession()`. */
+  private def withStatePartitions[T](s: SparkSession, sourcePath: String,
                                      minParts: Int = 1)(body: => T): T = {
-    // NOTE (ADVICE r12): this mutates the session-global conf for the
-    // duration of the drain. Safe under the engine's SERIAL execution
-    // contract (Bench/Verify run queries one at a time on one session); a
-    // future concurrent driver must give streaming drains a cloned session
-    // (spark.newSession()) instead of sharing this one.
+    val p = new org.apache.hadoop.fs.Path(sourcePath)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val bytes = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    val cap = math.max(2L * s.sparkContext.defaultParallelism, 256L)
+    val parts = math.max(minParts.toLong, math.min(bytes / (4L << 20) + 1L, cap))
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, statePartitions(s, inputBytes, minParts).toString)
+    s.conf.set(key, parts.toString)
     try body finally s.conf.set(key, prev)
+  }
+
+  /** Drain complete-mode aggregates through driver-memory sinks: each frame
+    * runs as an AvailableNow query into its own UUID-named memory sink, all
+    * of them concurrently under one state-partition sizing. Each result
+    * comes back eagerly `localCheckpoint`-ed, and every sink view is
+    * dropped, so no temp view outlives the call. A memory sink keeps every
+    * re-emitted row on the driver, so each call site states, in the lines
+    * before it, why its rows are bounded by something data-size-independent
+    * or that it is the registered anti-baseline (StreamingSpec lints this). */
+  private def drainToMemory(s: SparkSession, sourcePath: String,
+                            frames: DataFrame*): Seq[DataFrame] = {
+    val sinks = frames.map(_ => s"graft_mem_${java.util.UUID.randomUUID().toString.take(8)}")
+    try {
+      withStatePartitions(s, sourcePath) {
+        frames.zip(sinks).map { case (df, sink) =>
+          df.writeStream.format("memory").queryName(sink)
+            .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
+        }.foreach(_.awaitTermination())
+      }
+      sinks.map(sink => s.table(sink).localCheckpoint(true))
+    } finally sinks.foreach(s.catalog.dropTempView)
+  }
+
+  /** Drain a streaming frame through a `foreachBatch` parquet ledger on the
+    * executors and return the ledger read back: the drain for outputs that
+    * scale with the data, which must never pass through driver memory. In
+    * Complete mode every trigger re-emits the full result, so each batch
+    * overwrites the ledger and the last trigger leaves the final state; in
+    * Append and Update mode each batch appends its rows. */
+  private def drainToLedger(s: SparkSession, df: DataFrame, mode: OutputMode,
+                            sourcePath: String, minParts: Int = 1): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ledger_").toString
+    val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
+    withStatePartitions(s, sourcePath, minParts) {
+      df.writeStream
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .outputMode(mode)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode(writeMode).parquet(s"$tmp/ledger")
+          ()
+        }
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    s.read.parquet(s"$tmp/ledger")
   }
 
   /** A20 — storage-event source: new files in the inbox dir trigger
@@ -97,10 +117,7 @@ object StreamingPipeline {
       .option("wholetext", "true")
       .option("pathGlobFilter", "*.txt") // glob as option, not in-path (see Pipeline.readMessages)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.text(inboxDir)
-      .withColumn("msg", explode(split(col("value"), "(\\r?\\n)\\s*(\\r?\\n)+")))
-      .withColumn("msg", regexp_replace(col("msg"), "\\s+$", ""))
-      .filter(length(col("msg")) > 0)
+    Er7Source.explodeMessages(reader.text(inboxDir), "value")
       .withColumn("source", lit("inbox"))
       .select("msg", "source")
   }
@@ -168,14 +185,8 @@ object StreamingPipeline {
     val tmp = java.nio.file.Files.createTempDirectory("graft_q21b_").toString
     val ingested = ingestStream(
       messagesStream(s, Pipeline.MessagesDir, maxFilesPerTrigger = Some(2)))
-    val ingestedEvents = ingested.select(
-      col("msg"), col("source"), col("message_id"), col("protocol"),
-      col("event"), col("format"),
-      lit(null: String).as("version"), lit(null: String).as("message_type"),
-      lit(null: String).as("error"))
-    val staged = Pipeline.stage(ingested).drop("segments")
-    val events = Pipeline.withZone(ingestedEvents.unionByName(staged))
-    withStatePartitions(s, sourceBytes(s, Pipeline.MessagesDir)) {
+    val events = Pipeline.events(ingested, Pipeline.stage(ingested)).drop("segments")
+    withStatePartitions(s, Pipeline.MessagesDir) {
       val q = lakeSink(events, s"$tmp/lake", s"$tmp/ckpt").start()
       q.awaitTermination()
     }
@@ -375,15 +386,6 @@ object StreamingPipeline {
       .select(col("user_id"), col("n_events"),
               col("session_window.start").as("session_start"))
 
-  /** Streaming scan of the events table with the SAME ts normalization
-    * contract as `Tables.events`: the generator has produced both
-    * TIMESTAMP(NANOS) (legacy flag reads it as long ns — floor-div to µs)
-    * and TIMESTAMP(MICROS) (reads as TIMESTAMP_NTZ — cast, wall-clock
-    * no-op under the UTC session). The batch loader sniffs the dtype; a
-    * streaming twin that assumed one encoding broke the moment the
-    * generator switched (the r04 driver-artifact gap for q20b/q51b). One
-    * driver-side footer probe supplies the schema — the file source never
-    * re-infers. */
   /** Streaming file-source scan of one sf table, layout-agnostic. The
     * driver's testdata ships each table as a SINGLE parquet file
     * (`$d/events.parquet` is a file), while Spark-written corpora
@@ -392,9 +394,9 @@ object StreamingPipeline {
     * the table path itself; single-file table → stream the sf dir with a
     * leaf-name glob. The glob CANNOT cover both cases — `pathGlobFilter`
     * matches leaf FILE names only, so against a directory-layout corpus
-    * it matches nothing and the stream silently drains 0 rows (caught by
-    * the round-7 sf1 oracle run: all three streaming twins empty at 10×
-    * while every batch query passed). */
+    * it matches nothing and the stream silently drains 0 rows (an sf1
+    * oracle run once found every streaming twin empty at 10× while every
+    * batch query passed). */
   private def tableStream(s: SparkSession, d: String, table: String)
                          (schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val path = s"$d/$table.parquet"
@@ -417,6 +419,14 @@ object StreamingPipeline {
     else src.option("pathGlobFilter", s"$table.parquet").parquet(d)
   }
 
+  /** Streaming scan of the events table with the SAME ts normalization
+    * contract as `Tables.events`: the generator has produced both
+    * TIMESTAMP(NANOS) (legacy flag reads it as long ns — floor-div to µs)
+    * and TIMESTAMP(MICROS) (reads as TIMESTAMP_NTZ — cast, wall-clock
+    * no-op under the UTC session). The batch loader sniffs the dtype, so a
+    * streaming twin that assumed one encoding would break the moment the
+    * generator switched. One driver-side footer probe supplies the schema —
+    * the file source never re-infers. */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampType}
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -446,47 +456,30 @@ object StreamingPipeline {
       .select(col("window.start").as("bucket_start"), col("n"), col("sum_value"))
     // memory sink is BOUNDED here: rows ≤ (#hour buckets = corpus
     // time-span/1h, data-size-independent) × (≤5 triggers, tableStream's
-    // ceil(n/4) slicing) — not a VERDICT-r10 #1 drain.
-    val sink = s"q20b_mem_${java.util.UUID.randomUUID().toString.take(8)}"
-    withStatePartitions(s, sourceBytes(s, s"$d/events.parquet")) {
-      val q = buckets.writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table(sink)
+    // ceil(n/4) slicing).
+    drainToMemory(s, s"$d/events.parquet", buckets).head
   }
 
   /** q09c — streaming twin of q09b, completing the time-band family's
     * scale story: the quadratic-output anti-baseline (q09) has a bounded
-    * batch form (q09b, 1.5 s vs 1003 s at sf10) and now a bounded
-    * STREAMING form — the shape a continuous ingest pipeline actually
-    * runs for co-occurrence volume. The stream holds only the
-    * per-(hour, event_type) count state (time-span × |types| rows —
-    * data-size-independent, the q20b boundedness argument; complete mode,
-    * no watermark needed for an AvailableNow replay); the strictly-later-
-    * bucket pair product is a static fold over the drained count frame
-    * (thousands of rows), never a stream-stream join carrying events².
-    * Registered under q09b's DuckDB oracle — the streaming engine's
-    * source slicing, state store, and sink commit sit under the same
-    * hash gate as the batch twin. */
+    * batch form (q09b, 1.5 s vs 1003 s at sf10) and a bounded STREAMING
+    * form — the shape a continuous ingest pipeline actually runs for
+    * co-occurrence volume. The stream holds only the per-(hour, event_type)
+    * count state (time-span × |types| rows — data-size-independent, the
+    * q20b boundedness argument; complete mode, no watermark needed for an
+    * AvailableNow replay); the strictly-later-bucket pair product is a
+    * static fold over the drained count frame (thousands of rows), never a
+    * stream-stream join carrying events². Registered under q09b's DuckDB
+    * oracle — the streaming engine's source slicing, state store, and sink
+    * commit sit under the same hash gate as the batch twin. */
   def q09StreamRangeVolume(s: SparkSession, d: String): DataFrame = {
     val cnt = eventsStream(s, d)
       .select(floor(unix_timestamp(col("ts")) / 3600).as("h"), col("event_type"))
       .groupBy("h", "event_type").agg(count(lit(1)).as("n"))
     // memory sink is BOUNDED here: rows ≤ hour-buckets × |event types| ×
     // (≤5 triggers, tableStream's ceil(n/4) slicing) — time-span-scaled,
-    // not data-scaled (the q20b argument; not a VERDICT-r10 #1 drain).
-    val sink = s"q09c_mem_${java.util.UUID.randomUUID().toString.take(8)}"
-    withStatePartitions(s, sourceBytes(s, s"$d/events.parquet")) {
-      val q = cnt.writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // materialize the (small, bounded) drained count frame eagerly, then
-    // DROP the UUID-named sink view: repeated invocations in one session
-    // must not accumulate leaked temp views (ADVICE r11)
-    val c = s.table(sink).localCheckpoint(true)
-    s.catalog.dropTempView(sink)
+    // not data-scaled (the q20b argument).
+    val c = drainToMemory(s, s"$d/events.parquet", cnt).head
     val a = c.select(col("h"), col("event_type").as("type_a"), col("n").as("na"))
     val b = c.select((col("h") - 1).as("h"), col("event_type").as("type_b"),
       col("n").as("nb"))
@@ -511,28 +504,16 @@ object StreamingPipeline {
     val schema = s.read.parquet(s"$d/documents.parquet").schema
     def src = tableStream(s, d, "documents")(schema)
       .withColumn("h", sha2(col("text"), 256))
-    val runId = java.util.UUID.randomUUID().toString.take(8)
     val totals = src.groupBy("source").agg(count(lit(1)).as("n_docs"))
     val uniques = src.dropDuplicates("source", "h")
       .groupBy("source").agg(count(lit(1)).as("n_unique"))
     // memory sinks are BOUNDED here: rows ≤ |distinct sources| (a small
-    // enum, not corpus-scaled) × ≤5 triggers — not a VERDICT-r10 #1 drain.
-    withStatePartitions(s, sourceBytes(s, s"$d/documents.parquet")) {
-      val started = Seq("tot" -> totals, "uniq" -> uniques).map { case (tag, df) =>
-        df.writeStream.format("memory").queryName(s"q35b_${tag}_$runId")
-          .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
-      }
-      started.foreach(_.awaitTermination())
-    }
-    // materialize the (source-cardinality, bounded) join eagerly and DROP
-    // both UUID-named sink views — repeated invocations must not keep sink
-    // rows alive in driver memory via leaked temp views (ADVICE r12; the
-    // same materialize-then-drop rule q09c/q65b/q175b already follow).
-    val Seq(tot, uniq) = Seq("tot", "uniq").map(tag => s.table(s"q35b_${tag}_$runId"))
-    val out = tot.join(uniq, "source").select("source", "n_docs", "n_unique")
+    // enum, not corpus-scaled) × ≤5 triggers.
+    val Seq(tot, uniq) = drainToMemory(s, s"$d/documents.parquet", totals, uniques)
+    // the source-cardinality join is materialized too, so the result is a
+    // scan like every other memory drain's
+    tot.join(uniq, "source").select("source", "n_docs", "n_unique")
       .localCheckpoint(true)
-    Seq("tot", "uniq").foreach(tag => s.catalog.dropTempView(s"q35b_${tag}_$runId"))
-    out
   }
 
   /** Session-window core shared by q51b and its boundary spec: the input
@@ -558,7 +539,7 @@ object StreamingPipeline {
   /** q51b — the q51 batch sessionization run THROUGH Structured Streaming
     * on the same events table, under the SAME DuckDB oracle. AvailableNow
     * micro-batches → `session_window` merge-on-overlap state → complete-mode
-    * memory sink. The only post-drain static step is the oracle's 1-based
+    * drain. The only post-drain static step is the oracle's 1-based
     * per-user session numbering, which no streaming operator can emit until
     * every session is closed (it's a per-user rank over finished sessions —
     * assigned here with one narrow window over the tiny session table).
@@ -572,27 +553,13 @@ object StreamingPipeline {
                 // floor-to-second off the normalized µs timestamp — same
                 // truncation as batch q51's unix_timestamp
                 timestamp_seconds(unix_timestamp(col("ts"))).as("ts_sec")))
-    // session rows scale with users — complete mode re-emits the full
-    // session table each trigger, so the drain OVERWRITES a parquet
-    // ledger per trigger (executor-side; last trigger = final state)
-    // instead of accumulating user-scaled rows in driver memory
-    // (VERDICT-r10 #1 class). The per-trigger full rewrite is complete
-    // mode's honest re-emission cost, paid to the lake, not the driver.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q51b_").toString
-    withStatePartitions(s, sourceBytes(s, s"$d/events.parquet")) {
-      val q = sessions.writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Complete())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(s"$tmp/ledger")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // session rows scale with users, so they drain to the parquet ledger,
+    // which complete mode rewrites every trigger: the per-trigger full
+    // rewrite is complete mode's re-emission cost, paid to the lake, not
+    // the driver
     val byUser = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("session_start")
-    s.read.parquet(s"$tmp/ledger")
+    drainToLedger(s, sessions, OutputMode.Complete(), s"$d/events.parquet")
       .withColumn("session_id", row_number().over(byUser).cast("long"))
       .select(col("user_id"), col("session_id"), col("n_events"),
               col("session_start"), col("session_end"))
@@ -622,10 +589,10 @@ object StreamingPipeline {
     val existingPred = pmod(col("doc_id"), lit(10)) < 8
     val shAll = Dedup.shingledN(graft.core.Tables.documents(s, d), 3)
     // the "stored index": materialized once, not replayed per micro-batch.
-    // r13 (VERDICT-r12 #3): each band row now carries the existing doc's
-    // shingle-set SIZE so a length prefilter can kill impossible pairs
-    // BEFORE the stateful dedup and the array_intersect confirm (below) —
-    // a one-time doc-keyed join at index-build time, 8 bytes per band row.
+    // Each band row carries the existing doc's shingle-set SIZE so the
+    // length prefilter below can kill impossible pairs BEFORE the stateful
+    // dedup and the array_intersect confirm — a one-time doc-keyed join at
+    // index-build time, 8 bytes per band row.
     val exBands = Dedup.bandsOf(shAll.filter(existingPred))
       .select(col("doc_id").as("ex_id"), col("band"), col("bv"))
       .join(shAll.filter(existingPred)
@@ -658,15 +625,15 @@ object StreamingPipeline {
         posexplode(Dedup.bandKeysExpr).as(Seq("band", "bv")))
     val confirmed = withBands
       .join(exBands, Seq("band", "bv"))
-      // Length prefilter (r13, VERDICT-r12 #3 — the PPJoin size bound):
-      // jaccard ≤ min/max for any pair, and the output keeps pairs with
-      // round(j, 4) ≥ 0.5, i.e. raw j ≥ 0.49995 = 9999/20000. So any pair
-      // with 20000·min < 9999·max can NEVER confirm — drop it here, before
-      // it costs a state-store entry and an array_intersect. Exact-safe:
-      // the bound is evaluated in integer arithmetic (sizes ≤ 2^31, no
-      // overflow at bigint), the boundary is kept inclusive, and the raw
-      // double j of a dropped pair sits ≥1e-12 below the 0.49995 rounding
-      // boundary (one correctly-rounded division, error ~1e-16).
+      // Length prefilter (the PPJoin size bound): jaccard ≤ min/max for any
+      // pair, and the output keeps pairs with round(j, 4) ≥ 0.5, i.e. raw
+      // j ≥ 0.49995 = 9999/20000. So any pair with 20000·min < 9999·max
+      // can NEVER confirm — drop it here, before it costs a state-store
+      // entry and an array_intersect. Exact-safe: the bound is evaluated in
+      // integer arithmetic (sizes ≤ 2^31, no overflow at bigint), the
+      // boundary is kept inclusive, and the raw double j of a dropped pair
+      // sits ≥1e-12 below the 0.49995 rounding boundary (one
+      // correctly-rounded division, error ~1e-16).
       .filter(lit(20000L) * least(size(col("sh_i")), col("ex_sz"))
         >= lit(9999L) * greatest(size(col("sh_i")), col("ex_sz")))
       .drop("ex_sz")
@@ -680,26 +647,13 @@ object StreamingPipeline {
       .filter(col("jaccard") >= 0.5)
       .select("inc_id", "ex_id", "jaccard")
     // Output = CONFIRMED near-dup pairs of the incoming slice — the job's
-    // actual product, which scales with the corpus dup RATE: drained to a
-    // parquet ledger on executors (the q176/q21b lakeSink idiom), never
-    // through driver memory. Append mode emits each confirmed pair exactly
-    // once, so ledger = stream output with no post-fold needed — this IS
-    // what the production ingest does (round-12 directive closing the
-    // last output-scaled memory drain).
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q128b_").toString
-    withStatePartitions(s, sourceBytes(s, s"$d/documents.parquet"),
-        minParts = s.sparkContext.defaultParallelism) {
-      val q = confirmed.writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(s"$tmp/ledger")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/ledger")
+    // actual product, which scales with the corpus dup RATE: drained to the
+    // parquet ledger on executors, never through driver memory. Append
+    // mode emits each confirmed pair exactly once, so ledger = stream
+    // output with no post-fold needed — this IS what the production ingest
+    // does.
+    drainToLedger(s, confirmed, OutputMode.Append(), s"$d/documents.parquet",
+      minParts = s.sparkContext.defaultParallelism)
   }
 
   /** Streaming twin of q175: the sliding-window aggregate run through the
@@ -713,18 +667,7 @@ object StreamingPipeline {
       .select(col("window.start").as("bucket_start"), col("n"), col("sum_value"))
     // memory sink is BOUNDED: rows ≤ 3× hour-bucket count (20-min slide)
     // × ≤5 triggers — time-span-scaled, not data-scaled (q20b argument).
-    val sink = s"q175b_mem_${java.util.UUID.randomUUID().toString.take(8)}"
-    withStatePartitions(s, sourceBytes(s, s"$d/events.parquet")) {
-      val q = buckets.writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // eager localCheckpoint (as in q176) so the result survives
-    // independently of the memory-sink table's lifetime; drop the
-    // UUID-named sink view so repeated calls never accumulate (ADVICE r11)
-    val out = s.table(sink).localCheckpoint(true)
-    s.catalog.dropTempView(sink)
-    out
+    drainToMemory(s, s"$d/events.parquet", buckets).head
   }
 
   /** Oracle-gated STREAM-STREAM inner join: clicks ⋈ purchases per user
@@ -741,38 +684,10 @@ object StreamingPipeline {
     * under arbitrary slicing is what the gate checks; production sets the
     * delay to its real out-of-orderness bound (StreamingSpec pins the
     * tight-watermark behavior separately). */
-  def q176StreamClickAttr(s: SparkSession, d: String): DataFrame = {
-    val clicks = eventsStream(s, d).filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "31 days")
-    val purchases = eventsStream(s, d).filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "31 days")
-    val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-        col("p_ts") > col("click_ts") &&
-        col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
+  def q176StreamClickAttr(s: SparkSession, d: String): DataFrame =
+    clickPurchaseRangeJoin(s, eventsStream(s, d), eventsStream(s, d), "31 days",
+        "inner", s"$d/events.parquet")
       .select("user_id", "click_id", "purchase_id")
-    // join-output-scaled rows (clicks × reachable purchases) — drained to
-    // a parquet ledger on executors, never through driver memory
-    // (VERDICT-r10 #1 class): append mode emits each joined row exactly
-    // once, so ledger = stream output with no post-fold needed.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q176_").toString
-    withStatePartitions(s, sourceBytes(s, s"$d/events.parquet")) {
-      val q = joined.writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(s"$tmp/ledger")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/ledger")
-  }
 
   private val q176Sql =
     """WITH ev AS (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events)
@@ -785,7 +700,7 @@ object StreamingPipeline {
   /** q176b — the SAME stream-stream range join under a PRODUCTION
     * watermark (2 hours, not q176's corpus-span bound), exact because the
     * source files are TIME-ORDERED: the events table is staged once into
-    * 8 contiguous time-bucket files written sequentially (ascending
+    * 6 contiguous time-bucket files written sequentially (ascending
     * modification time = ascending event time), so the file source
     * delivers batch k+1 with min(ts) ≥ batch k's max(ts). Under that
     * ordering no input row ever arrives behind the watermark and every
@@ -802,19 +717,13 @@ object StreamingPipeline {
     * corpus is deterministic per (source dir, nBuckets, source-data
     * fingerprint), so it lives under a content-addressed cache path that
     * bench/verify runs in the same JVM boot (and across processes on the
-    * same host) reuse instead of re-writing the 6 sequential buckets
-    * every call (~half of q176b's sf0.1 wall was re-staging). The
-    * fingerprint (file names/sizes/max mtime) invalidates the cache when
-    * the dataset at the path is regenerated in place (ADVICE-r09). */
-  def q176StreamClickAttrOrdered(s: SparkSession, d: String): DataFrame = {
-    // 6 contiguous buckets regardless of corpus size: trigger count stays
-    // fixed at scale (the slicing-exactness argument needs bucket ORDER,
-    // not bucket granularity)
-    val nBuckets = 6
-    val evDir = stagedOrderedEvents(s, d, nBuckets)
-    val schema = s.read.parquet(evDir).schema
-    runOrderedClickAttr(s, evDir, schema)
-  }
+    * same host) reuse instead of re-writing the sequential buckets every
+    * call (~half of q176b's sf0.1 wall was re-staging). The fingerprint
+    * (file names/sizes/max mtime) invalidates the cache when the dataset
+    * at the path is regenerated in place. */
+  def q176StreamClickAttrOrdered(s: SparkSession, d: String): DataFrame =
+    orderedFamilyJoin(s, d, "inner", sentinelFiles = 0)
+      .select("user_id", "click_id", "purchase_id")
 
   /** Stage the events table as [[q176StreamClickAttrOrdered]]'s
     * time-ordered bucket corpus, or reuse a previous staging: the output
@@ -839,11 +748,10 @@ object StreamingPipeline {
                                   sentinelFiles: Int = 0): String = {
     import java.nio.file.{Files, Paths}
     // Cache key = path + a cheap DATA fingerprint (sorted file names,
-    // sizes, max mtime of the source parquet dir). The r09 key was
-    // path-only, so regenerating the dataset in place would silently
-    // reuse a stale staged corpus across processes (ADVICE-r09); the
-    // fingerprint makes the cache content-addressed to rename-free
-    // in-place rewrites too (a rewrite changes sizes and/or mtimes).
+    // sizes, max mtime of the source parquet dir): a path-only key would
+    // silently reuse a stale staged corpus across processes after the
+    // dataset is regenerated in place, and a rewrite changes sizes and/or
+    // mtimes even when it keeps the names.
     val src = Paths.get(d, "events.parquet")
     val fp = new StringBuilder
     var maxMtime = 0L
@@ -908,7 +816,7 @@ object StreamingPipeline {
            | _: java.nio.file.AccessDeniedException => // lost the race: reuse winner
     } finally {
       // always drop the scratch tree: empty on the winning path, the full
-      // materialized corpus on the losing one (ADVICE-r09 leak)
+      // materialized corpus on the losing one
       deleteRecursively(scratch)
     }
     fin.toString
@@ -924,44 +832,55 @@ object StreamingPipeline {
     }
   }
 
-  private def runOrderedClickAttr(s: SparkSession, evDir: String,
-                                  schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    // 2 files per trigger = 4 micro-batches: still genuinely multi-batch
-    // (the spec asserts ≥2), and consecutive buckets in one batch cannot
-    // violate the ordering argument (their union is still a contiguous
-    // range ahead of everything already delivered). Per-trigger overhead
-    // of the two-source stateful join dominates the drain (~1 s/trigger),
-    // so halving the trigger count is the cheap lever.
-    def side = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(evDir)
-    val clicks = side.filter(col("event_type") === "click")
+  /** The click→purchase attribution range join of q176, q176b and the q229
+    * family: a purchase is attributed to a click of the same user when it
+    * falls in (click, click + 1 h]. Clicks come from `clickEvents` and
+    * purchases from `purchaseEvents`, two streams over the events shape;
+    * both sides carry the `delay` watermark, and because the condition
+    * bounds the purchase time on both ends, Spark expires buffered rows
+    * once the watermark passes the bound. The output is click-scaled, so
+    * it drains through the parquet ledger, never driver memory. Columns:
+    * `user_id`, `click_id`, `p_user`, `purchase_id` (a semi join has only
+    * the first two). */
+  private def clickPurchaseRangeJoin(s: SparkSession, clickEvents: DataFrame,
+                                     purchaseEvents: DataFrame, delay: String,
+                                     joinType: String, sourcePath: String): DataFrame = {
+    val clicks = clickEvents.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
-      .withWatermark("click_ts", "2 hours")
-    val purchases = side.filter(col("event_type") === "purchase")
+      .withWatermark("click_ts", delay)
+    val purchases = purchaseEvents.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "2 hours")
+      .withWatermark("p_ts", delay)
     val joined = clicks.join(purchases,
         col("user_id") === col("p_user") &&
         col("p_ts") > col("click_ts") &&
-        col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-      .select("user_id", "click_id", "purchase_id")
-    // same lake-ledger drain as q176: join-output-scaled rows never
-    // transit the driver (VERDICT-r10 #1 class)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q176b_").toString
-    withStatePartitions(s, sourceBytes(s, evDir)) {
-      val q = joined.writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(s"$tmp/ledger")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/ledger")
+        col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+        joinType)
+      .drop("click_ts", "p_ts")
+    drainToLedger(s, joined, OutputMode.Append(), sourcePath)
+  }
+
+  /** [[clickPurchaseRangeJoin]] over the time-ordered bucket corpus
+    * ([[stagedOrderedEvents]]) under the production 2-hour watermark: q176b
+    * is its inner member, the q229 family its outer and semi members.
+    * Two files per trigger make 3 data batches for the 6 buckets, plus 2
+    * sentinel batches when `sentinelFiles = 4` (the second runs AFTER the
+    * watermark has passed every real row's join bound, forcing the state
+    * store to emit all null-completed results — watermark effects are one
+    * batch late by design). Consecutive buckets in one batch cannot break
+    * the ordering argument (their union is still a contiguous range ahead
+    * of everything already delivered), and the per-trigger overhead of the
+    * two-source stateful join dominates the drain (~1 s/trigger), so fewer
+    * triggers is the cheap lever. */
+  private def orderedFamilyJoin(s: SparkSession, d: String, joinType: String,
+                                sentinelFiles: Int): DataFrame = {
+    val evDir = stagedOrderedEvents(s, d, nBuckets = 6, sentinelFiles)
+    val schema = s.read.parquet(evDir).schema
+    def side = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "2").parquet(evDir)
+    clickPurchaseRangeJoin(s, side, side, "2 hours", joinType, evDir)
   }
 
   /** q65b — streaming heavy hitters under q65's DuckDB oracle: the per-key
@@ -982,14 +901,7 @@ object StreamingPipeline {
     // DELIBERATELY driver-resident and key-cardinality-scaled: q65b IS
     // the registered honest anti-baseline whose re-emission cost q65c's
     // O(k) MisraGries drain exists to beat (measured 14.1 vs 5.3 s sf1).
-    val sink = s"q65b_mem_${java.util.UUID.randomUUID().toString.take(8)}"
-    withStatePartitions(s, sourceBytes(s, s"$d/orders.parquet")) {
-      val q = counts.writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val t = s.table(sink).localCheckpoint(true)
-    s.catalog.dropTempView(sink) // per-call view leak — ADVICE r11
+    val t = drainToMemory(s, s"$d/orders.parquet", counts).head
     t.crossJoin(broadcast(t.agg(sum("n_orders").as("total"))))
       .filter(col("n_orders") > col("total") / lit(1000.0))
       .select("o_custkey", "n_orders")
@@ -1048,88 +960,25 @@ object StreamingPipeline {
     * the keys whose count CHANGED, not the full state (the q65b
     * complete-mode re-emission cost, avoided: counts are monotone, so the
     * final count per key is simply the max over its emitted updates).
-    * The drain is a `foreachBatch` PARQUET LEDGER append (the q21b
-    * lakeSink idiom), NOT a driver-resident memory sink: the cumulative
-    * update volume is O(distinct user×type keys × triggers) —
-    * user-cardinality-scaled — so executors write each trigger's changed
-    * keys straight to the lake and the driver never holds a row
-    * (VERDICT-r10 #1: the memory-sink form OOMs the driver at 10⁹ users
-    * while the state store would have been fine). Post-drain, the
-    * max-per-key fold and q217's own pair minting
+    * The drain is the parquet ledger, NOT a driver-resident memory sink:
+    * the cumulative update volume is O(distinct user×type keys × triggers)
+    * — user-cardinality-scaled — so executors append each trigger's
+    * changed keys straight to the lake and the driver never holds a row
+    * (a memory sink would OOM the driver at 10⁹ users while the state
+    * store would have been fine). Post-drain, the max-per-key fold and
+    * q217's own pair minting
     * ([[graft.queries.Relational12.prefPairsFromCounts]]) run as one
     * distributed pass over the ledger — corpus-scale work stays inside
     * the streaming aggregate and the lake. Registered under q217's
     * exact-integer DuckDB oracle: batch/stream parity for the RLHF
     * comparison-matrix shape. */
   def q217StreamPrefPairs(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q217c_").toString
     val counts = eventsStream(s, d)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("c"))
-    withStatePartitions(s, sourceBytes(s, s"$d/events.parquet")) {
-      val q = counts.writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(s"$tmp/ledger")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val finalCounts = s.read.parquet(s"$tmp/ledger")
+    val finalCounts = drainToLedger(s, counts, OutputMode.Update(), s"$d/events.parquet")
       .groupBy("user_id", "event_type").agg(max("c").as("c"))
     graft.queries.Relational12.prefPairsFromCounts(finalCounts)
-  }
-
-  /** Shared body of the q229 outer/semi stream-stream join family: the
-    * q176b ordered-bucket corpus EXTENDED with sentinel flush buckets
-    * ([[stagedOrderedEvents]] doc), both sides under the production
-    * 2-hour watermark, joined with the q176 attribution condition and
-    * drained through the foreachBatch parquet ledger (outer output is
-    * click-scaled — never driver memory, the VERDICT-r10 #1 class).
-    * `maxFilesPerTrigger=2` keeps the drain at 5 triggers for any corpus
-    * size: 3 data batches + 2 sentinel batches (the second sentinel batch
-    * is the one that runs AFTER the watermark has passed every real row's
-    * join bound, forcing the state store to emit all null-completed
-    * results — watermark effects are one batch delayed by design). */
-  private def runOuterFamilyJoin(s: SparkSession, d: String,
-                                 joinType: String): DataFrame = {
-    val evDir = stagedOrderedEvents(s, d, nBuckets = 6, sentinelFiles = 4)
-    val schema = s.read.parquet(evDir).schema
-    def side = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(evDir)
-    val clicks = side.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "2 hours")
-    val purchases = side.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "2 hours")
-    val joined0 = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-        col("p_ts") > col("click_ts") &&
-        col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-        joinType)
-    // semi joins expose only the left side's columns
-    val joined =
-      if (joinType == "left_semi") joined0.select(col("user_id"), col("click_id"))
-      else joined0.select(col("user_id"), col("click_id"), col("p_user"),
-        col("purchase_id"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q229_").toString
-    withStatePartitions(s, sourceBytes(s, evDir)) {
-      val q = joined.writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(s"$tmp/ledger")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/ledger")
   }
 
   /** q229 — watermarked stream-stream LEFT OUTER join under a batch
@@ -1143,7 +992,7 @@ object StreamingPipeline {
     * by the 2-hour horizon (q176b's argument); the per-user fold keeps
     * the gate null-free and order-independent. */
   def q229StreamOuterAttr(s: SparkSession, d: String): DataFrame =
-    runOuterFamilyJoin(s, d, "left_outer")
+    orderedFamilyJoin(s, d, "left_outer", sentinelFiles = 4)
       .filter(col("user_id") >= 0)
       .groupBy("user_id")
       .agg(count(col("purchase_id")).as("n_attributed"),
@@ -1170,7 +1019,7 @@ object StreamingPipeline {
     * counts all three row populations so the oracle pins matched pairs
     * AND both watermark-finalized null populations in one hash. */
   def q229FullOuterAttr(s: SparkSession, d: String): DataFrame =
-    runOuterFamilyJoin(s, d, "full_outer")
+    orderedFamilyJoin(s, d, "full_outer", sentinelFiles = 4)
       .withColumn("u", coalesce(col("user_id"), col("p_user")))
       .filter(col("u") >= 0)
       .groupBy(col("u").as("user_id"))
@@ -1207,7 +1056,7 @@ object StreamingPipeline {
     * the pair blow-up the inner join (q176) carries. Same 2-hour bounded
     * state; EXISTS oracle. */
   def q229StreamSemiAttr(s: SparkSession, d: String): DataFrame =
-    runOuterFamilyJoin(s, d, "left_semi")
+    orderedFamilyJoin(s, d, "left_semi", sentinelFiles = 4)
       .filter(col("user_id") >= 0)
       .select("user_id", "click_id")
 

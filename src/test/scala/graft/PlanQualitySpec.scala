@@ -683,8 +683,9 @@ class PlanQualitySpec extends AnyFunSuite with LocalSpark {
     * a bulk plan scan ("zero SortMergeJoins, max 7 Exchanges in any plan")
     * that was contradicted by the committed dumps. This test IS that scan,
     * generated (PLANS_SWEEP.md via graft.PlanStats) and enforced: for
-    * every registered query, the live distinct-canonicalized shuffle count
-    * must not exceed the committed table (regenerate the table after a
+    * every registered query that builds, the committed table must hold a
+    * row, and the live distinct-canonicalized shuffle and SortMergeJoin
+    * counts must not exceed that row (regenerate the table after a
     * deliberate plan change — a silent regression fails here), and every
     * SortMergeJoin carrier must hold a whitelist entry arguing why SMJ is
     * the right strategy AT SCALE for that specific site. */
@@ -731,9 +732,16 @@ class PlanQualitySpec extends AnyFunSuite with LocalSpark {
         } catch { case _: Throwable => (-1, -1) } // build failures caught by blanket sweep
       (q.name, sh, smj)
     }
+    val missing = results.collect {
+      case (n, sh, _) if sh >= 0 && !committed.contains(n) =>
+        s"$n: builds but has no PLANS_SWEEP.md row (regenerate PLANS_SWEEP.md)"
+    }
+    assert(missing.isEmpty, missing.mkString("\n"))
     val overCeiling = results.collect {
-      case (n, sh, _) if sh >= 0 && committed.contains(n) && sh > committed(n)._1 =>
+      case (n, sh, _) if sh >= 0 && sh > committed(n)._1 =>
         s"$n: $sh shuffles > committed ${committed(n)._1} (regenerate PLANS_SWEEP.md if deliberate)"
+      case (n, sh, smj) if sh >= 0 && smj > committed(n)._2 =>
+        s"$n: $smj SortMergeJoin(s) > committed ${committed(n)._2} (regenerate PLANS_SWEEP.md if deliberate)"
     }
     assert(overCeiling.isEmpty, overCeiling.mkString("\n"))
     val unlisted = results.collect {

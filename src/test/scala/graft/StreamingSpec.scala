@@ -415,13 +415,7 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     val ingested = StreamingPipeline.ingestStream(
       StreamingPipeline.messagesStream(spark, Pipeline.MessagesDir,
         maxFilesPerTrigger = Some(2)))
-    val ingestedEvents = ingested.select(
-      col("msg"), col("source"), col("message_id"), col("protocol"),
-      col("event"), col("format"),
-      lit(null: String).as("version"), lit(null: String).as("message_type"),
-      lit(null: String).as("error"))
-    val staged = Pipeline.stage(ingested).drop("segments")
-    val events = Pipeline.withZone(ingestedEvents.unionByName(staged))
+    val events = Pipeline.events(ingested, Pipeline.stage(ingested)).drop("segments")
     val q = StreamingPipeline.lakeSink(events, s"$tmp/lake", s"$tmp/ckpt").start()
     q.awaitTermination()
     val dataBatches = q.recentProgress.count(_.numInputRows > 0)
@@ -469,20 +463,23 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("every memory-sink drain carries an explicit boundedness rationale") {
-    // The VERDICT-r10 drain class: a driver-resident memory sink is only
-    // acceptable when its row count is bounded by something data-size-
-    // independent (time span, |types|, sketch k, dup rate) or when the
-    // query is the documented honest anti-baseline (q65b). The rewrite of
-    // q217c/q176/q176b/q51b to foreachBatch parquet ledgers closed the
-    // unbounded members; this lint keeps the class closed — any new
-    // format("memory") site must state its bound in the preceding lines.
+    // A driver-resident memory sink is only acceptable when its row count
+    // is bounded by something data-size-independent (time span, |types|,
+    // sketch k, dup rate) or when the query is the documented honest
+    // anti-baseline (q65b); data-scaled outputs drain to a foreachBatch
+    // parquet ledger instead. This lint keeps it that way: every
+    // format("memory") site, and every drainToMemory call that reaches
+    // one, must state its bound in the preceding lines.
     val src = java.nio.file.Files.readString(java.nio.file.Paths.get(
       "src/main/scala/graft/streaming/StreamingPipeline.scala"))
     val lines = src.split("\n", -1)
     val sites = lines.zipWithIndex.collect {
-      case (l, i) if l.contains("format(\"memory\")") => i
+      case (l, i) if l.contains("format(\"memory\")") || l.contains("drainToMemory(") => i
     }
-    assert(sites.nonEmpty, "expected at least one memory-sink site")
+    assert(sites.exists(i => lines(i).contains("format(\"memory\")")),
+      "expected at least one memory-sink site")
+    assert(sites.exists(i => lines(i).contains("drainToMemory(")),
+      "expected at least one drainToMemory call site")
     sites.foreach { i =>
       val context = lines.slice(math.max(0, i - 15), i).mkString("\n").toLowerCase
       // word-boundary match: a bare contains("bounded") would also match
@@ -492,6 +489,26 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
         s"memory sink at StreamingPipeline.scala:${i + 1} has no boundedness " +
           "rationale in the preceding 15 lines — state the size bound or " +
           "convert to a foreachBatch lake ledger (the q21b idiom)")
+    }
+  }
+
+  test("memory-sink drains leave no temp view behind") {
+    // each memory sink registers a temp view named after its query; a
+    // drain that returns without dropping it leaks one view per call
+    val src = "/root/testdata/sf0.001"
+    def tempViews = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    val drains = Seq(
+      "q20b" -> (StreamingPipeline.q20StreamBucket _),
+      "q09c" -> (StreamingPipeline.q09StreamRangeVolume _),
+      "q175b" -> (StreamingPipeline.q175StreamSliding _),
+      "q35b" -> (StreamingPipeline.q35StreamDedup _),
+      "q65b" -> (StreamingPipeline.q65StreamHeavyHitters _))
+    drains.foreach { case (name, run) =>
+      assert(run(spark, src).count() > 0, s"$name drained no rows")
+      val leaked = tempViews -- before
+      assert(leaked.isEmpty, s"$name left temp views behind: ${leaked.mkString(", ")}")
     }
   }
 
