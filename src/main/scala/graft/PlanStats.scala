@@ -73,12 +73,7 @@ object PlanStats {
     sb.append("| query | shuffles | smj |\n|---|---|---|\n")
     SparkEntry.registry.sortBy(_.name).foreach { q =>
       try {
-        val (sh, smj) = Explain.lazyPlans.get(q.name) match {
-          case Some(build) =>
-            val (df, cached) = build(spark, sfDir)
-            try stats(spark, df) finally cached.foreach(_.unpersist(false))
-          case None => stats(spark, q.run(spark, sfDir))
-        }
+        val (sh, smj) = Explain.planOf(q, spark, sfDir)(stats(spark, _))
         sb.append(s"| ${q.name} | $sh | $smj |\n")
       } catch {
         case e: Throwable => sb.append(s"| ${q.name} | BUILD FAILED: ${e.getMessage} | |\n")

@@ -1,9 +1,13 @@
 package graft.hl7
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.PartitioningUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 import graft.sources.Er7Source
@@ -207,12 +211,21 @@ object Pipeline {
     * shuffle, parse). */
   def writeLake(events: DataFrame, lakeRoot: String): Unit = {
     val messages = s"$lakeRoot/messages"
-    events.write.mode("overwrite")
-      .partitionBy("zone", "protocol")
-      .parquet(messages)
-    catalogRows(events.sparkSession.read.schema(CatalogSource).parquet(messages))
-      .write.mode("overwrite").parquet(s"$lakeRoot/catalog")
+    writeMessages(events, "overwrite", messages)
+    writeCatalog(events.sparkSession.read.schema(CatalogSource).parquet(messages),
+      "overwrite", s"$lakeRoot/catalog")
   }
+
+  /** The `messages` table's partition columns, in directory order. */
+  private val PartitionColumns: Seq[String] = Seq("zone", "protocol")
+
+  /** Writes lake rows under `dir`, partitioned by [[PartitionColumns]]. */
+  private[graft] def writeMessages(rows: DataFrame, mode: String, dir: String): Unit =
+    rows.write.mode(mode).partitionBy(PartitionColumns: _*).parquet(dir)
+
+  /** Writes the [[catalogRows]] of lake rows under `dir`. */
+  private[graft] def writeCatalog(rows: DataFrame, mode: String, dir: String): Unit =
+    catalogRows(rows).write.mode(mode).parquet(dir)
 
   /** Lake maintenance — small-file compaction (the A16 sink's long-run
     * health). The streaming writer (foreachBatch) appends a handful of rows
@@ -267,10 +280,8 @@ object Pipeline {
     // silently half-included by a directory re-listing
     val df = spark.read.option("basePath", messagesDir)
       .parquet(snapshot.map(f => s"$messagesDir/${f._1}"): _*)
-    df.repartition(nFiles, col("zone"), col("protocol"),
-        pmod(xxhash64(col("message_id")), lit(nFiles)))
-      .write.mode("overwrite").partitionBy("zone", "protocol")
-      .parquet(tmp.toString)
+    writeMessages(df.repartition(nFiles, PartitionColumns.map(col) :+
+        pmod(xxhash64(col("message_id")), lit(nFiles)): _*), "overwrite", tmp.toString)
     beforeSwap()
     fs.rename(path, old)
     // carry files committed after the snapshot (racing appender) into the
@@ -299,16 +310,18 @@ object Pipeline {
   /** Committed data files under `dir`, as paths relative to it with their
     * lengths. `_SUCCESS`, `_temporary` and hidden files and directories are
     * skipped by their names below `dir`, so a lake whose own path passes
-    * through a hidden directory still lists. */
-  private def dataFiles(fs: FileSystem, dir: Path): Iterator[(String, Long)] = {
-    if (!fs.exists(dir)) return Iterator.empty
-    // listFiles returns scheme-qualified paths — qualify the root the
-    // same way or the relative-path strip silently no-ops
-    val prefix = fs.makeQualified(dir).toString + "/"
-    val it = fs.listFiles(dir, true)
-    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(st => (st.getPath.toString.stripPrefix(prefix), st.getLen))
-      .filterNot(_._1.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+    * through a hidden directory still lists. Walked with `listStatus`:
+    * `listFiles` builds a located status per file, which on the local
+    * filesystem forks a shell to read the file's permissions. */
+  private[hl7] def dataFiles(fs: FileSystem, dir: Path): Iterator[(String, Long)] = {
+    def walk(d: Path, rel: String): Iterator[(String, Long)] =
+      fs.listStatus(d).iterator
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .flatMap { st =>
+          val r = rel + st.getPath.getName
+          if (st.isDirectory) walk(st.getPath, r + "/") else Iterator.single(r -> st.getLen)
+        }
+    if (fs.exists(dir)) walk(dir, "") else Iterator.empty
   }
 
   /** Footer key under which Spark stores a parquet file's row schema; Spark's
@@ -324,11 +337,12 @@ object Pipeline {
     val root = new Path(messagesDir)
     val fs = root.getFileSystem(conf)
     dataFiles(fs, root).nextOption().flatMap { case (rel, _) =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(root, rel), conf))
-      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkRowSchemaKey))
-      finally reader.close()
-    }.map(json => nullable(DataType.fromJson(json)).asInstanceOf[StructType]
-        .add("zone", StringType).add("protocol", StringType))
+      // reads under `conf`: a reader opened without options would parse a
+      // fresh Hadoop configuration from its XML resources on every call
+      Option(ParquetFooterReader.readFooter(HadoopInputFile.fromPath(new Path(root, rel), conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData.getKeyValueMetaData.get(SparkRowSchemaKey))
+    }.map(json => PartitionColumns.foldLeft(nullable(DataType.fromJson(json)).asInstanceOf[StructType])(
+        _.add(_, StringType)))
       .getOrElse(spark.read.parquet(messagesDir).schema)
   }
 
@@ -359,33 +373,37 @@ object Pipeline {
     * both er7 (ingestion zone) and json (staging zone); the format picks
     * which materialization to fetch.
     *
-    * The catalog lookup runs when this is called (one Spark job, and
-    * PATH_NOT_FOUND for a missing lake); the returned frame reads only the
-    * hit's `zone=…/protocol=…` directory, with the id and format filters
-    * pushed into the parquet scan and the catalog's `path` and `ingest_ts`
-    * attached as literals. On a miss it is an empty frame of the same
-    * schema. Both reads use declared schemas, so neither launches a
-    * schema-inference job. */
+    * A key-value get, served on the driver with no Spark job: the catalog's
+    * files are searched for the id (and format), then the hit's
+    * `zone=…/protocol=…` directory is searched for the message, both by
+    * [[PointRead]] under declared schemas with the keys pushed into the
+    * parquet reader. The result is a local relation of the message's lake
+    * columns, keys first, then the catalog's `path` and `ingest_ts`, so
+    * `collect()` and `isEmpty` on it run no job either. A miss returns an
+    * empty frame of the same schema; a missing lake raises PATH_NOT_FOUND. */
   def retrieve(spark: SparkSession, lakeRoot: String, messageId: String,
                format: Option[String]): DataFrame = {
     val catSchema = catalogSchema(spark)
-    val matches = spark.read.schema(catSchema).parquet(s"$lakeRoot/catalog")
-      .filter(col("message_id") === messageId)
-    val hit = format.fold(matches)(f => matches.filter(col("format") === f))
-      .select("path", "format", "ingest_ts").collect()
+    val hitColumns = StructType(Seq("message_id", "format", "path", "ingest_ts").map(catSchema(_)))
+    val hit = PointRead.rows(spark, new Path(s"$lakeRoot/catalog"), hitColumns, Nil, messageId, format)
       .sortBy(r => FormatOrder.indexOf(r.getString(1)))
       .headOption
     val messagesDir = s"$lakeRoot/messages"
     val schema = messagesSchema(spark, messagesDir)
-    val lake = hit.fold(spark.createDataFrame(java.util.List.of[Row](), schema)) { h =>
-      spark.read.schema(schema).option("basePath", messagesDir)
-        .parquet(s"$messagesDir/${h.getString(0)}")
-        .filter(col("message_id") === messageId && col("format") === h.getString(1))
-    }
     val keys = Seq("message_id", "format")
-    lake.select(keys.map(col) ++ schema.fieldNames.filterNot(keys.contains).map(col) ++ Seq(
-      lit(hit.map(_.get(0)).orNull).cast(catSchema("path").dataType).as("path"),
-      lit(hit.map(_.get(2)).orNull).cast(catSchema("ingest_ts").dataType).as("ingest_ts")): _*)
+    val dataColumns = StructType((keys ++ schema.fieldNames.filterNot(keys.contains)
+      .filterNot(PartitionColumns.contains)).map(schema(_)))
+    val rows = hit.toSeq.flatMap { h =>
+      val path = h.getString(2)
+      // the partition values as Spark's partition discovery reads them
+      val partition = PartitioningUtils.parsePathFragment(path)
+      PointRead.rows(spark, new Path(s"$messagesDir/$path"), dataColumns,
+          PartitionColumns.map(c => c -> partition(c)), messageId, Some(h.getString(1)))
+        .map(r => Row.fromSeq(r.toSeq ++ Seq(path, h.get(3))))
+    }
+    val out = PartitionColumns.foldLeft(dataColumns)((t, c) => t.add(schema(c)))
+      .add(catSchema("path")).add(catSchema("ingest_ts"))
+    spark.createDataFrame(rows.asJava, out)
   }
 
   // ------------------------------------------------------------------

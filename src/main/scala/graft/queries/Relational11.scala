@@ -537,13 +537,18 @@ object Relational11 {
     * (q167's documented trade). */
   private val LpaRounds = 5
 
-  private[graft] def q182(s: SparkSession, d: String): DataFrame = {
+  /** LPA's weighted customer–supplier trading pairs (cust, supp, w). */
+  private def lpaPairs(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
     val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-    val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
       .groupBy((col("o_custkey") * 2).as("cust"),
         (col("l_suppkey") * 2 + 1).as("supp"))
       .agg(count(lit(1)).as("w"))
+  }
+
+  private[graft] def q182(s: SparkSession, d: String): DataFrame = {
+    val pairs = lpaPairs(s, d)
     val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"), col("w"))
       .union(pairs.select(col("supp").as("src"), col("cust").as("dst"), col("w")))
       .localCheckpoint(true)
@@ -676,22 +681,9 @@ object Relational11 {
     * consumes the edge side with zero exchange — at 100 TB the corpus-
     * scale frame moves exactly once (the bucket write), never per phase. */
   private[graft] def q182b(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-    val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-    val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("cust"),
-        (col("l_suppkey") * 2 + 1).as("supp"))
-      .agg(count(lit(1)).as("w"))
     val tbl = s"graft_q182b_edges_${java.util.UUID.randomUUID().toString.take(8)}"
-    // both edge directions in ONE pass over the pair aggregate (q203b)
-    graft.operators.Bucketing.writeBucketed(
-      pairs.select(explode(array(
-          struct(col("cust").as("src"), col("supp").as("dst"), col("w")),
-          struct(col("supp").as("src"), col("cust").as("dst"), col("w")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w")),
-      tbl, "src", buckets = 32, sorted = false)
     try {
-      val edges = s.table(tbl)
+      val edges = q182bEdges(s, d, tbl)
       val nodes = edges.select(col("src").as("node")).distinct()
       var labels = nodes.select(col("node"), col("node").as("lbl"))
       for (_ <- 1 to LpaRounds; side <- Seq(1, 0)) {
@@ -709,18 +701,27 @@ object Relational11 {
     } finally s.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
+  /** q182b's edge table: both directions of every trading pair in ONE pass
+    * over the pair aggregate (q203b), written as the 32-bucket table `tbl`
+    * on src. The caller drops `tbl`. */
+  private def q182bEdges(s: SparkSession, d: String, tbl: String): DataFrame = {
+    val pairs = lpaPairs(s, d)
+    graft.operators.Bucketing.writeBucketed(
+      pairs.select(explode(array(
+          struct(col("cust").as("src"), col("supp").as("dst"), col("w")),
+          struct(col("supp").as("src"), col("cust").as("dst"), col("w")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w")),
+      tbl, "src", buckets = 32, sorted = false)
+    s.table(tbl)
+  }
+
   /** One-phase LAZY plans for Explain/PlanQualitySpec (the registered
     * queries checkpoint per round, so their final explain shows only the
     * post-checkpoint tail — these expose the plan each of the 10 phases
     * actually runs; the `Dedup.minhashNearDupPlan` precedent). Label
     * frame = the initial node labels, side = 1 (the supplier half-step). */
   private[graft] def q182PhasePlan(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
-    val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-    val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-    val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("cust"),
-        (col("l_suppkey") * 2 + 1).as("supp"))
-      .agg(count(lit(1)).as("w"))
+    val pairs = lpaPairs(s, d)
     val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"), col("w"))
       .union(pairs.select(col("supp").as("src"), col("cust").as("dst"), col("w")))
     val labels = edges.select(col("src").as("node")).distinct()
@@ -728,36 +729,17 @@ object Relational11 {
     (lpaPhase(labels, edges, 1, copart = false), Nil)
   }
 
-  private[graft] def q182bPhasePlan(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
-    val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-    val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-    val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("cust"),
-        (col("l_suppkey") * 2 + 1).as("supp"))
-      .agg(count(lit(1)).as("w"))
-    // FIXED table name, overwritten per dump (never accumulates): the
-    // plan consumers (Explain / the PlanQualitySpec sweep) need the lazy
-    // phase frame alive after this returns, so the table cannot be
-    // dropped here the way q182b proper drops its UUID-named one. A NEW
-    // session's in-memory catalog forgets the table while its warehouse
-    // directory survives on disk — clear the leftover location first or
-    // saveAsTable fails with LOCATION_ALREADY_EXISTS.
-    val tbl = "graft_q182b_plan_edges"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val whDir = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir") + "/" + tbl)
-    val fs = whDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(whDir)) fs.delete(whDir, true)
-    graft.operators.Bucketing.writeBucketed(
-      pairs.select(explode(array(
-          struct(col("cust").as("src"), col("supp").as("dst"), col("w")),
-          struct(col("supp").as("src"), col("cust").as("dst"), col("w")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w")),
-      tbl, "src", buckets = 32, sorted = false)
-    val edges = s.table(tbl)
-    val labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    (lpaPhase(labels, edges, 1, copart = true), Nil)
+  /** The returned release drops the phase's edge table, so call it once
+    * the plan has been used. */
+  private[graft] def q182bPhasePlan(s: SparkSession, d: String): (DataFrame, () => Unit) = {
+    val tbl = s"graft_q182b_plan_edges_${java.util.UUID.randomUUID().toString.take(8)}"
+    val release = () => { s.sql(s"DROP TABLE IF EXISTS $tbl"); () }
+    try {
+      val edges = q182bEdges(s, d, tbl)
+      val labels = edges.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl"))
+      (lpaPhase(labels, edges, 1, copart = true), release)
+    } catch { case e: Throwable => release(); throw e }
   }
 
   // ---------------------------------------------------------------- q185

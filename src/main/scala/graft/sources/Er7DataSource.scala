@@ -3,7 +3,7 @@ package graft.sources
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -39,10 +39,16 @@ import org.apache.spark.unsafe.types.UTF8String
 class Er7DataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "er7"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = Er7Source.schema
+  /** A missing path raises PATH_NOT_FOUND when the read is planned, as
+    * Spark's file sources do, rather than planning a scan of nothing. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new Er7Table(Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException("er7 source requires a path")))
+      properties: JMap[String, String]): Table = {
+    val path = Option(properties.get("path")).getOrElse(
+      throw new IllegalArgumentException("er7 source requires a path"))
+    if (!new java.io.File(path).exists())
+      throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> path))
+    new Er7Table(path)
+  }
 }
 
 object Er7Source {

@@ -146,12 +146,10 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
-        batch.write.mode("append")
-          .partitionBy("zone", "protocol")
-          .parquet(s"$lakeRoot/messages")
+        Pipeline.writeMessages(batch, "append", s"$lakeRoot/messages")
         // an append cannot read its rows back as writeLake does, so the
         // batch is persisted for its second write
-        Pipeline.catalogRows(batch).write.mode("append").parquet(s"$lakeRoot/catalog")
+        Pipeline.writeCatalog(batch, "append", s"$lakeRoot/catalog")
         batch.unpersist()
         ()
       }

@@ -26,7 +26,10 @@ class Er7SourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("column pruning reaches the scan") {
-    val df = er7.select("source")
+    // planning needs an existing path, not the corpus's contents
+    val inbox = java.nio.file.Files.createTempDirectory("er7-prune")
+    java.nio.file.Files.writeString(inbox.resolve("adt.txt"), "MSH|^~\\&|A|B|C|D|20240101||ADT^A01|M1|P|2.5\n")
+    val df = spark.read.format("er7").load(inbox.toString).select("source")
     val scan = df.queryExecution.executedPlan.toString
     assert(scan.contains("columns=[source]"), s"scan not pruned:\n$scan")
   }
@@ -74,5 +77,11 @@ class Er7SourceSpec extends AnyFunSuite with LocalSpark {
     val long = er7.filter(length(col("msg")) > 500)
     val composed = Pipeline.readMessages(spark).filter(length(col("msg")) > 500)
     assert(long.count() == composed.count())
+  }
+
+  test("a missing path raises PATH_NOT_FOUND when the read is planned") {
+    val missing = java.nio.file.Files.createTempDirectory("er7-missing").resolve("nope").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](spark.read.format("er7").load(missing))
+    assert(e.getCondition == "PATH_NOT_FOUND")
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
@@ -269,5 +271,99 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     val rows = spark.read.parquet(s"$root/messages").count()
     assert(rows == 6)
     assert(evaluated.value == rows)
+  }
+
+  // ------------------------------------------------------------------
+  // The driver-side lookup: no job, many files
+
+  /** `n` distinct ADT messages in one file and `n / 10` unparseable ones in
+    * another, blank-line separated. */
+  private def writeLargeInbox(dir: Path, n: Int): Unit = {
+    Files.createDirectories(dir)
+    val msgs = (1 to n).map(i =>
+      adt.map(_.replace("MSG0001", f"MSG$i%05d").replace("PAT123", s"PAT$i")).mkString("\n"))
+    Files.writeString(dir.resolve("adts.txt"), msgs.mkString("", "\n\n", "\n"))
+    Files.writeString(dir.resolve("junk.txt"),
+      (1 to n / 10).map(i => s"not an HL7 message $i").mkString("", "\n\n", "\n"))
+  }
+
+  /** `body` with the session settings `kv`, restored afterwards. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def parquetFiles(dir: String): Seq[Path] = {
+    val it = Files.walk(java.nio.file.Paths.get(dir))
+    try it.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally it.close()
+  }
+
+  test("retrieve runs no Spark job for a hit, a miss or any format") {
+    val (root, _) = batchLake
+    val id = ids(root).head
+    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        phases.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.phase"))).getOrElse("retrieve"))
+    }
+    val sc = spark.sparkContext
+    // a marker job on each side: the listener sees jobs in start order, so
+    // what it sees between the two markers started between them
+    def marker(name: String): Unit = {
+      sc.setLocalProperty("graft.phase", name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.phase", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      for (i <- Seq(id, "0" * 64); f <- None +: Pipeline.FormatOrder.map(Some(_))) {
+        Pipeline.retrieve(spark, root, i, f).collect()
+        Pipeline.retrieve(spark, root, i, f).isEmpty
+      }
+      marker("end")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!phases.contains("end") && System.nanoTime() < deadline) Thread.sleep(10)
+      val seen = phases.asScala.toSeq
+      assert(seen.contains("end"), s"the end marker job never reached the listener: $seen")
+      assert(seen.dropWhile(_ != "start").drop(1).takeWhile(_ != "end").isEmpty,
+        s"retrieve launched jobs: $seen")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("retrieve equals the catalog-join form on a lake of 40+ files per table") {
+    val tmp = Files.createTempDirectory("graft-many-files")
+    writeLargeInbox(tmp.resolve("inbox"), 120)
+    val root = tmp.resolve("lake").toString
+    // one events partition per messages file, and (an open cost of a whole
+    // split) one catalog file per messages file read back
+    withConf("spark.sql.files.openCostInBytes" -> (128L << 20).toString) {
+      Pipeline.writeLake(Pipeline.allEvents(spark, tmp.resolve("inbox").toString).repartition(48), root)
+    }
+    assert(parquetFiles(s"$root/catalog").length >= 40)
+    for (zone <- Seq("ingestion", "staging"))
+      assert(parquetFiles(s"$root/messages/zone=$zone/protocol=hl7v2").length >= 40, zone)
+    val all = ids(root)
+    assert(all.length == 132)
+    assertSameAsJoin(root, all.head, None, Some("er7"))
+    assertSameAsJoin(root, "0" * 64, None, None)
+    // the catalog-join form for every id and format in one join
+    val joined = spark.read.parquet(s"$root/messages")
+      .join(spark.read.parquet(s"$root/catalog").select("message_id", "path", "format", "ingest_ts"),
+            Seq("message_id", "format"))
+      .collect().toSeq.groupBy(r => (r.getString(0), r.getString(1)))
+    for (id <- all; f <- Pipeline.FormatOrder) {
+      val want = joined.getOrElse((id, f), Nil)
+      assert(Pipeline.retrieve(spark, root, id, Some(f)).collect().toSeq == want, s"id $id format $f")
+      if (f == "er7") {
+        assert(want.length == 1)
+        assert(Pipeline.retrieve(spark, root, id).collect().toSeq == want, s"id $id")
+      }
+    }
   }
 }

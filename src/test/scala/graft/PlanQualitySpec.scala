@@ -26,6 +26,15 @@ class PlanQualitySpec extends AnyFunSuite with LocalSpark {
     try planOf(df) finally cached.foreach(_.unpersist(false))
   }
 
+  test("q182b and the Explain consumer of its phase plan leave no table behind") {
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables
+    SparkEntry.queries("q182b_label_prop_copart")(spark, sf).collect()
+    val q = SparkEntry.registry.find(_.name == "q182b_label_prop_copart").get
+    Explain.planOf(q, spark, sf)(PlanStats.stats(spark, _))
+    assert(tables == before, s"tables left behind: ${tables -- before}")
+  }
+
   test("q01: filter and projection reach the parquet scan") {
     val p = plan("q01_scan_filter")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate"),
@@ -594,12 +603,8 @@ class PlanQualitySpec extends AnyFunSuite with LocalSpark {
     }
     val found: Seq[(String, String)] = SparkEntry.registry.sortBy(_.name).flatMap { q =>
       val ops =
-        try Explain.lazyPlans.get(q.name) match {
-          case Some(build) =>
-            val (df, cached) = build(spark, sf)
-            try offenders(df) finally cached.foreach(_.unpersist(false))
-          case None => offenders(q.run(spark, sf))
-        } catch { case e: Throwable => Seq(s"BUILD FAILED: ${e.getMessage}") }
+        try Explain.planOf(q, spark, sf)(offenders)
+        catch { case e: Throwable => Seq(s"BUILD FAILED: ${e.getMessage}") }
       ops.map(q.name -> _)
     }
     val bad = found.filterNot(allow).map { case (q, op) => s"$q: $op" }
@@ -724,12 +729,8 @@ class PlanQualitySpec extends AnyFunSuite with LocalSpark {
     s2.conf.set("spark.sql.shuffle.partitions", "32")
     val results: Seq[(String, Int, Int)] = SparkEntry.registry.sortBy(_.name).map { q =>
       val (sh, smj) =
-        try Explain.lazyPlans.get(q.name) match {
-          case Some(build) =>
-            val (df, cached) = build(s2, sf)
-            try PlanStats.stats(s2, df) finally cached.foreach(_.unpersist(false))
-          case None => PlanStats.stats(s2, q.run(s2, sf))
-        } catch { case _: Throwable => (-1, -1) } // build failures caught by blanket sweep
+        try Explain.planOf(q, s2, sf)(PlanStats.stats(s2, _))
+        catch { case _: Throwable => (-1, -1) } // build failures caught by blanket sweep
       (q.name, sh, smj)
     }
     val missing = results.collect {
