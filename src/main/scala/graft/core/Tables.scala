@@ -59,8 +59,4 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame    = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
-
-  /** Register every table as a temp view (SQL surface / ad-hoc exploration). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
 }

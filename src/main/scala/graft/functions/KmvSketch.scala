@@ -82,10 +82,4 @@ object KmvSketch {
   /** Driver-side reference for specs: the k smallest distinct values. */
   def reference(xs: Seq[Long], k: Int): Seq[Long] =
     xs.distinct.sorted.take(k)
-
-  /** Distinct-count estimate from a finished sketch (driver-side, specs):
-    * exact when the set was smaller than k. */
-  def estimateDistinct(sk: Seq[Long], k: Int): Double =
-    if (sk.length < k) sk.length.toDouble
-    else (k - 1).toDouble / (sk.last.toDouble / 1.8446744073709552e19 + 0.5)
 }

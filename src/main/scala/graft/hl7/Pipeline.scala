@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.PartitioningUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
@@ -22,9 +22,10 @@ import graft.sources.Er7Source
   *
   * The reference wires these as Lambdas around an SNS topic
   * (`/root/reference/microservices/core/core_stack.yml:93-172`); here the
-  * whole flow is one narrow-transformation DataFrame chain — no shuffle until
-  * the partitioned sink. Every stage is a pure `DataFrame => DataFrame`, so
-  * the same chain runs under Structured Streaming (graft.streaming).
+  * whole flow is one DataFrame chain whose only shuffle before the
+  * partitioned sink is the dedup's. Every stage is a pure
+  * `DataFrame => DataFrame`; under Structured Streaming (graft.streaming)
+  * the same chain runs with the dedup as stateful `dropDuplicates`.
   */
 object Pipeline {
 
@@ -33,6 +34,10 @@ object Pipeline {
   /** A1/A20 — message source. One row per message; files may hold several
     * messages separated by blank lines (`messages/adt01.txt:10`).
     *
+    * Each file is read whole as bytes (`binaryFile`) and cast to a string,
+    * which keeps its bytes as they are. The `wholetext` text reader gives
+    * the same rows but clones a Hadoop `JobConf` for every file.
+    *
     * The glob rides in `pathGlobFilter`, NOT in the path: a glob-in-path
     * makes the reader's streaming-sink probe getFileStatus the literal
     * glob string (dir slash star dot txt), which this host's filesystem
@@ -40,26 +45,48 @@ object Pipeline {
     * q21 queries in a whole bench run); a plain directory path stats the
     * real directory. */
   def readMessages(spark: SparkSession, dir: String = MessagesDir): DataFrame =
-    spark.read.option("wholetext", "true").option("pathGlobFilter", "*.txt")
-      .textFile(dir).toDF("file_text")
-      .withColumn("source", regexp_extract(input_file_name(), "([^/]+)\\.txt", 1))
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.txt").load(dir)
+      .select(col("content").cast(StringType).as("file_text"),
+        regexp_extract(input_file_name(), "([^/]+)\\.txt", 1).as("source"))
       .transform(Er7Source.explodeMessages(_, "file_text"))
       .select("msg", "source")
 
-  /** A2-A6 — front-door semantics: deterministic id (sha-256 of the payload,
-    * replacing the reference's transport-generated SNS MessageId — SURVEY
-    * §7.3.3), exact dedup on that hash (A5; batch form of the DynamoDB
-    * ledger), and the metadata envelope (A6). At scale `dropDuplicates` is a
-    * hash-partitioned shuffle on message_id — the only wide op in the flow. */
-  def ingest(messages: DataFrame): DataFrame =
+  /** A2-A6 — the front-door envelope that batch and streaming ingest share:
+    * the authorization filter (A3), the deterministic id (sha-256 of the
+    * payload, replacing the reference's transport-generated SNS MessageId
+    * — SURVEY §7.3.3) and the metadata envelope (A6). */
+  def envelope(messages: DataFrame): DataFrame =
     authorize(messages)
       .filter(col("authorized"))
       .drop("authorized", "deny_reason")
       .withColumn("message_id", sha2(col("msg"), 256))
-      .dropDuplicates("message_id")
       .withColumn("event", lit("ingested"))
       .withColumn("protocol", lit("hl7v2"))
       .withColumn("format", lit("er7"))
+
+  /** A2-A6 batch — the [[envelope]] with exact dedup on its id (A5; batch
+    * form of the DynamoDB ledger, where the first writer wins). Rows are
+    * hash-partitioned on `message_id`, the only wide op in the flow, and
+    * each partition keeps a row the first time its id appears in a hash
+    * set, so the first row seen wins, as `first()` does. Not
+    * `dropDuplicates`: `first()` over strings has no hash form, so it plans
+    * as a sort aggregate that sorts every row by id twice, and each sorting
+    * task holds a `spark.buffer.pageSize` page from its first row.
+    *
+    * The exchange's partition count is left to `spark.sql.shuffle.partitions`
+    * and AQE, which coalesces only whole partitions, so all rows of an id
+    * stay in one. A partition's set holds each of its distinct ids once.
+    * A stream dedups across micro-batches through
+    * `StreamingPipeline.ingestStream` instead. */
+  def ingest(messages: DataFrame): DataFrame = {
+    val enveloped = envelope(messages)
+    val id = enveloped.schema.fieldIndex("message_id")
+    enveloped.repartition(col("message_id"))
+      .mapPartitions { rows =>
+        val seen = new java.util.HashSet[String]()
+        rows.filter(r => seen.add(r.getString(id)))
+      }(Encoders.row(enveloped.schema))
+  }
 
   /** The A3 rejection branch: denied rows with the reason, for the audit
     * sink (the reference's 403 responses, as data). */

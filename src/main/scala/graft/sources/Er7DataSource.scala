@@ -20,9 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * may hold several messages separated by blank lines), schema
   * `(source STRING, msg STRING, n_bytes LONG)`.
   *
-  * Where `Pipeline.readMessages` composes built-ins (text scan + explode),
-  * this source demonstrates the V2 contract the engine's other scans get
-  * from the parquet reader for free:
+  * Where `Pipeline.readMessages` composes built-ins (a whole-file
+  * `binaryFile` scan cast to text, then explode), this source demonstrates
+  * the V2 contract the engine's other scans get from the parquet reader
+  * for free:
   *  - **column pruning** (SupportsPushDownRequiredColumns): ask for only
   *    `source` and the reader never materializes message bodies;
   *  - **predicate-driven file skipping** (SupportsPushDownFilters):
@@ -34,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Registered as short name `er7` via DataSourceRegister (META-INF
   * services). Message splitting must agree with `Pipeline.readMessages` —
-  * PipelineSpec asserts row-set equality between the two paths.
+  * Er7SourceSpec asserts row-set equality between the two paths.
   */
 class Er7DataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "er7"

@@ -122,20 +122,17 @@ object StreamingPipeline {
       .select("msg", "source")
   }
 
-  /** A5 streaming — the dedup ledger as streaming state. The reference's
-    * DynamoDB ledger is global and unbounded; `withWatermarkedDedup` bounds
-    * state for 100 TB streams (documented divergence, SURVEY §7.3.2). */
+  /** A5 streaming — the dedup ledger as streaming state over the shared
+    * front-door [[Pipeline.envelope]]. The reference's DynamoDB ledger is
+    * global and unbounded; [[ingestStreamWatermarked]] bounds state for
+    * 100 TB streams (documented divergence, SURVEY §7.3.2). */
   def ingestStream(messages: DataFrame): DataFrame =
-    Pipeline.ingest(messages) // dropDuplicates is stateful on a stream
+    Pipeline.envelope(messages).dropDuplicates("message_id")
 
   def ingestStreamWatermarked(messages: DataFrame, tsCol: String, delay: String): DataFrame =
-    messages
-      .withColumn("message_id", sha2(col("msg"), 256))
+    Pipeline.envelope(messages)
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("message_id")
-      .withColumn("event", lit("ingested"))
-      .withColumn("protocol", lit("hl7v2"))
-      .withColumn("format", lit("er7"))
 
   /** A7+A16+A17 — multi-sink fan-out per micro-batch: one batch, two writes
     * (zoned lake + catalog), idempotent under replay because message_id is
@@ -206,14 +203,6 @@ object StreamingPipeline {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("bucket_start"), col("event_type"),
               col("n"), col("sum_value"))
-
-  /** Sliding window variant (1 hour every 15 minutes). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("bucket_start"), col("n"))
 
   /** Arbitrary keyed state (§2B "mapGroupsWithState"): lifetime event count
     * per user, maintained across micro-batches. One long of state per key —

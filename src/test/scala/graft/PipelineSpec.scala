@@ -6,8 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.hl7.Pipeline
+import graft.sources.Er7Source
 import graft.streaming.StreamingPipeline
 
 /** Pipeline E2E vs goldens (SURVEY.md §5.2.2, Q21): replaces the reference's
@@ -271,6 +277,106 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     val rows = spark.read.parquet(s"$root/messages").count()
     assert(rows == 6)
     assert(evaluated.value == rows)
+  }
+
+  // ------------------------------------------------------------------
+  // The inbox read and the batch dedup
+
+  /** The `wholetext` text reader `readMessages` used before it read files
+    * as bytes: the reference its rows are checked against. */
+  private def wholetextRead(dir: String): DataFrame =
+    spark.read.option("wholetext", "true").option("pathGlobFilter", "*.txt")
+      .textFile(dir).toDF("file_text")
+      .withColumn("source", regexp_extract(input_file_name(), "([^/]+)\\.txt", 1))
+      .transform(Er7Source.explodeMessages(_, "file_text"))
+      .select("msg", "source")
+
+  test("readMessages keeps the bytes and sources of the wholetext reader") {
+    val dir = Files.createTempDirectory("graft-read-bytes")
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    def write(name: String, text: String): Unit = Files.write(dir.resolve(name), text.getBytes(utf8))
+    write("lf.txt", adt.mkString("\n") + "\n\n" + adt.mkString("\n") + "\n")
+    write("crlf.txt", adt.mkString("\r\n") + "  \t\r\n\r\n" + adt.mkString("\r\n") + "\r\n")
+    write("blank_lines.txt", adt.mkString("\n") + "\n \t\n\n\n" + "second message  \n\n\n")
+    write("non_ascii.txt", adt.mkString("\n").replace("DOE^JANE", "MÜLLER^JOSÉ^日本") + "\n")
+    write("ignored.dat", "not a .txt file\n")
+    // 0xFF is never valid UTF-8: both readers pass it to the split, whose
+    // regex reads it as U+FFFD
+    val bad = "PID|1||BAD".getBytes(utf8) ++ Array(0xff.toByte) ++ "BYTE||X\n\nnext\n".getBytes(utf8)
+    Files.write(dir.resolve("invalid_utf8.txt"), bad)
+    def rows(df: DataFrame) =
+      df.select(hex(col("msg")), col("source")).collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    val got = rows(Pipeline.readMessages(spark, dir.toString))
+    assert(got == rows(wholetextRead(dir.toString)))
+    assert(got.map(_._2).distinct.sorted == Seq("blank_lines", "crlf", "invalid_utf8", "lf", "non_ascii"))
+    assert(got.length == 9)
+    assert(got.exists(_._1.contains("EFBFBD")))
+  }
+
+  /** One payload in three files and twice in one of them (3 planted
+    * duplicates), a second distinct payload and an unparseable one. */
+  private def writeDuplicateInbox(dir: Path): String = {
+    Files.createDirectories(dir)
+    val twice = adt.mkString("\n")
+    val other = adt.mkString("\n").replace("MSG0001", "MSG0002").replace("PAT123", "PAT456")
+    Files.writeString(dir.resolve("a.txt"), Seq(twice, other, twice).mkString("", "\n\n", "\n"))
+    Files.writeString(dir.resolve("b.txt"), twice + "\n")
+    Files.writeString(dir.resolve("c.txt"), "not an HL7 message\n\n" + twice + "\n")
+    twice
+  }
+
+  test("batch dedup keeps one row per id and zone, with the same source in every zone") {
+    val tmp = Files.createTempDirectory("graft-dedup")
+    val inbox = tmp.resolve("inbox").toString
+    val twice = writeDuplicateInbox(tmp.resolve("inbox"))
+    val read = Pipeline.readMessages(spark, inbox)
+    assert(read.count() == 6)
+    assert(read.count() - Pipeline.ingest(read).count() == 3)
+    val root = tmp.resolve("lake").toString
+    Pipeline.writeLake(Pipeline.allEvents(spark, inbox), root)
+    val lake = spark.read.parquet(s"$root/messages")
+    assert(lake.groupBy("message_id", "zone").count().filter(col("count") =!= 1).isEmpty)
+    val id = spark.range(1).select(sha2(lit(twice), 256)).first().getString(0)
+    val copies = lake.filter(col("message_id") === id).select("zone", "source").collect()
+    assert(copies.map(_.getString(0)).sorted.toSeq == Seq("ingestion", "staging"))
+    assert(copies.map(_.getString(1)).distinct.length == 1, copies.toSeq)
+    // the zone/format populations of Spark's own dropDuplicates
+    val reference = Pipeline.envelope(read).dropDuplicates("message_id")
+    def counts(df: DataFrame) = df.groupBy("zone", "format").count().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val want = counts(Pipeline.events(reference, Pipeline.stage(reference)))
+    assert(counts(lake) == want)
+    assert(want == Map(("ingestion", "er7") -> 3L, ("staging", "json") -> 2L, ("error", "txt") -> 1L))
+  }
+
+  test("the lake's messages write sorts only for its zone/protocol partitions") {
+    val tmp = Files.createTempDirectory("graft-write-plan")
+    writeDuplicateInbox(tmp.resolve("inbox"))
+    val root = tmp.resolve("lake").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (PlanStats.allNodes(spark, qe.executedPlan).exists {
+          case w: DataWritingCommandExec => w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString.endsWith("/lake/messages")
+            case _ => false
+          }
+          case _ => false
+        }) plans.add(qe.executedPlan)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.writeLake(Pipeline.allEvents(spark, tmp.resolve("inbox").toString), root)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, "the messages write's plan never reached the listener")
+    val nodes = PlanStats.allNodes(spark, plans.peek())
+    assert(!nodes.exists(_.isInstanceOf[SortAggregateExec]), plans.peek())
+    val sorts = nodes.collect { case s: SortExec => s.sortOrder.map(_.child.references.map(_.name).mkString) }
+    assert(sorts == Seq(Seq("zone", "protocol")), plans.peek())
   }
 
   // ------------------------------------------------------------------
