@@ -221,10 +221,19 @@ object Pipeline {
     Seq("message_id", "source", "zone", "protocol", "format", "content_type")
       .map(StructField(_, StringType)))
 
-  /** The catalog table's schema as read back, derived from [[catalogRows]]. */
-  def catalogSchema(spark: SparkSession): StructType = nullable(
-    catalogRows(spark.createDataFrame(java.util.List.of[Row](), CatalogSource)).schema
-  ).asInstanceOf[StructType]
+  /** The catalog table's schema per session: deriving it analyzes a plan,
+    * which [[retrieve]] would otherwise pay on every lookup. Weakly keyed,
+    * and a schema holds no reference to its session, so a dropped session
+    * is freed. */
+  private val catalogSchemas = new java.util.WeakHashMap[SparkSession, StructType]()
+
+  /** The catalog table's schema as read back, derived from [[catalogRows]]
+    * once per session. */
+  def catalogSchema(spark: SparkSession): StructType = catalogSchemas.synchronized {
+    catalogSchemas.computeIfAbsent(spark, s => nullable(
+      catalogRows(s.createDataFrame(java.util.List.of[Row](), CatalogSource)).schema
+    ).asInstanceOf[StructType])
+  }
 
   /** A16/A17 — partitioned lake sink + catalog append. Partition layout
     * mirrors the reference's key scheme `zone/protocol=…`
@@ -403,11 +412,14 @@ object Pipeline {
     * A key-value get, served on the driver with no Spark job: the catalog's
     * files are searched for the id (and format), then the hit's
     * `zone=…/protocol=…` directory is searched for the message, both by
-    * [[PointRead]] under declared schemas with the keys pushed into the
-    * parquet reader. The result is a local relation of the message's lake
-    * columns, keys first, then the catalog's `path` and `ingest_ts`, so
-    * `collect()` and `isEmpty` on it run no job either. A miss returns an
-    * empty frame of the same schema; a missing lake raises PATH_NOT_FOUND. */
+    * [[PointRead]] under declared schemas. Each lookup lists and reads both
+    * from disk, checking every row against the keys; what is reused across
+    * lookups is only the session's catalog schema and [[PointRead]]'s
+    * parquet readers, which push no filter. The result is a local relation
+    * of the message's lake columns, keys first, then the catalog's `path`
+    * and `ingest_ts`, so `collect()` and `isEmpty` on it run no job either.
+    * A miss returns an empty frame of the same schema; a missing lake
+    * raises PATH_NOT_FOUND. */
   def retrieve(spark: SparkSession, lakeRoot: String, messageId: String,
                format: Option[String]): DataFrame = {
     val catSchema = catalogSchema(spark)

@@ -472,4 +472,137 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
       }
     }
   }
+
+  // ------------------------------------------------------------------
+  // Reused readers, one read pool, and what a lookup must still see
+
+  /** A 44-message lake with 8 files in the catalog and in each messages
+    * directory, so a lookup reads files on several threads. */
+  private lazy val multiFileLake: String = {
+    val tmp = Files.createTempDirectory("graft-multi-file")
+    writeLargeInbox(tmp.resolve("inbox"), 40)
+    val root = tmp.resolve("lake").toString
+    withConf("spark.sql.files.openCostInBytes" -> (128L << 20).toString) {
+      Pipeline.writeLake(Pipeline.allEvents(spark, tmp.resolve("inbox").toString).repartition(8), root)
+    }
+    assert(parquetFiles(s"$root/catalog").length >= 8)
+    root
+  }
+
+  /** Ids of `root`'s catalog that have a row of `format`. */
+  private def idsWith(root: String, format: String): Seq[String] =
+    spark.read.parquet(s"$root/catalog").filter(col("format") === format)
+      .select("message_id").collect().map(_.getString(0)).toSeq.sorted
+
+  /** Broadcasts created while `body` runs, counted by the ids of two marker
+    * broadcasts: ids are handed out in creation order. */
+  private def broadcastsDuring(body: => Unit): Long = {
+    def mark(): Long = { val b = spark.sparkContext.broadcast(0); try b.id finally b.destroy() }
+    val before = mark()
+    body
+    mark() - before - 1
+  }
+
+  /** Lookups over hits in every format, a miss, and each format argument. */
+  private def lookupMix(root: String): Seq[(String, Option[String])] =
+    for (id <- idsWith(root, "json").take(2) ++ idsWith(root, "txt").take(1) :+ "0" * 64;
+         f <- None +: Pipeline.FormatOrder.map(Some(_))) yield id -> f
+
+  test("after one warm lookup, retrieve creates no broadcast for hits, a miss or any format") {
+    val root = multiFileLake
+    val mix = lookupMix(root)
+    assert(mix.length >= 16)
+    Pipeline.retrieve(spark, root, mix.head._1).collect()
+    val n = broadcastsDuring(mix.foreach { case (id, f) => Pipeline.retrieve(spark, root, id, f).collect() })
+    assert(n == 0, s"${mix.length} lookups created $n broadcasts")
+  }
+
+  test("a session conf change builds new readers once, and both settings read the same rows") {
+    val (root, _) = batchLake
+    val id = idsWith(root, "json").head
+    Pipeline.retrieve(spark, root, id).collect()
+    assertSameAsJoin(root, id, None, Some("er7"))
+    assertSameAsJoin(root, id, Some("json"), Some("json"))
+    withConf("spark.sql.parquet.enableVectorizedReader" -> "false") {
+      assert(broadcastsDuring(Pipeline.retrieve(spark, root, id).collect()) > 0)
+      assert(broadcastsDuring(Pipeline.retrieve(spark, root, id).collect()) == 0)
+      assert(broadcastsDuring(Pipeline.retrieve(spark, root, id, Some("json")).collect()) == 0)
+      assertSameAsJoin(root, id, None, Some("er7"))
+      assertSameAsJoin(root, id, Some("json"), Some("json"))
+    }
+  }
+
+  test("retrieve reads a lake rewritten over the same root, and misses the old lake's ids") {
+    val tmp = Files.createTempDirectory("graft-rewrite")
+    writeInbox(tmp.resolve("old"))
+    writeLargeInbox(tmp.resolve("new"), 10)
+    val root = tmp.resolve("lake").toString
+    Pipeline.writeLake(Pipeline.allEvents(spark, tmp.resolve("old").toString), root)
+    val old = ids(root)
+    old.foreach(id => assert(!Pipeline.retrieve(spark, root, id).isEmpty))
+    Pipeline.writeLake(Pipeline.allEvents(spark, tmp.resolve("new").toString), root)
+    val now = ids(root)
+    assert(now.length == 11 && now.intersect(old).isEmpty)
+    for (id <- old; f <- None +: Pipeline.FormatOrder.map(Some(_)))
+      assert(Pipeline.retrieve(spark, root, id, f).isEmpty, s"old id $id format $f")
+    for (id <- now) {
+      assertSameAsJoin(root, id, None, Some("er7"))
+      for (f <- Pipeline.FormatOrder) assertSameAsJoin(root, id, Some(f), Some(f))
+    }
+  }
+
+  test("concurrent retrieves on one session equal the sequential results") {
+    val root = multiFileLake
+    val mix = lookupMix(root)
+    val want = mix.map { case (id, f) => (id, f) -> Pipeline.retrieve(spark, root, id, f).collect().toSeq }.toMap
+    assert(want.values.count(_.nonEmpty) >= 9)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (0 until 8).map { t =>
+      val th = new Thread(() => {
+        start.await()
+        for (j <- 0 until 25) {
+          val (id, f) = mix((t * 25 + j) % mix.length)
+          try {
+            val got = Pipeline.retrieve(spark, root, id, f).collect().toSeq
+            if (got != want((id, f))) errors.add(s"id $id format $f: $got")
+          } catch { case e: Throwable => errors.add(s"id $id format $f: $e") }
+        }
+      }, s"retrieve-client-$t")
+      th.start()
+      th
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.asScala.take(5).mkString("\n"))
+  }
+
+  test("point reads run on one pool of at most one thread per core") {
+    val root = multiFileLake
+    val id = idsWith(root, "json").head
+    def threadNames(): Seq[String] = {
+      var g = Thread.currentThread.getThreadGroup
+      while (g.getParent != null) g = g.getParent
+      val all = new Array[Thread](g.activeCount * 2 + 16)
+      all.take(g.enumerate(all, true)).map(_.getName).toSeq
+    }
+    val defaultPool = "pool-\\d+-thread-\\d+".r
+    Pipeline.retrieve(spark, root, id).collect()
+    val before = threadNames().filter(defaultPool.matches).toSet
+    // a pool a lookup starts and shuts down lives only while it reads, so
+    // sample the thread names while the lookups run
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var running = true
+    val sampler = new Thread(() => while (running) {
+      threadNames().filter(defaultPool.matches).foreach(seen.add)
+      Thread.sleep(1)
+    })
+    sampler.start()
+    try for (i <- 0 until 20) Pipeline.retrieve(spark, root, id, if (i % 2 == 0) None else Some("json")).collect()
+    finally { running = false; sampler.join() }
+    val started = seen.asScala.toSet -- before
+    assert(started.isEmpty, s"lookups started ${started.size} default-pool threads: ${started.take(4)}")
+    val readers = threadNames().count(_.startsWith("point-read-"))
+    assert(readers <= Runtime.getRuntime.availableProcessors, readers)
+  }
 }
