@@ -40,13 +40,21 @@ object Tables {
             s"events.ts NTZ→TIMESTAMP normalization requires session timeZone=UTC, got $tz")
           df.withColumn("ts", col("ts").cast(TimestampType))
         // Anything else is generator schema drift — fail loudly rather than
-        // cast-and-corrupt the oracle comparison (the r05 q20b/q51b micros
-        // break was exactly this class of silent coercion).
+        // cast-and-corrupt the oracle comparison.
         case other =>
           throw new IllegalStateException(
             s"events.ts has unexpected dtype $other; expected ns-long, TIMESTAMP or TIMESTAMP_NTZ")
       }
     } else df
+  }
+
+  /** Register `views` as session temp views for `body` (a SQL query over
+    * them) and drop them when it returns. `s.sql` analyzes eagerly, so the
+    * frame it returns holds the resolved plans and still runs after the
+    * drop: no view outlives its query. */
+  def withTempViews[T](s: SparkSession, views: (String, DataFrame)*)(body: => T): T = {
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    try body finally views.foreach { case (name, _) => s.catalog.dropTempView(name) }
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.operators.Dispatch
 import graft.queries.GraftQuery
 
 /** Corpus-construction operators that sit BETWEEN filtering and training:
@@ -474,12 +475,14 @@ object Curation {
     val qual = base
       .join(qualityLogit(s, d).filter(col("keep")).select("doc_id"), "doc_id")
       .localCheckpoint(true)
-    // 2. near-dup dedup on the survivors; "auto" (q149c) resolves the
-    // strategy from the ρ=Σdf²/Σdf posting-skew probe over the ALREADY-
-    // CHECKPOINTED survivor frame (operators.Dispatch, the q169c signal)
+    // 2. near-dup dedup on the survivors; "auto" (q149c) applies the skew
+    // rule to the posting skew of the already-checkpointed survivor frame:
+    // the counting join's pair work is Σdf² while minhash stays flat
     val strategy = candidates match {
-      case "auto" => graft.operators.Dispatch
-        .chooseCurateDedup(s, qual.select("doc_id", "text"))
+      case "auto" =>
+        val sh = Dedup.shingledN(qual.select("doc_id", "text"), 3)
+        if (Dispatch.skewed(Dispatch.rhoFromEx(Dedup.postings(sh)))) "minhash"
+        else "exact"
       case fixed  => fixed
     }
     val rawPairs = strategy match {
@@ -494,11 +497,10 @@ object Curation {
       .groupBy("group_id")
       .agg(max_by(col("doc_id"), struct(col("n_chars"), -col("doc_id"))).as("doc_id"))
     // a grouped doc survives iff it is its group's representative.
-    // shuffle_hash pins (r13, VERDICT-r12 #8): both anti-join build sides
-    // are dup-rate-bounded (grouped docs / non-representatives only, never
-    // the corpus), but the checkpointed frames' default size estimates
-    // made the planner fall back to SMJ — paying a sort of the corpus-
-    // scale `qual` frame. BuildRight left-anti SHJ is bounded and
+    // shuffle_hash pins: both anti-join build sides are dup-rate-bounded
+    // (grouped docs / non-representatives only, never the corpus), but the
+    // checkpointed frames' default size estimates make the planner fall
+    // back to SMJ — paying a sort of the corpus-scale `qual` frame. BuildRight left-anti SHJ is bounded and
     // sort-free; PlanQualitySpec's SMJ whitelist keeps it pinned.
     val nonReps = groups.join(reps.select("doc_id").hint("shuffle_hash"),
       Seq("doc_id"), "left_anti")
@@ -737,10 +739,10 @@ object Curation {
   def neymanSample(s: SparkSession, d: String): DataFrame = {
     val budget = 100
     val docs = Tables.documents(s, d)
-    // localCheckpoint (r13, VERDICT-r12 #6 review): `stats` is referenced
-    // by alloc, totW AND the deficit subquery — unmaterialized, the
-    // corpus-scale stats aggregate re-ran once per reference (the r12 dump
-    // carried 19+ Exchange nodes, three of them identical corpus passes).
+    // localCheckpoint: `stats` is referenced by alloc, totW AND the
+    // deficit subquery — unmaterialized, the corpus-scale stats aggregate
+    // re-runs once per reference (19+ Exchange nodes in the plan dump,
+    // three of them identical corpus passes).
     // The frame is stratum-cardinality (~20 rows), so eager
     // materialization is free and the corpus is scanned once for stats.
     val stats = docs.groupBy("source").agg(
@@ -1314,10 +1316,10 @@ object Curation {
     * map-side into (source, rep) partial sums — the only corpus-scale
     * shuffle carries B rows per (source × partition); the percentile
     * fold runs over the B-row replicate table per source. Overflow-safe
-    * pre-reduced modular hash (ADVICE-r07 lesson). The draw
+    * pre-reduced modular hash. The draw
     * `u = (h₁ · h₂) % P` is the PRODUCT of two affine-in-(doc,b) forms
-    * with distinct multipliers (ADVICE-r09): any single affine spelling
-    * — including r08's `((h + b·131) % P) · A % P`, which expands to
+    * with distinct multipliers: any single affine spelling
+    * — including `((h + b·131) % P) · A % P`, which expands to
     * `doc·A² + b·(131·A)` mod P — shifts every doc's u by the SAME
     * stride per replicate, so the B replicate means were a one-parameter
     * global-shift family (adjacent-replicate weight correlation ≈ 0.66,

@@ -107,7 +107,7 @@ object Dedup {
     * candidate probability at Jaccard exactly t is 1-(1-t²)^B. The default
     * 16 bands give 0.94 at t=0.4 and 0.99 at t=0.5 — and 0.99 is NOT
     * enough when the corpus holds tens of exactly-at-threshold pairs (the
-    * round-8 Zipfian run measured 2 misses in 80 marginal pairs); for
+    * zipf corpus measured 2 misses in 80 marginal pairs); for
     * t ≤ 0.5 we double to 32 bands (64-hash signature) → 0.996 at the
     * t=0.4 margin and 0.9999 at t=0.5, rising steeply above. Cost is 2×
     * min-aggregates in the signature pass — map-side, linear in corpus
@@ -124,7 +124,7 @@ object Dedup {
     * 32 bands, not the 16-band default: q36's confirm threshold (0.5) sits
     * exactly AT the banding margin, where 16 bands give only
     * P(candidate | J=0.5) = 1−0.75¹⁶ ≈ 0.99 per pair — measured failing on
-    * the round-8 Zipfian corpus (2 of 80 exactly-at-threshold pairs drew
+    * the sf1z Zipfian corpus (2 of 80 exactly-at-threshold pairs drew
     * no band collision: sf1z scaleverify, spark=2910 vs oracle=2912; the
     * disjoint corpora never exposed it because their marginal pairs drew
     * luckily). 32 bands put the margin at 1−0.75³² ≈ 0.9999 — the same
@@ -220,25 +220,30 @@ object Dedup {
     * run the dedup stage on an already-filtered corpus instead of the raw
     * table. */
   private[graft] def ngramJaccardOf(docs: DataFrame, t: Double = 0.4): DataFrame = {
-    val sh = shingledN(docs, 3)
-    // explode_outer, deliberately: plain explode's inferred non-empty/
-    // non-null constraints get pushed below the projection, where the alias
-    // substitution re-computes the whole shingling expression 2 extra times
-    // per row in the filter; outer generate infers nothing, and the equi-
-    // join drops a null shingle anyway
-    //
-    // join key = xxhash64(shingle), not the ~20-byte string: the shuffle
-    // carries 8 bytes/key and the hash join compares longs (measured 1.3 s
-    // → 0.9 s warm at sf0.1). A 64-bit collision would alias two shingles
-    // and inflate one intersection count; at v distinct shingles the
-    // probability any collision exists is ≈ v²/2⁶⁵ (~1e-9 at v=10⁵, still
-    // ~1e-4 at a 100 TB-ish v=10⁹) — an explicitly accepted tolerance; use
-    // the string key where bit-exactness trumps the shuffle width
-    val ex = sh.select(col("doc_id"), size(col("sh")).as("n_sh"),
-                       explode_outer(col("sh")).as("shingle"))
-      .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("shk"))
-    jaccardCountingJoin(ex, t)
+    jaccardCountingJoin(postings(shingledN(docs, 3)), t)
   }
+
+  /** Hashed postings (doc_id, n_sh, shk) of a shingled (doc_id, sh) frame:
+    * the input of the exact counting joins and of the posting-skew probe
+    * (operators.Dispatch).
+    *
+    * explode_outer, deliberately: plain explode's inferred non-empty/
+    * non-null constraints get pushed below the projection, where the alias
+    * substitution re-computes the whole shingling expression 2 extra times
+    * per row in the filter; outer generate infers nothing, and the equi-
+    * join drops a null shingle anyway.
+    *
+    * shk = xxhash64(shingle), not the ~20-byte string: the shuffle carries
+    * 8 bytes/key and the hash join compares longs (measured 1.3 s → 0.9 s
+    * warm at sf0.1). A 64-bit collision would alias two shingles and
+    * inflate one intersection count; at v distinct shingles the
+    * probability any collision exists is ≈ v²/2⁶⁵ (~1e-9 at v=10⁵, still
+    * ~1e-4 at a 100 TB-ish v=10⁹) — an explicitly accepted tolerance; use
+    * the string key where bit-exactness trumps the shuffle width. */
+  private[graft] def postings(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), size(col("sh")).as("n_sh"),
+        explode_outer(col("sh")).as("shingle"))
+      .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("shk"))
 
   /** The ONE exact-Jaccard counting join, shared by q55 and the
     * prefix-filtered variant (their equivalence proof assumes an identical
@@ -312,13 +317,8 @@ object Dedup {
     * shingles need postings in the candidate join (t=0.9 ⇒ ~10% of A's
     * postings), the full-B side stays as-is — same theorem as
     * prefixJaccardOf, one-sided. */
-  private[graft] def containmentOf(docs: DataFrame, t: Double = 0.9): DataFrame = {
-    val sh = shingledN(docs, 3)
-    val ex = sh.select(col("doc_id"), size(col("sh")).as("n_sh"),
-        explode_outer(col("sh")).as("shingle"))
-      .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("shk"))
-    containmentJoinFromEx(ex, t)
-  }
+  private[graft] def containmentOf(docs: DataFrame, t: Double = 0.9): DataFrame =
+    containmentJoinFromEx(postings(shingledN(docs, 3)), t)
 
   /** The counting join alone, over an already-built posting frame
     * (doc_id, n_sh, shk) — factored out so the q169c dispatcher can run
@@ -350,11 +350,7 @@ object Dedup {
     * full test corpus. */
   private[graft] def containmentPrefixOf(docs: DataFrame, t: Double = 0.9): DataFrame = {
     val sh = shingledN(docs, 3)
-    val ex = sh.select(col("doc_id"), size(col("sh")).as("n_sh"),
-        explode_outer(col("sh")).as("shingle"))
-      .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("shk"))
-      .localCheckpoint(true)
-    containmentPrefixFromShEx(sh, ex, t)
+    containmentPrefixFromShEx(sh, postings(sh).localCheckpoint(true), t)
   }
 
   /** Prefix-filter + verify alone, over an already-materialized posting
@@ -814,7 +810,7 @@ object Dedup {
     val pairs = ngramJaccard(s, d).select("a_id", "b_id").localCheckpoint(true)
     val groups = dedupGroupsFromPairs(pairs) // (doc_id, group_id), edged nodes only
     val docs = Tables.documents(s, d).select("doc_id")
-    // SMJ audit (r13, VERDICT-r12 #8), site by site:
+    // join strategies, site by site:
     //  - docs ⟕ groups: `groups` holds only near-dup-EDGED docs (pair-
     //    cardinality, dup-rate-bounded ≪ corpus), so pin shuffle_hash —
     //    the build side stays bounded per partition and the corpus side
@@ -997,7 +993,7 @@ object Dedup {
   }
 
   // CAST(... AS BIGINT) on integer sums: DuckDB sum() is HUGEINT → pandas
-  // float64 → dtype-sensitive hash mismatch (the r03 regression class)
+  // float64 → dtype-sensitive hash mismatch
   val dupSpansSql: String =
     """WITH toks AS (SELECT doc_id, string_split(text, ' ') t FROM documents
       |              WHERE len(string_split(text, ' ')) >= 8),

@@ -1,155 +1,95 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.llm.Dedup
 import graft.queries.{GraftQuery, Relational11}
 
-/** Pick-by-size dispatch for the registered lever pairs (VERDICT r09
-  * "What's missing #3"): the q182/q182b, q169/q169b, q203/q203b, q65b/q65c
-  * pairs are measured levers whose crossover was, until round 10, a human
-  * reading BASELINE.md. This operator makes the 100 TB story executable:
-  * it chooses the variant from PLANNER statistics — the same signal AQE
-  * uses for join-strategy selection, lifted to whole-operator granularity.
+/** Pick-by-size dispatch for the registered lever pairs: each dispatcher
+  * runs one of two result-equal variants, chosen by one of two rules.
   *
-  * First instance: label propagation (q182 broadcast vs q182b
-  * co-partitioned). The decision input is the per-phase label-frame size
-  * estimate vs the session's `spark.sql.autoBroadcastJoinThreshold`:
-  * q182 force-broadcasts the node-sized (node, lbl) frame into all ten
-  * phase joins, so the moment that frame stops being broadcast-sized the
-  * broadcast plan is wrong BY THE SESSION'S OWN definition of
-  * broadcast-sized. Measured bracket (BASELINE.md): q182 wins at sf0.1
-  * (9.5 s vs 14.5 s — the label frame is ~1 MB in-memory, far under the
-  * default 10 MB threshold) and OOMs outright at sf10/8 GiB where q182b
-  * completes (~100 MB hashed relation, far over). The default threshold
-  * puts the flip at ~160k nodes (≈ sf1) — inside the measured bracket.
+  *  - [[broadcastSized]] — is a frame of `rows` rows broadcast-sized by the
+  *    session's own `spark.sql.autoBroadcastJoinThreshold`? Used by q182c
+  *    (label propagation), q203c (assortativity) and q227c (semi-join).
+  *  - [[skewed]] — does the posting-skew probe [[rhoFromEx]] exceed
+  *    [[MaxMeanPostings]]? Used by q169c (containment) and q149c (curate's
+  *    dedup stage).
   *
-  * The estimate is a ROW COUNT, not the planner's compressed-bytes stat:
-  * `stats.sizeInBytes` on parquet prices the label frame at its
-  * compressed-column size (~1.4 MB at sf10), while the thing that
-  * actually OOMs is the in-memory HashedRelation the broadcast builds —
-  * ~64 bytes/row with UnsafeRow + map overhead, ~100 MB at sf10's 1.6M
-  * nodes. So the dispatcher counts rows (a parquet count(*) is
-  * footer-metadata-cheap — no column is materialized) and prices them at
-  * [[BroadcastBytesPerRow]]. Like AQE's, the estimate is decade-accurate,
-  * which is all a 5-decade crossover needs. A cluster operator tunes ONE
-  * knob — the broadcast threshold it already tunes — and the dispatcher
-  * follows.
+  * Neither rule has a session option of its own: κ is a constant, and the
+  * one knob a cluster operator tunes is the broadcast threshold it already
+  * tunes, which the broadcast rule follows.
+  *
+  * Which pairs get a dispatcher: only pairs whose variants are
+  * result-equal under the pair's own oracle (so the pick is hash-gated)
+  * and that have a measured crossover inside the testable decades. Two
+  * pairs fail one leg each, deliberately:
+  *  - q65b/q65c: no crossover — the bounded MG form is exact end-to-end
+  *    and faster at every measured scale (BASELINE "q65 pair").
+  *  - q143/q143b: not result-equal — the LSH-shortlist form is approximate
+  *    by construction. Exact-vs-approximate is a contract the caller
+  *    declares, not a plan equivalence a dispatcher may pick; the same
+  *    holds for q26/q26b-style sketch swaps and q219's quantiles.
   */
 object Dispatch {
 
-  // Which pairs get a dispatcher — the closure argument (round 11):
-  // a dispatcher is REGISTERED only where (a) both variants are
-  // result-equal under the pair's own oracle, so the pick can be
-  // hash-gated (q182/q182b, q203/q203b, q169/q169b, q149/q149b), and
-  // (b) a measured crossover exists inside the testable decades. The
-  // two remaining pairs fail one leg each, deliberately:
-  //  - q65b/q65c: no crossover — the bounded MG form is exact
-  //    end-to-end and faster at every measured scale (BASELINE "q65
-  //    pair"); a dispatcher needs two regimes to arbitrate.
-  //  - q143/q143b: not result-equal — the LSH-shortlist form is
-  //    approximate BY CONSTRUCTION (recall pinned in LlmSpec, separate
-  //    golden). Flipping between different result SETS on a size signal
-  //    would silently change answer quality; exact-vs-approximate is a
-  //    contract the CALLER declares (the bits/tables knobs), not a plan
-  //    equivalence a dispatcher may pick. Same reasoning keeps
-  //    q26/q26b-style sketch swaps and q219's exact-vs-approx quantile
-  //    out of dispatch scope.
-
-  /** In-memory HashedRelation cost per broadcast label row: 16-byte
-    * two-long UnsafeRow + row header + LongToUnsafeRowMap slot/array
-    * overhead ≈ 48–80 B measured; 64 is the decade-accurate middle. */
+  // ------------------------------------------------------ broadcast rule
+  /** In-memory HashedRelation cost per broadcast row: 16-byte two-long
+    * UnsafeRow + row header + LongToUnsafeRowMap slot/array overhead
+    * ≈ 48–80 B measured; 64 is the decade-accurate middle. The rules
+    * price ROWS, not the planner's compressed-bytes stat: parquet's
+    * `sizeInBytes` prices q182's label frame at ~1.4 MB at sf10, while the
+    * hashed relation that actually OOMs there is ~100 MB. */
   val BroadcastBytesPerRow = 64L
 
-  /** Upper-bound estimate of the LPA label frame in bytes. Nodes ≤
-    * |customer| + |supplier| (the graph's node population is
-    * custkey ⊎ suppkey); counts come from parquet footers — no column
-    * data is read. */
-  def lpaLabelFrameBytes(s: SparkSession, d: String): BigInt =
-    BigInt(Tables.customer(s, d).count() + Tables.supplier(s, d).count()) *
-      BroadcastBytesPerRow
-
-  /** The session's broadcast threshold in bytes (≤0, e.g. "-1" =
-    * broadcast disabled, which forces the co-partitioned plan — the
-    * right degenerate case). Accepts both plain-number and "10MB"-style
-    * spellings, like the conf itself. */
-  def broadcastThresholdBytes(s: SparkSession): Long = {
-    val raw = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    try raw.trim.toLong
-    catch { case _: NumberFormatException =>
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-    }
+  /** True when a `rows`-row frame fits the session's broadcast threshold
+    * (`spark.sql.autoBroadcastJoinThreshold`; ≤ 0, i.e. broadcast
+    * disabled, is never broadcast-sized). At the default 10 MB the flip is
+    * at ~160k rows — ≈ sf1 for the custkey ⊎ suppkey node population,
+    * inside q182's measured bracket (wins at sf0.1, OOMs at sf10/8 GiB). */
+  def broadcastSized(s: SparkSession, rows: BigInt): Boolean = {
+    val t = s.sessionState.conf.autoBroadcastJoinThreshold
+    t > 0 && rows * BroadcastBytesPerRow <= t
   }
 
-  /** Which LPA plan the dispatcher would run — exposed for the flip spec
-    * and for plan audits. */
-  def chooseLabelProp(s: SparkSession, d: String): String = {
-    val t = broadcastThresholdBytes(s)
-    if (t > 0 && lpaLabelFrameBytes(s, d) <= t) "broadcast" else "copart"
-  }
+  /** Upper bound of the LPA/assortativity node population: nodes ≤
+    * |customer| + |supplier| (the graphs' nodes are custkey ⊎ suppkey).
+    * Counts come from parquet footers — no column data is read. */
+  def graphNodeRows(s: SparkSession, d: String): BigInt =
+    BigInt(Tables.customer(s, d).count() + Tables.supplier(s, d).count())
 
-  /** q182c — label propagation with automatic plan selection, gated by
-    * q182's own unrolled-CTE oracle (both variants are oracle-equal, so
-    * whichever side the dispatcher picks must hash-match). */
+  /** q182c — label propagation: q182 force-broadcasts the node-sized
+    * label frame into all ten phase joins, so it is right exactly while
+    * that frame is broadcast-sized; past it, q182b's co-partitioned
+    * phases. Gated by q182's unrolled-CTE oracle (both variants pass it). */
   def labelPropAuto(s: SparkSession, d: String): DataFrame =
-    if (chooseLabelProp(s, d) == "broadcast") Relational11.q182(s, d)
+    if (broadcastSized(s, graphNodeRows(s, d))) Relational11.q182(s, d)
     else Relational11.q182b(s, d)
 
-  // ------------------------------------------------------------ q203c
-  /** Second instance, same decision input as q182c: assortativity
-    * (q203 naive-corr vs q203b bucketed-moment). q203's own scaladoc
-    * states the boundary — "the degree table broadcasts up to ~sf5 (no
-    * edge exchange at all) and falls back to SMJ where the node table
-    * outgrows the broadcast threshold (the edge-frame sorts then
-    * dominate)" — so the dispatch signal IS the session's broadcast
-    * threshold applied to the node frame, exactly like the LPA pair:
-    * while the degree table is broadcast-sized the naive shape touches
-    * the edge frame with zero exchange and q203b's one-time bucket
-    * write is pure overhead (sf0.1: 1.4 s vs 4.5 s); once it is not,
-    * the naive SMJ's two edge-frame sorts dominate spill-bound and the
-    * bucketed moment plan wins (sf5: 64 vs 86 s; sf10: 132 vs 248 s,
-    * 1.89× — BASELINE.md round 9). Node population is the same
-    * custkey ⊎ suppkey set as LPA's, so the estimate is shared. */
-  def chooseAssortativity(s: SparkSession, d: String): String = {
-    val t = broadcastThresholdBytes(s)
-    if (t > 0 && lpaLabelFrameBytes(s, d) <= t) "naive" else "bucketed"
-  }
-
-  /** q203c — assortativity with automatic plan selection, gated by
-    * q203's corr-form oracle (the moment form is algebraically the same
-    * Pearson r; both variants pass their DuckDB twins, and DispatchSpec
-    * asserts cross-variant equality of the rounded output). */
+  /** q203c — assortativity: while the degree table is broadcast-sized the
+    * naive corr shape (q203) touches the edge frame with no exchange and
+    * q203b's bucket write is pure overhead (sf0.1: 1.4 vs 4.5 s); past it
+    * the naive SMJ's two edge-frame sorts dominate and the bucketed moment
+    * form wins (sf5: 64 vs 86 s; sf10: 132 vs 248 s, BASELINE.md). The
+    * node population is LPA's. Gated by q203's corr-form oracle. */
   def assortativityAuto(s: SparkSession, d: String): DataFrame =
-    if (chooseAssortativity(s, d) == "naive") Relational11.q203(s, d)
+    if (broadcastSized(s, graphNodeRows(s, d))) Relational11.q203(s, d)
     else Relational11.q203b(s, d)
 
-  // ------------------------------------------------------------ q169c
-  /** Third instance, a different CLASS of decision input: the exact
-    * containment counting join (q169) vs the asymmetric prefix filter
-    * (q169b) cross over on posting-list SKEW, which no footer metadata
-    * reveals — so the dispatcher runs a one-pass stats PROBE (the
-    * ANALYZE-TABLE analogy) before choosing.
-    *
-    * The signal is ρ = Σdf²/Σdf over the shingle document frequencies:
-    * the counting join materializes exactly Σdf² candidate rows from
-    * Σdf posting rows, so ρ is the join's per-posting amplification.
-    * Measured (round 10, this corpus family): ρ is SCALE-INVARIANT
-    * under duplicate-free growth — 5.89 at sf0.1 and at R=10 and R=100
-    * disjoint replication alike (replication preserves the df
-    * distribution) — and grows only with real skew: 9.72 at zipf R=10,
-    * ~58 extrapolated at zipf R=100 (the corpus where round 9 measured
-    * q169 at 5.85× wall vs q169b's 1.08×). The measured walls cross at
-    * the disjoint point (q169 23.0 s ≈ q169b 23.3 s at sf1, ρ=5.89)
-    * and diverge by zipf R=10 (134.4 vs 25.1 s at sf1z, ρ=9.72), so
-    * the default κ=8 sits between the measured-equal and
-    * measured-blowup points. Probe cost is one shingle+groupBy pass —
-    * O(corpus), vs the O(Σdf²) it prevents; both variants re-shingle
-    * anyway, so the probe adds one of three scans, and at 100 TB it is
-    * the same bargain ANALYZE TABLE buys every CBO decision. */
-  val ContainmentMaxMeanPostingsKey = "graft.dispatch.containment.maxMeanPostings"
+  // ----------------------------------------------------------- skew rule
+  /** κ: the largest posting-skew ρ at which the exact counting join still
+    * runs. ρ is scale-invariant under duplicate-free growth (5.89 at sf0.1
+    * and at R=10/R=100 disjoint replication alike) and grows only with
+    * real skew (9.72 at zipf R=10). q169 and q169b walls are equal at
+    * ρ=5.89 (23.0 vs 23.3 s at sf1) and 5.4× apart at ρ=9.72 (134.4 vs
+    * 25.1 s at sf1z); κ sits between (BASELINE.md). */
+  val MaxMeanPostings = 8.0
 
-  /** ρ over an already-built posting frame (one agg — no extra scan). */
-  private def rhoFromEx(ex: DataFrame): Double = {
-    import org.apache.spark.sql.functions._
+  /** ρ = Σdf²/Σdf over the document frequencies of a hashed posting frame
+    * (`Dedup.postings`): the counting join materializes Σdf² candidate rows
+    * from Σdf postings, so ρ is its per-posting amplification, which no
+    * footer metadata reveals. One keyed aggregate over the frame. */
+  private[graft] def rhoFromEx(ex: DataFrame): Double = {
     val r = ex.groupBy("shk").agg(count(lit(1)).as("df"))
       .agg(sum(col("df")).as("postings"),
         sum(col("df") * col("df")).as("sum_df2")).head()
@@ -157,79 +97,33 @@ object Dispatch {
     else r.getLong(1).toDouble / r.getLong(0).toDouble
   }
 
-  /** ρ = Σdf²/Σdf over 3-shingle dfs of the q169 slice (even doc_ids). */
-  def containmentSkewRho(s: SparkSession, d: String): Double = {
-    import org.apache.spark.sql.functions._
-    val docs = Tables.documents(s, d).filter(col("doc_id") % 2 === 0)
-    rhoFromEx(graft.llm.Dedup.shingledN(docs, 3)
-      .select(col("doc_id"), explode_outer(col("sh")).as("shingle"))
-      .select(xxhash64(col("shingle")).as("shk")))
+  /** The skew rule: past κ the prefix filter (q169b) or MinHash
+    * candidates (q149b) beat the Σdf² counting join. */
+  def skewed(rho: Double): Boolean = rho > MaxMeanPostings
+
+  /** The q169c shingle frame and its posting frame over q169's slice
+    * (even doc_ids). The posting frame is materialized once
+    * (localCheckpoint — the materialization q169b performs anyway): the
+    * probe is one aggregate over it and the chosen variant consumes the
+    * same frame. Measured at sf0.1, probing with a separate re-shingling
+    * pass cost 3.0× q169's wall. */
+  private[graft] def containmentFrames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val sh = Dedup.shingledN(Tables.documents(s, d).filter(col("doc_id") % 2 === 0), 3)
+    (sh, Dedup.postings(sh).localCheckpoint(true))
   }
 
-  def chooseContainment(s: SparkSession, d: String): String = {
-    val kappa = s.conf.get(ContainmentMaxMeanPostingsKey, "8.0").toDouble
-    if (containmentSkewRho(s, d) <= kappa) "exact" else "prefix"
-  }
-
-  /** q169c — containment with automatic plan selection, gated by q169's
-    * exact oracle (q169b is row-identical by the prefix theorem, spec-
-    * proven in LlmSpec, so either pick must hash-match).
-    *
-    * The probe SHARES the variants' scan: the posting frame
-    * (doc_id, n_sh, shk) is materialized once (localCheckpoint — the
-    * same materialization q169b performs anyway), ρ is one aggregate
-    * over it, and the chosen variant consumes the SAME frame. Measured
-    * at sf0.1: the naive three-scan spelling cost 3.0× q169's wall; the
-    * shared-scan spelling prices the probe at one keyed agg — the
-    * ANALYZE-TABLE bargain every CBO decision buys. */
+  /** q169c — containment by the skew rule: q169b's prefix filter when
+    * skewed, else q169's exact counting join. Gated by q169's exact
+    * oracle (q169b is row-identical by the prefix theorem, LlmSpec-proven). */
   def containmentAuto(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val kappa = s.conf.get(ContainmentMaxMeanPostingsKey, "8.0").toDouble
-    val docs = Tables.documents(s, d).filter(col("doc_id") % 2 === 0)
-    val sh = graft.llm.Dedup.shingledN(docs, 3)
-    val ex = sh.select(col("doc_id"), size(col("sh")).as("n_sh"),
-        explode_outer(col("sh")).as("shingle"))
-      .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("shk"))
-      .localCheckpoint(true)
-    if (rhoFromEx(ex) <= kappa) graft.llm.Dedup.containmentJoinFromEx(ex, 0.9)
-    else graft.llm.Dedup.containmentPrefixFromShEx(sh, ex, 0.9)
+    val (sh, ex) = containmentFrames(s, d)
+    if (skewed(rhoFromEx(ex))) Dedup.containmentPrefixFromShEx(sh, ex, 0.9)
+    else Dedup.containmentJoinFromEx(ex, 0.9)
   }
 
-  // ------------------------------------------------------------ q149c
-  /** Fourth instance — curate()'s stage-2 near-dup strategy (exact
-    * trigram-Jaccard counting join vs banded-MinHash + exact confirm),
-    * the one lever pair round 10 still picked by hand (VERDICT-r10
-    * "What's missing #2"). Decision input: the SAME ρ = Σdf²/Σdf
-    * posting-skew probe as q169c, computed over the quality-gate
-    * SURVIVORS — the stage's actual input, which curate() has already
-    * localCheckpoint'ed, so the probe is one shingle+agg pass over a
-    * cached frame (the shared-scan bargain q169c measured at ~1 agg).
-    * The counting join's pair work is Σdf² (q55 family: 6.39× wall at
-    * 5.30× Σdf², BASELINE.md) while minhash stays flat (q149b 1.11× on
-    * the same corpus), and ρ is the same scale-invariant amplification
-    * signal — so the κ default is shared with containment's measured
-    * band (equal walls at ρ=5.89 disjoint, blowup by ρ=9.72 zipf). */
-  val CurateMaxMeanPostingsKey = "graft.dispatch.curate.maxMeanPostings"
-
-  /** ρ = Σdf²/Σdf over word-3-shingle postings of any (doc_id, text)
-    * frame — the per-posting candidate amplification of the exact
-    * counting join (identical shingle semantics to ngramJaccardOf). */
-  def ngramSkewRho(docs: DataFrame): Double = {
-    import org.apache.spark.sql.functions._
-    rhoFromEx(graft.llm.Dedup.shingledN(docs, 3)
-      .select(explode_outer(col("sh")).as("shingle"))
-      .select(xxhash64(col("shingle")).as("shk")))
-  }
-
-  def chooseCurateDedup(s: SparkSession, survivors: DataFrame): String = {
-    val kappa = s.conf.get(CurateMaxMeanPostingsKey, "8.0").toDouble
-    if (ngramSkewRho(survivors) <= kappa) "exact" else "minhash"
-  }
-
-  /** q149c — the full curation composition with the dedup stage picked
-    * by the ρ probe, gated by the SAME composed oracle both variants
-    * already pass (q149/q149b's funnel equivalence is CurationSpec-
-    * pinned: LSH recall ≈ 1 at J ≥ 0.4 under the widened banding). */
+  /** q149c — the curation composition with its dedup stage picked by the
+    * skew rule (see `Curation.curate`), gated by the composed oracle
+    * q149/q149b both pass. */
   def curateAuto(s: SparkSession, d: String): DataFrame =
     graft.llm.Curation.curate(s, d, candidates = "auto")
 

@@ -80,33 +80,20 @@ object SemiJoin {
       weekOrders(s, d).hint("shuffle_merge"),
       col("l_orderkey") === col("o_orderkey")))
 
-  /** Which join regime the dispatcher would run — exposed for the
-    * DispatchSpec flip test and plan audits. The decision input is the
-    * q182c/q203c one: filtered-dim row count × the measured in-memory
-    * HashedRelation cost per row, against the session's OWN broadcast
-    * threshold. Below it, the right plan is the plain join with no hint
-    * and no bloom — Catalyst broadcasts the dim, the fact never shuffles,
-    * and a bloom would only add its build cost to a map-side plan. Above
-    * it (or with broadcast disabled), the join must shuffle, and the
-    * bloom prefilter is what keeps the fact exchange proportional to
-    * matches instead of to the corpus. */
-  def chooseSemiJoin(s: SparkSession, d: String, dimRows: Long): String = {
-    val t = Dispatch.broadcastThresholdBytes(s)
-    if (t > 0 && BigInt(dimRows) * Dispatch.BroadcastBytesPerRow <= t)
-      "broadcast"
-    else "bloom"
-  }
-
-  /** q227c — semi-join reduction with automatic regime selection, gated
-    * by the pair's shared oracle (all three registrations are
-    * result-equal, so whichever plan the dispatcher picks must
-    * hash-match). The dim count doubles as the probe AND the bloom's
-    * honest sizing input, so the dispatcher adds no work the bloom path
-    * wasn't already paying (the q149c pricing lesson, at zero premium). */
+  /** q227c — semi-join reduction by the broadcast rule over the filtered
+    * dim's row count. While the dim is broadcast-sized the right plan is
+    * the plain join with no hint and no bloom: Catalyst broadcasts the
+    * dim, the fact never shuffles, and a bloom would only add its build
+    * cost. Past it (or with broadcast disabled) the join must shuffle,
+    * and the bloom prefilter keeps the fact exchange proportional to
+    * matches instead of to the corpus. The dim count doubles as the
+    * bloom's sizing input, so the rule costs the bloom path nothing.
+    * Gated by the shared oracle (all three registrations are
+    * result-equal). */
   def autoSemiJoin(s: SparkSession, d: String): DataFrame = {
     val dim = weekOrders(s, d).localCheckpoint(true)
     val n = dim.count()
-    if (chooseSemiJoin(s, d, n) == "broadcast")
+    if (Dispatch.broadcastSized(s, n))
       revenueAgg(Tables.lineitem(s, d)
         .join(dim, col("l_orderkey") === col("o_orderkey")))
     else {

@@ -322,19 +322,21 @@ object Relational11 {
     * stream. Same ulp-at-the-threshold tolerance as q108 (the flag
     * compares bit-identical double pipelines on both engines). */
   private def q164(s: SparkSession, d: String): DataFrame = {
-    Tables.events(s, d).createOrReplaceTempView("ev_mad")
-    val med = s.sql(
-      """SELECT event_type,
-        |  percentile_cont(0.5) WITHIN GROUP (ORDER BY value) AS med
-        |FROM ev_mad GROUP BY event_type""".stripMargin)
-    Tables.events(s, d).join(med, "event_type")
+    val med = Tables.withTempViews(s, "ev_mad" -> Tables.events(s, d)) {
+      s.sql(
+        """SELECT event_type,
+          |  percentile_cont(0.5) WITHIN GROUP (ORDER BY value) AS med
+          |FROM ev_mad GROUP BY event_type""".stripMargin)
+    }
+    val dev = Tables.events(s, d).join(med, "event_type")
       .withColumn("adev", abs(col("value") - col("med")))
-      .createOrReplaceTempView("ev_mad_dev")
-    val mad = s.sql(
-      """SELECT event_type,
-        |  percentile_cont(0.5) WITHIN GROUP (ORDER BY adev) AS mad
-        |FROM ev_mad_dev GROUP BY event_type""".stripMargin)
-    s.table("ev_mad_dev").join(mad, "event_type")
+    val (devView, mad) = Tables.withTempViews(s, "ev_mad_dev" -> dev) {
+      (s.table("ev_mad_dev"), s.sql(
+        """SELECT event_type,
+          |  percentile_cont(0.5) WITHIN GROUP (ORDER BY adev) AS mad
+          |FROM ev_mad_dev GROUP BY event_type""".stripMargin))
+    }
+    devView.join(mad, "event_type")
       // mad = 0 (≥50% of a group identical) would give rz = ±Infinity in
       // Spark while DuckDB's x/0 is NULL — filter the degenerate groups
       // out identically on both sides (a zero-MAD group has no meaningful
@@ -580,7 +582,7 @@ object Relational11 {
   /** One LPA phase — shared by q182 (broadcast regime) and q182b
     * (co-partitioned regime), and exposed to Explain/PlanQualitySpec so
     * the ITERATED plan (not just the post-checkpoint tail) is what gets
-    * dumped and swept. r12 change (guide §2.3/§2.4): the plurality argmax
+    * dumped and swept. The plurality argmax
     * is a SECOND aggregate ending in max_by over struct(wsum, -lbl) — the
     * same exact-BIGINT "largest wsum, smallest lbl" pick the old
     * row_number window computed ((dst,lbl) is the group key, so no
@@ -670,13 +672,12 @@ object Relational11 {
     * threshold it wins (no label exchange at all) — the pair is the same
     * measured lever ladder as q169/q169b: pick by node-table size.
     *
-    * r13 (VERDICT-r12 #2): the edge frame is now written ONCE as a
-    * BUCKETED table (the q203b machinery) instead of repartition+persist.
-    * The r12 plan dump exposed that the persisted frame's hash(src)
+    * The edge frame is written ONCE as a BUCKETED table (the q203b
+    * machinery), not repartition+persist: a persisted frame's hash(src)
     * partitioning is NOT recognized through the AQE-wrapped
-    * InMemoryRelation (plans/r12/q182b_..._after.txt, Exchange (31)
-    * ENSURE_REQUIREMENTS re-shuffling the cached edges), so every one of
-    * the 10 phases re-exchanged the EDGE-SCALE frame. A bucketed scan
+    * InMemoryRelation (an ENSURE_REQUIREMENTS Exchange re-shuffles the
+    * cached edges, plans/r12/q182b_..._after.txt), so every one of the
+    * 10 phases would re-exchange the EDGE-SCALE frame. A bucketed scan
     * reports hash(src, 32) statically, so each phase's contrib join
     * consumes the edge side with zero exchange — at 100 TB the corpus-
     * scale frame moves exactly once (the bucket write), never per phase. */
@@ -1001,8 +1002,8 @@ object Relational11 {
     * step) — the q163 reproducibility requirement: the draw replays
     * bit-identically on both engines and any cluster size. The hash is
     * pre-reduced modular arithmetic ((cur mod p)·(A mod p) …) so no
-    * product exceeds ~1e12 — the ADVICE-r07 overflow lesson applied at
-    * design time instead of patched later.
+    * product exceeds ~1e12 (a BIGINT product of two hashes would
+    * overflow).
     *
     * Scale shape: the adjacency is ONE ROW PER NODE holding its sorted
     * neighbor array (stable indices via element_at — no per-node rank
@@ -1131,7 +1132,7 @@ object Relational11 {
       .select(col("cust"), lit(1.0).as("h"))
     var auth: DataFrame = null
     for (_ <- 1 to HitsRounds) {
-      // checkpoint the RAW score frame, not the normalized one (r12):
+      // checkpoint the RAW score frame, not the normalized one:
       // normalizing under broadcast(max) references the raw subtree twice
       // (once inside the broadcast's agg, once in the main pass), so
       // checkpointing after the division was executing every half-step's
@@ -1434,8 +1435,8 @@ object Relational11 {
     *
     * Hours with NO data in their 24-hour lookback — the first hour of
     * every series, and the restart hours of a feed that went quiet for
-    * >24 h — are KEPT with null ewma / null out_of_control (left join,
-    * ADVICE-r08): an inner join silently dropped exactly the rows a
+    * >24 h — are KEPT with null ewma / null out_of_control (left
+    * join): an inner join silently dropped exactly the rows a
     * restart monitor most needs to see; null flags them as
     * "no baseline yet" rather than pretending they're in control. */
   private val EwmaLag = 24
@@ -1589,8 +1590,8 @@ object Relational11 {
         count(lit(1)).as("n_keys"),
         sum("c").as("n_rows"),
         // both HHI factors go through double BEFORE the product: a BIGINT
-        // sum(c)*sum(c) silently overflows past ~3e9 rows (ADVICE-r08; the
-        // same overflow class the q204 AUC denominator guards against)
+        // sum(c)*sum(c) silently overflows past ~3e9 rows (the same
+        // overflow class the q204 AUC denominator guards against)
         round(sum(col("c").cast("double") * col("c"))
           / (sum(col("c")).cast("double") * sum("c")), 6).as("hhi"),
         round(max("c").cast("double") / sum("c"), 6).as("top1_share"),

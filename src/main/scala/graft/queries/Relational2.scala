@@ -268,14 +268,14 @@ object Relational2 {
   // ---------------------------------------------------------------- q46
   /** Correlated scalar subquery through the SQL surface (Catalyst rewrites
     * it into an aggregate + join). */
-  private def q46(s: SparkSession, d: String): DataFrame = {
-    Tables.part(s, d).createOrReplaceTempView("part")
-    s.sql(
-      """SELECT p_partkey, p_type, round(p_retailprice, 2) AS price
-        |FROM part p
-        |WHERE p_retailprice > (SELECT avg(p_retailprice) * 1.05 FROM part
-        |                       WHERE p_type = p.p_type)""".stripMargin)
-  }
+  private def q46(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "part_sq" -> Tables.part(s, d)) {
+      s.sql(
+        """SELECT p_partkey, p_type, round(p_retailprice, 2) AS price
+          |FROM part_sq p
+          |WHERE p_retailprice > (SELECT avg(p_retailprice) * 1.05 FROM part_sq
+          |                       WHERE p_type = p.p_type)""".stripMargin)
+    }
 
   private val q46Sql =
     """SELECT p_partkey, p_type, round(p_retailprice, 2) AS price
@@ -297,7 +297,7 @@ object Relational2 {
           .as("qs"),
         expr("percentile(l_extendedprice, 0.5)").as("exact_median"))
       // scalar columns only: the driver's rows-only check sorts the result in
-      // pandas, and an array column is unhashable there (round-1 failure)
+      // pandas, and an array column is unhashable there
       .select(col("l_returnflag"),
         element_at(col("qs"), 1).as("approx_p25"),
         element_at(col("qs"), 2).as("approx_p50"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, MapType, StringType}
 import graft.core.Tables
 
-/** Round-3 widening of the declared surface (SURVEY §2B): grouping sets,
+/** A widening of the declared surface (SURVEY §2B): grouping sets,
   * unpivot, the map higher-order family, string/date scalar completions,
   * bitwise scalars + aggregates, try_-safe functions, and the custom-UDAF
   * two-pass heavy-hitters operator built on `graft.functions.MisraGries`.
@@ -16,15 +16,15 @@ object Relational6 {
   /** GROUPING SETS with grouping() flags — the general form of q11's rollup
     * and q23's cube (each set is one map-side partial aggregation; Spark
     * expands then aggregates, no extra shuffle per set). */
-  private def q63(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("orders_gs")
-    s.sql("""SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-            |       CAST(grouping(o_orderstatus) AS INT) AS g_status,
-            |       CAST(grouping(o_orderpriority) AS INT) AS g_prio
-            |FROM orders_gs
-            |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-            |                        (o_orderstatus), ())""".stripMargin)
-  }
+  private def q63(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "orders_gs" -> Tables.orders(s, d)) {
+      s.sql("""SELECT o_orderstatus, o_orderpriority, count(*) AS n,
+              |       CAST(grouping(o_orderstatus) AS INT) AS g_status,
+              |       CAST(grouping(o_orderpriority) AS INT) AS g_prio
+              |FROM orders_gs
+              |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
+              |                        (o_orderstatus), ())""".stripMargin)
+    }
 
   private val q63Sql =
     """SELECT o_orderstatus, o_orderpriority, count(*) AS n,

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
-/** Round-3 second widening (SURVEY §2B): the scale-pattern operators a
-  * 100 TB pipeline leans on — bloom-filter semi-join pre-filtering,
-  * mergeable HLL sketch aggregation (datasketches), LATERAL correlated
-  * top-k, the full regression/central-moment aggregate family, and the
-  * generator TVF family (posexplode_outer / sequence / stack / inline).
+/** The scale-pattern operators (SURVEY §2B) a 100 TB pipeline leans on —
+  * bloom-filter semi-join pre-filtering, mergeable HLL sketch aggregation
+  * (datasketches), LATERAL correlated top-k, the full regression/
+  * central-moment aggregate family, and the generator TVF family
+  * (posexplode_outer / sequence / stack / inline).
   */
 object Relational7 {
 
@@ -94,15 +94,15 @@ object Relational7 {
     * ranked window join (one shuffle on the correlation key), so the SQL
     * surface is per-row but the physical plan is the set-based shape that
     * scales; DuckDB runs the identical statement. */
-  private def q73(s: SparkSession, d: String): DataFrame = {
-    Tables.nation(s, d).createOrReplaceTempView("nation_l")
-    Tables.customer(s, d).createOrReplaceTempView("customer_l")
-    s.sql("""SELECT n.n_name, t.c_name, t.c_acctbal
-            |FROM nation_l n,
-            |LATERAL (SELECT c_name, c_acctbal FROM customer_l c
-            |         WHERE c.c_nationkey = n.n_nationkey
-            |         ORDER BY c_acctbal DESC, c_name LIMIT 2) t""".stripMargin)
-  }
+  private def q73(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "nation_l" -> Tables.nation(s, d),
+        "customer_l" -> Tables.customer(s, d)) {
+      s.sql("""SELECT n.n_name, t.c_name, t.c_acctbal
+              |FROM nation_l n,
+              |LATERAL (SELECT c_name, c_acctbal FROM customer_l c
+              |         WHERE c.c_nationkey = n.n_nationkey
+              |         ORDER BY c_acctbal DESC, c_name LIMIT 2) t""".stripMargin)
+    }
 
   private val q73Sql =
     """SELECT n.n_name, t.c_name, t.c_acctbal
@@ -255,14 +255,14 @@ object Relational7 {
   /** Ordered string aggregation: `listagg ... WITHIN GROUP (ORDER BY ...)`
     * (SQL:2016, new in Spark 4) — deterministic because the within-group
     * sort fixes concatenation order regardless of partitioning. */
-  private def q78(s: SparkSession, d: String): DataFrame = {
-    Tables.nation(s, d).createOrReplaceTempView("nation_la")
-    Tables.region(s, d).createOrReplaceTempView("region_la")
-    s.sql("""SELECT r_name, listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations,
-            |       count(*) AS n_nations
-            |FROM nation_la JOIN region_la ON n_regionkey = r_regionkey
-            |GROUP BY r_name""".stripMargin)
-  }
+  private def q78(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "nation_la" -> Tables.nation(s, d),
+        "region_la" -> Tables.region(s, d)) {
+      s.sql("""SELECT r_name, listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations,
+              |       count(*) AS n_nations
+              |FROM nation_la JOIN region_la ON n_regionkey = r_regionkey
+              |GROUP BY r_name""".stripMargin)
+    }
 
   private val q78Sql =
     """SELECT r_name, string_agg(n_name, ',' ORDER BY n_name) AS nations,

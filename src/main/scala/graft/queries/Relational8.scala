@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
-/** Round-3 final widening: the `DataFrameStatFunctions` exploration surface
+/** The `DataFrameStatFunctions` exploration surface
   * and the remaining window-function completions.
   */
 object Relational8 {
@@ -78,17 +78,17 @@ object Relational8 {
     * same partial-agg pass), bool_and/bool_or, count_if, and mode (made
     * unambiguous by a constructed 40% majority class — both engines break
     * frequency ties arbitrarily). */
-  private def q82(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("orders_fa")
-    s.sql("""SELECT o_orderstatus,
-            |  count(*) FILTER (WHERE o_totalprice > 100000) AS n_big,
-            |  round(sum(o_totalprice) FILTER (WHERE o_orderpriority = '1-URGENT'), 2) AS urgent_total,
-            |  bool_and(o_totalprice > 0) AS all_positive,
-            |  bool_or(o_totalprice > 400000) AS any_jumbo,
-            |  count_if(o_orderkey % 2 = 0) AS n_even,
-            |  mode(CASE WHEN o_orderkey % 10 < 4 THEN 'A' ELSE concat('B', o_orderkey % 10) END) AS common_bucket
-            |FROM orders_fa GROUP BY 1""".stripMargin)
-  }
+  private def q82(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "orders_fa" -> Tables.orders(s, d)) {
+      s.sql("""SELECT o_orderstatus,
+              |  count(*) FILTER (WHERE o_totalprice > 100000) AS n_big,
+              |  round(sum(o_totalprice) FILTER (WHERE o_orderpriority = '1-URGENT'), 2) AS urgent_total,
+              |  bool_and(o_totalprice > 0) AS all_positive,
+              |  bool_or(o_totalprice > 400000) AS any_jumbo,
+              |  count_if(o_orderkey % 2 = 0) AS n_even,
+              |  mode(CASE WHEN o_orderkey % 10 < 4 THEN 'A' ELSE concat('B', o_orderkey % 10) END) AS common_bucket
+              |FROM orders_fa GROUP BY 1""".stripMargin)
+    }
 
   private val q82Sql =
     """SELECT o_orderstatus,
@@ -109,14 +109,14 @@ object Relational8 {
     * OR, and the final sum of per-bucket popcounts is EXACT — unlike HLL
     * (q72) there is no error to budget; unlike count(DISTINCT) there is no
     * per-key row expansion. */
-  private def q83(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("orders_bm")
-    s.sql("""SELECT o_orderstatus, sum(bucket_distinct) AS n_customers
-            |FROM (SELECT o_orderstatus, bitmap_bucket_number(o_custkey) AS bkt,
-            |             bitmap_count(bitmap_construct_agg(bitmap_bit_position(o_custkey))) AS bucket_distinct
-            |      FROM orders_bm GROUP BY 1, 2)
-            |GROUP BY 1""".stripMargin)
-  }
+  private def q83(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "orders_bm" -> Tables.orders(s, d)) {
+      s.sql("""SELECT o_orderstatus, sum(bucket_distinct) AS n_customers
+              |FROM (SELECT o_orderstatus, bitmap_bucket_number(o_custkey) AS bkt,
+              |             bitmap_count(bitmap_construct_agg(bitmap_bit_position(o_custkey))) AS bucket_distinct
+              |      FROM orders_bm GROUP BY 1, 2)
+              |GROUP BY 1""".stripMargin)
+    }
 
   private val q83Sql =
     """SELECT o_orderstatus, count(DISTINCT o_custkey) AS n_customers
@@ -128,19 +128,19 @@ object Relational8 {
     * empty months surface as zero rows (time-series completeness at the
     * lake level; the recursion is driver-cheap — 24 rows — while the fact
     * side stays a single shuffled aggregate). Identical SQL runs on DuckDB. */
-  private def q84(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("orders_rc")
-    s.sql("""WITH RECURSIVE months(m) AS (
-            |  SELECT CAST('1995-01-01' AS DATE)
-            |  UNION ALL
-            |  SELECT CAST(m + INTERVAL '1' MONTH AS DATE) FROM months
-            |  WHERE m < CAST('1996-12-01' AS DATE))
-            |SELECT m, count(o_orderkey) AS n_orders,
-            |       CAST(round(coalesce(sum(CAST(o_totalprice AS DECIMAL(18,2))), 0), 2) AS DOUBLE) AS month_total
-            |FROM months LEFT JOIN orders_rc
-            |  ON CAST(date_trunc('month', o_orderdate) AS DATE) = m
-            |GROUP BY m""".stripMargin)
-  }
+  private def q84(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "orders_rc" -> Tables.orders(s, d)) {
+      s.sql("""WITH RECURSIVE months(m) AS (
+              |  SELECT CAST('1995-01-01' AS DATE)
+              |  UNION ALL
+              |  SELECT CAST(m + INTERVAL '1' MONTH AS DATE) FROM months
+              |  WHERE m < CAST('1996-12-01' AS DATE))
+              |SELECT m, count(o_orderkey) AS n_orders,
+              |       CAST(round(coalesce(sum(CAST(o_totalprice AS DECIMAL(18,2))), 0), 2) AS DOUBLE) AS month_total
+              |FROM months LEFT JOIN orders_rc
+              |  ON CAST(date_trunc('month', o_orderdate) AS DATE) = m
+              |GROUP BY m""".stripMargin)
+    }
 
   private val q84Sql =
     """WITH RECURSIVE months(m) AS (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
-/** Round-3 continuation: SQL-surface completions — modern SQL sugar
+/** SQL-surface completions — modern SQL sugar
   * (GROUP/ORDER BY ALL), exact inverse-distribution percentiles, the regexp
   * scalar family, width_bucket histograms, remaining string scalars,
   * parse_url/str_to_map extraction, and EXISTS/NOT EXISTS decorrelation.
@@ -20,13 +20,13 @@ object Relational9 {
     * group by every non-aggregate select item, order by the full select
     * list. The plan is identical to the explicit q02 grouping — sugar must
     * not change the physical aggregation. */
-  private def q91(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d).createOrReplaceTempView("lineitem_gba")
-    s.sql(
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |       round(sum(l_quantity), 2) AS total_qty
-        |FROM lineitem_gba GROUP BY ALL ORDER BY ALL""".stripMargin)
-  }
+  private def q91(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "lineitem_gba" -> Tables.lineitem(s, d)) {
+      s.sql(
+        """SELECT l_returnflag, l_linestatus, count(*) AS n,
+          |       round(sum(l_quantity), 2) AS total_qty
+          |FROM lineitem_gba GROUP BY ALL ORDER BY ALL""".stripMargin)
+    }
 
   private val q91Sql =
     """SELECT l_returnflag, l_linestatus, count(*) AS n,
@@ -40,16 +40,16 @@ object Relational9 {
     * percentile_cont by another name (oracle: quantile_cont). Exact
     * percentiles are a full sort per group at scale — the approx_percentile
     * sketch (q26) is the 100 TB default; this is the exact-answer path. */
-  private def q92(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d).createOrReplaceTempView("lineitem_pct")
-    s.sql(
-      """SELECT l_returnflag,
-        |  round(percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity), 4) AS p50,
-        |  round(percentile_cont(0.9) WITHIN GROUP (ORDER BY l_quantity), 4) AS p90,
-        |  percentile_disc(0.25) WITHIN GROUP (ORDER BY l_quantity) AS p25_disc,
-        |  round(percentile(l_extendedprice, 0.5), 4) AS p50_price
-        |FROM lineitem_pct GROUP BY l_returnflag""".stripMargin)
-  }
+  private def q92(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "lineitem_pct" -> Tables.lineitem(s, d)) {
+      s.sql(
+        """SELECT l_returnflag,
+          |  round(percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity), 4) AS p50,
+          |  round(percentile_cont(0.9) WITHIN GROUP (ORDER BY l_quantity), 4) AS p90,
+          |  percentile_disc(0.25) WITHIN GROUP (ORDER BY l_quantity) AS p25_disc,
+          |  round(percentile(l_extendedprice, 0.5), 4) AS p50_price
+          |FROM lineitem_pct GROUP BY l_returnflag""".stripMargin)
+    }
 
   private val q92Sql =
     """SELECT l_returnflag,
@@ -165,18 +165,18 @@ object Relational9 {
     * decorrelates both into a left-semi and a left-anti join against the
     * same orders scan (q07/q08 proved the DataFrame spellings; this proves
     * the SQL path planner-level). Identical text runs on DuckDB. */
-  private def q97(s: SparkSession, d: String): DataFrame = {
-    Tables.customer(s, d).createOrReplaceTempView("customer_ex")
-    Tables.orders(s, d).createOrReplaceTempView("orders_ex")
-    s.sql(
-      """SELECT c_custkey, c_name
-        |FROM customer_ex c
-        |WHERE EXISTS (SELECT 1 FROM orders_ex o
-        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 250000)
-        |  AND NOT EXISTS (SELECT 1 FROM orders_ex o
-        |                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-        |""".stripMargin)
-  }
+  private def q97(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "customer_ex" -> Tables.customer(s, d),
+        "orders_ex" -> Tables.orders(s, d)) {
+      s.sql(
+        """SELECT c_custkey, c_name
+          |FROM customer_ex c
+          |WHERE EXISTS (SELECT 1 FROM orders_ex o
+          |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 250000)
+          |  AND NOT EXISTS (SELECT 1 FROM orders_ex o
+          |                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
+          |""".stripMargin)
+    }
 
   private val q97Sql =
     """SELECT c_custkey, c_name
@@ -191,16 +191,16 @@ object Relational9 {
     * templating surface — parameters are bound by the parser as literals,
     * never string-spliced (no injection, plan cache friendly). The oracle
     * is the same query with the literals inlined. */
-  private def q101(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d).createOrReplaceTempView("lineitem_prm")
-    s.sql(
-      """SELECT l_returnflag, count(*) AS n,
-        |       round(sum(l_extendedprice), 2) AS revenue
-        |FROM lineitem_prm
-        |WHERE l_quantity >= :minq AND l_shipdate < CAST(:cutoff AS TIMESTAMP_NTZ)
-        |GROUP BY l_returnflag""".stripMargin,
-      Map("minq" -> 30, "cutoff" -> "1997-01-01"))
-  }
+  private def q101(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "lineitem_prm" -> Tables.lineitem(s, d)) {
+      s.sql(
+        """SELECT l_returnflag, count(*) AS n,
+          |       round(sum(l_extendedprice), 2) AS revenue
+          |FROM lineitem_prm
+          |WHERE l_quantity >= :minq AND l_shipdate < CAST(:cutoff AS TIMESTAMP_NTZ)
+          |GROUP BY l_returnflag""".stripMargin,
+        Map("minq" -> 30, "cutoff" -> "1997-01-01"))
+    }
 
   private val q101Sql =
     """SELECT l_returnflag, count(*) AS n,
@@ -215,17 +215,17 @@ object Relational9 {
     * with FILTER aggregates — same plan Spark lowers PIVOT to (a groupBy
     * with one conditional aggregate per IN value; no extra shuffle vs the
     * plain aggregation). */
-  private def q102(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("orders_pv")
-    s.sql(
-      """SELECT o_orderpriority,
-        |       round(coalesce(f, 0), 2) AS rev_f,
-        |       round(coalesce(o, 0), 2) AS rev_o,
-        |       round(coalesce(p, 0), 2) AS rev_p
-        |FROM (SELECT o_orderpriority, o_orderstatus, o_totalprice FROM orders_pv)
-        |PIVOT (sum(o_totalprice) FOR o_orderstatus IN ('F' AS f, 'O' AS o, 'P' AS p))
-        |""".stripMargin)
-  }
+  private def q102(s: SparkSession, d: String): DataFrame =
+    Tables.withTempViews(s, "orders_pv" -> Tables.orders(s, d)) {
+      s.sql(
+        """SELECT o_orderpriority,
+          |       round(coalesce(f, 0), 2) AS rev_f,
+          |       round(coalesce(o, 0), 2) AS rev_o,
+          |       round(coalesce(p, 0), 2) AS rev_p
+          |FROM (SELECT o_orderpriority, o_orderstatus, o_totalprice FROM orders_pv)
+          |PIVOT (sum(o_totalprice) FOR o_orderstatus IN ('F' AS f, 'O' AS o, 'P' AS p))
+          |""".stripMargin)
+    }
 
   private val q102Sql =
     """SELECT o_orderpriority,

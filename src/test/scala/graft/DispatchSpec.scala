@@ -1,11 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dispatch
+import graft.operators.{Dispatch, SemiJoin}
 
-/** Pick-by-size dispatch (operators/Dispatch): the lever-pair selection
-  * must flip at the session's broadcast threshold, and the dispatched
-  * result must equal BOTH variants (they share one oracle). */
+/** Pick-by-size dispatch (operators/Dispatch): the broadcast rule must flip
+  * at the session's broadcast threshold, the skew rule at κ, and each
+  * dispatched result must equal BOTH variants (they share one oracle). */
 class DispatchSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
@@ -17,23 +17,29 @@ class DispatchSpec extends AnyFunSuite with LocalSpark {
     try body finally spark.conf.set(key, old)
   }
 
+  private def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.collect().map(_.mkString("|")).toSet
+
+  // ------------------------------------------------------ broadcast rule
+
   test("estimate is positive and decade-plausible at sf0.001") {
-    val b = Dispatch.lpaLabelFrameBytes(spark, sf)
-    // sf0.001: 150 customers + 10 suppliers — the label frame estimate
-    // must land well under a MB and above nothing
-    assert(b > 0 && b < (1 << 20), s"implausible label-frame estimate: $b")
+    val n = Dispatch.graphNodeRows(spark, sf)
+    // sf0.001: 150 customers + 10 suppliers — the priced frame must land
+    // well under a MB and above nothing
+    assert(n > 0 && n * Dispatch.BroadcastBytesPerRow < (1 << 20),
+      s"implausible node-row estimate: $n")
   }
 
   test("selection flips exactly at the broadcast threshold") {
-    val est = Dispatch.lpaLabelFrameBytes(spark, sf)
-    withThreshold((est * 2).toString) {
-      assert(Dispatch.chooseLabelProp(spark, sf) == "broadcast")
-    }
-    withThreshold(((est / 2).max(BigInt(1))).toString) {
-      assert(Dispatch.chooseLabelProp(spark, sf) == "copart")
-    }
-    withThreshold("-1") { // broadcast disabled → never pick the broadcast plan
-      assert(Dispatch.chooseLabelProp(spark, sf) == "copart")
+    val n = Dispatch.graphNodeRows(spark, sf)
+    val est = n * Dispatch.BroadcastBytesPerRow
+    withThreshold((est * 2).toString) { assert(Dispatch.broadcastSized(spark, n)) }
+    withThreshold(est.toString) { assert(Dispatch.broadcastSized(spark, n)) }
+    withThreshold((est - 1).toString) { assert(!Dispatch.broadcastSized(spark, n)) }
+    withThreshold((est / 2).toString) { assert(!Dispatch.broadcastSized(spark, n)) }
+    withThreshold("-1") { // broadcast disabled → never broadcast-sized
+      assert(!Dispatch.broadcastSized(spark, n))
+      assert(!Dispatch.broadcastSized(spark, 1))
     }
   }
 
@@ -41,22 +47,22 @@ class DispatchSpec extends AnyFunSuite with LocalSpark {
     // the measured bracket (BASELINE.md): q182 wins at sf0.1, OOMs at
     // sf10/8 GiB — the default 10 MB threshold must put the flip between
     withThreshold("10MB") {
-      assert(Dispatch.chooseLabelProp(spark, "/root/testdata/sf0.1") == "broadcast")
+      assert(Dispatch.broadcastSized(spark,
+        Dispatch.graphNodeRows(spark, "/root/testdata/sf0.1")))
       val sf10 = "testdata/sf10"
       if (new java.io.File(sf10).isDirectory)
-        assert(Dispatch.chooseLabelProp(spark, sf10) == "copart")
+        assert(!Dispatch.broadcastSized(spark, Dispatch.graphNodeRows(spark, sf10)))
     }
   }
 
   test("dispatched result equals both variants (either side of the flip)") {
-    def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.mkString("|")).toSet
+    val n = Dispatch.graphNodeRows(spark, sf)
     val broadcastSide = withThreshold("1GB") {
-      assert(Dispatch.chooseLabelProp(spark, sf) == "broadcast")
+      assert(Dispatch.broadcastSized(spark, n))
       canon(Dispatch.labelPropAuto(spark, sf))
     }
     val copartSide = withThreshold("1") {
-      assert(Dispatch.chooseLabelProp(spark, sf) == "copart")
+      assert(!Dispatch.broadcastSized(spark, n))
       canon(Dispatch.labelPropAuto(spark, sf))
     }
     assert(broadcastSide.nonEmpty)
@@ -64,30 +70,14 @@ class DispatchSpec extends AnyFunSuite with LocalSpark {
       "q182 and q182b disagree through the dispatcher")
   }
 
-  // ------------------------------------------------------------ q203c
-
-  test("assortativity selection flips at the broadcast threshold") {
-    val est = Dispatch.lpaLabelFrameBytes(spark, sf)
-    withThreshold((est * 2).toString) {
-      assert(Dispatch.chooseAssortativity(spark, sf) == "naive")
-    }
-    withThreshold(((est / 2).max(BigInt(1))).toString) {
-      assert(Dispatch.chooseAssortativity(spark, sf) == "bucketed")
-    }
-    withThreshold("-1") {
-      assert(Dispatch.chooseAssortativity(spark, sf) == "bucketed")
-    }
-  }
-
   test("assortativity dispatched result equals both variants") {
-    def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.mkString("|")).toSet
+    val n = Dispatch.graphNodeRows(spark, sf)
     val naive = withThreshold("1GB") {
-      assert(Dispatch.chooseAssortativity(spark, sf) == "naive")
+      assert(Dispatch.broadcastSized(spark, n))
       canon(Dispatch.assortativityAuto(spark, sf))
     }
     val bucketed = withThreshold("1") {
-      assert(Dispatch.chooseAssortativity(spark, sf) == "bucketed")
+      assert(!Dispatch.broadcastSized(spark, n))
       canon(Dispatch.assortativityAuto(spark, sf))
     }
     assert(naive.nonEmpty)
@@ -96,116 +86,69 @@ class DispatchSpec extends AnyFunSuite with LocalSpark {
     assert(naive == bucketed, "q203 and q203b disagree through the dispatcher")
   }
 
-  // ------------------------------------------------------------ q169c
-
-  test("containment skew probe: rho is in the measured disjoint band") {
-    // sf0.01 measured rho = 1.50 (duckdb cross-check, round 10) — far
-    // under the default kappa=8, so the gate corpus always picks exact
-    val rho = Dispatch.containmentSkewRho(spark, "/root/testdata/sf0.01")
-    assert(rho > 1.0 && rho < 3.0, s"rho out of measured band: $rho")
-    assert(Dispatch.chooseContainment(spark, "/root/testdata/sf0.01") == "exact")
+  test("semi-join selection flips at the broadcast threshold; both regimes oracle-equal") {
+    // any local-decade filtered dim (469 rows) is broadcast-sized at the
+    // default threshold, and never with broadcast disabled
+    val dimRows = 469
+    val sf01 = "/root/testdata/sf0.01"
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    val plain = rows(SemiJoin.plainSemiJoin(spark, sf01))
+    assert(Dispatch.broadcastSized(spark, dimRows))
+    assert(rows(SemiJoin.autoSemiJoin(spark, sf01)) == plain, "broadcast regime diverges")
+    withThreshold("-1") {
+      assert(!Dispatch.broadcastSized(spark, dimRows))
+      assert(rows(SemiJoin.autoSemiJoin(spark, sf01)) == plain, "bloom regime diverges")
+    }
   }
 
-  test("containment selection flips at the kappa threshold") {
-    val key = Dispatch.ContainmentMaxMeanPostingsKey
-    val rho = Dispatch.containmentSkewRho(spark, sf)
-    spark.conf.set(key, (rho * 2).toString)
-    try assert(Dispatch.chooseContainment(spark, sf) == "exact")
-    finally spark.conf.unset(key)
-    spark.conf.set(key, (rho / 2).toString)
-    try assert(Dispatch.chooseContainment(spark, sf) == "prefix")
-    finally spark.conf.unset(key)
+  // ----------------------------------------------------------- skew rule
+
+  test("skew rule flips just above and below kappa") {
+    val k = Dispatch.MaxMeanPostings
+    assert(Dispatch.skewed(math.nextUp(k)))
+    assert(!Dispatch.skewed(k))
+    assert(!Dispatch.skewed(math.nextDown(k)))
+    assert(!Dispatch.skewed(0.0)) // an empty posting frame
+  }
+
+  /** ρ by q169c's own probe over q169c's own posting frame. */
+  private def q169cRho(d: String): Double =
+    Dispatch.rhoFromEx(Dispatch.containmentFrames(spark, d)._2)
+
+  test("containment skew probe: rho is in the measured disjoint band") {
+    // sf0.01 measured rho = 1.50 (duckdb cross-check) — far under
+    // kappa=8, so the gate corpus always runs the exact counting join
+    val rho = q169cRho("/root/testdata/sf0.01")
+    assert(rho > 1.0 && rho < 3.0, s"rho out of measured band: $rho")
+    assert(!Dispatch.skewed(rho))
   }
 
   test("containment dispatched result equals both variants") {
-    def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.mkString("|")).toSet
-    val key = Dispatch.ContainmentMaxMeanPostingsKey
-    val exact = {
-      spark.conf.set(key, "1e18")
-      try { assert(Dispatch.chooseContainment(spark, sf) == "exact")
-            canon(Dispatch.containmentAuto(spark, sf)) }
-      finally spark.conf.unset(key)
-    }
-    val prefix = {
-      spark.conf.set(key, "0.0")
-      try { assert(Dispatch.chooseContainment(spark, sf) == "prefix")
-            canon(Dispatch.containmentAuto(spark, sf)) }
-      finally spark.conf.unset(key)
-    }
-    assert(exact == prefix, "q169 and q169b disagree through the dispatcher")
-  }
-
-  // ------------------------------------------------------------ q149c
-
-  test("curate dedup selection flips at the kappa threshold") {
-    val key = Dispatch.CurateMaxMeanPostingsKey
-    val docs = graft.core.Tables.documents(spark, sf).select("doc_id", "text")
-    val rho = Dispatch.ngramSkewRho(docs)
-    assert(rho > 1.0, s"implausible curate rho: $rho")
-    spark.conf.set(key, (rho * 2).toString)
-    try assert(Dispatch.chooseCurateDedup(spark, docs) == "exact")
-    finally spark.conf.unset(key)
-    spark.conf.set(key, (rho / 2).toString)
-    try assert(Dispatch.chooseCurateDedup(spark, docs) == "minhash")
-    finally spark.conf.unset(key)
-  }
-
-  test("curate dispatched funnel equals both variants") {
-    def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.mkString("|")).toSet
-    val key = Dispatch.CurateMaxMeanPostingsKey
-    val exact = {
-      spark.conf.set(key, "1e18")
-      try canon(Dispatch.curateAuto(spark, sf))
-      finally spark.conf.unset(key)
-    }
-    val minhash = {
-      spark.conf.set(key, "0.0")
-      try canon(Dispatch.curateAuto(spark, sf))
-      finally spark.conf.unset(key)
-    }
+    // both branch bodies over the one posting frame q169c builds
+    val (sh, ex) = Dispatch.containmentFrames(spark, sf)
+    val exact = canon(graft.llm.Dedup.containmentJoinFromEx(ex, 0.9))
+    val prefix = canon(graft.llm.Dedup.containmentPrefixFromShEx(sh, ex, 0.9))
     assert(exact.nonEmpty)
-    assert(exact == minhash, "q149 and q149b disagree through the dispatcher")
+    assert(exact == prefix, "q169 and q169b disagree through the dispatcher")
+    assert(canon(Dispatch.containmentAuto(spark, sf)) == exact)
   }
 
   test("containment calibration: zipf corpus flips to prefix at default kappa") {
     // testdata/sf1z (zipf R=10, gitignored scale corpus): measured
     // rho = 9.72 > kappa=8; disjoint replication stays at 5.89 < 8 at
-    // ANY R. Guarded: the corpus is regenerated per round, not committed.
+    // ANY R. Guarded: the corpus is regenerated, not committed.
     val z = "testdata/sf1z"
     if (new java.io.File(z).isDirectory) {
-      val rho = Dispatch.containmentSkewRho(spark, z)
+      val rho = q169cRho(z)
       assert(rho > 8.0 && rho < 12.0, s"zipf rho out of measured band: $rho")
-      assert(Dispatch.chooseContainment(spark, z) == "prefix")
+      assert(Dispatch.skewed(rho))
       val d = "testdata/sf1"
       if (new java.io.File(d).isDirectory) {
-        val rd = Dispatch.containmentSkewRho(spark, d)
+        val rd = q169cRho(d)
         assert(rd > 4.0 && rd < 8.0, s"disjoint rho out of measured band: $rd")
-        assert(Dispatch.chooseContainment(spark, d) == "exact")
+        assert(!Dispatch.skewed(rd))
       }
-    }
-  }
-
-  test("semi-join selection flips at the broadcast threshold; both regimes oracle-equal") {
-    import graft.operators.SemiJoin
-    // default 10 MB threshold: any local-decade filtered dim is broadcast-sized
-    assert(SemiJoin.chooseSemiJoin(spark, sf, dimRows = 469) == "broadcast")
-    // the flip is the session's own definition of broadcast-sized
-    withThreshold((468 * Dispatch.BroadcastBytesPerRow).toString) {
-      assert(SemiJoin.chooseSemiJoin(spark, sf, 469) == "bloom")
-    }
-    withThreshold("-1") { // broadcast disabled ⇒ must take the bloom+shuffle plan
-      assert(SemiJoin.chooseSemiJoin(spark, sf, 1) == "bloom")
-    }
-    // dispatched result equals the pair on BOTH sides of the flip
-    val sf01 = "/root/testdata/sf0.01"
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val plain = rows(SemiJoin.plainSemiJoin(spark, sf01))
-    assert(rows(SemiJoin.autoSemiJoin(spark, sf01)) == plain, "broadcast regime diverges")
-    withThreshold("-1") {
-      assert(rows(SemiJoin.autoSemiJoin(spark, sf01)) == plain, "bloom regime diverges")
     }
   }
 }
