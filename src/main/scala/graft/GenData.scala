@@ -89,8 +89,8 @@ object GenData {
     // vecsMode="bitext": a PLANTED-BITEXT embeddings corpus — the geometry
     // real CCMatrix-style mining runs on, which the default corpus
     // adversarially lacks (its cross-label pair cosines are 0.25–0.45, so
-    // the q143b LSH probe path loses to brute at every decade; VERDICT-r11
-    // #1 asked for the winning regime to be MEASURED, not asserted).
+    // the q143b LSH probe path loses to brute at every decade; this corpus
+    // is where its winning regime is measured, not asserted).
     // Construction, fully deterministic:
     //  - label-0 rows ("language X") are fresh unit hash-random vectors
     //    u(k), k = the row's rank within its label across all replicas —

@@ -1,51 +1,24 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions at the SQL surface, so
+/** Registers the engine's native expressions at the SQL surface, so
   * `spark.sql("SELECT rolling_hash(text) ...")` works next to the Column
-  * API. Install via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * API. The program itself calls them through the Column API; `install`
+  * is for sessions that want them in SQL.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (children: Seq[Expression]) => RollingHash(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (children: Seq[Expression]) => WordNgrams(children(0), children(1))))
-    // planner guard: never broadcast an exploded join side (Generate's size
-    // estimate is its child's — the fan-out is invisible to the planner)
-    ext.injectOptimizerRule(_ => graft.plans.PreferShuffleForExploded)
-  }
-}
-
 object GraftExtensions {
-  /** Runtime registration into an already-built session (extensions are
-    * otherwise only applied at session construction). The optimizer rule
-    * lands in `experimental.extraOptimizations` — the user-provided batch
-    * that runs after hint resolution, same placement as the injected form. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "rolling_hash" -> (e => RollingHash(e.head)),
+    "dot_product" -> (e => DotProduct(e(0), e(1))),
+    "word_ngrams" -> (e => WordNgrams(e(0), e(1))))
+
+  /** Registers every function in [[functions]] into an already-built
+    * session's function registry. */
+  def install(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_ngrams", exprs => WordNgrams(exprs(0), exprs(1)), "built-in")
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.PreferShuffleForExploded))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PreferShuffleForExploded
+    functions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in") }
   }
 }

@@ -22,9 +22,10 @@ import org.apache.spark.sql.graftshim.Shim
   * per row first). Codegen: GenerateExec only special-cases ExplodeBase and
   * Stack, so a custom generator evaluates via CodegenFallback — fine here
   * because the per-row work (byte-level split + concat) dominates, and the
-  * surrounding stages still codegen. The [[PreferShuffleForExploded]] rule
-  * applies to it like any Generate: its fan-out is invisible to the static
-  * size estimate, so its output must never be auto-broadcast.
+  * surrounding stages still codegen. Like any Generate, its fan-out is
+  * invisible to the static size estimate (the planner sizes its output by
+  * its input), so a join whose exploded side must not be broadcast says so
+  * with a per-call `hint("shuffle_hash")`, as `graft.llm.Dedup` does.
   *
   * Tokenization contract: split on single spaces, empty tokens preserved
   * (matches DuckDB `string_split(text, ' ')` — the oracle's tokenizer —

@@ -587,8 +587,8 @@ object Dedup {
     * acceleration of the SAME answer) this deliberately changes the
     * relation; in exchange the candidate join's input is provably linear
     * at ANY skew: Σ_{df≤C} df² ≤ C · postings, so the Σdf² blowup the
-    * zipf corpus measured on the uncapped joins (BASELINE.md skew-lever
-    * table: q55 at 6.4× wall for 5.3× Σdf²) is capped by construction.
+    * zipf corpus measured on the uncapped joins (q55 at 6.4× wall for
+    * 5.3× Σdf²) is capped by construction.
     * The cap is deterministic and DuckDB-expressible, so the full answer
     * is hash-gated — cap=5 bites at sf0.01 (29 shingles dropped, df ≤ 7)
     * as well as at the zipf head (df up to 190 at sf1z), keeping the

@@ -39,11 +39,10 @@ case class MediaFeatures(
   * streamed through it. Narrow transformation — at 100 TB this is pure
   * map-side work that scales with partition count.
   */
-/** Per-partition codec context — the round-12 fix for the sf10 multimodal
-  * wall inflation (VERDICT-r11 #2). The JDK's convenience entry points hide
-  * two per-call costs that are invisible at sf0.1 and dominate at 100× on a
-  * CLEAN window (they SHRINK under starvation, which is why the r10 starved
-  * run looked faster):
+/** Per-partition codec context, which keeps the multimodal walls linear
+  * at sf10. The JDK's convenience entry points hide two per-call costs
+  * that are invisible at sf0.1 and dominate at 100× on a CLEAN window
+  * (they SHRINK under starvation, so a starved run looks faster):
   *
   *  - `AudioSystem.getAudioInputStream` / `AudioSystem.write` walk the
   *    service-provider registry through `JDK13Services.getProviders`, a
@@ -701,11 +700,9 @@ object Multimodal {
     * id-set anchor — payloads are synthesized deterministically from ids,
     * so media identity ≡ id-set identity), Σ declared content units
     * (closed-form pixel/sample/frame-pixel counts from the id moduli),
-    * and Σ REAL encoded payload bytes. Purpose (VERDICT-r11 #7): corpus
-    * regen drift for the binary-column tables becomes CHECKABLE per scale
-    * — the r11 sf10 multimodal wall inflation could not be attributed
-    * between corpus drift and code because no payload-profile fixture
-    * existed. The first three columns pin the id set (drift there =
+    * and Σ REAL encoded payload bytes. Purpose: corpus regen drift for
+    * the binary-column tables becomes CHECKABLE per scale, so a multimodal
+    * wall change can be attributed to corpus drift or to code. The first three columns pin the id set (drift there =
     * GenData change); payload_bytes additionally pins the encoder path
     * (drift there with a stable id set = codec/JDK change). Pinned golden
     * at sf0.01 + scale goldens per decade after bit-stability diff. */

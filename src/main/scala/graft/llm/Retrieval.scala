@@ -188,8 +188,8 @@ object Retrieval {
 
   // CAST(sum AS BIGINT): DuckDB sum(BIGINT) is HUGEINT, which pandas
   // renders as float64 — the driver's dtype-sensitive hash then mismatches
-  // Spark's int64 even when every value is equal (the r03 q89/q90/q115/q120
-  // regression class). Every integer-sum oracle column must carry the cast.
+  // Spark's int64 even when every value is equal. Every integer-sum oracle
+  // column must carry the cast.
   val wordEntropySql: String =
     """WITH toks AS (
       |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word FROM documents

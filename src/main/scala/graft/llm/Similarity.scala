@@ -118,7 +118,7 @@ object Similarity {
 
   // ------------------------------------------------------------ q226/q226b
   /** Planted-twin near-dup frame: the registered measured lever for the
-    * q38 family at a REAL near-dup threshold (VERDICT-r11 stretch #8).
+    * q38 family at a REAL near-dup threshold.
     * The corpus's own pair cosines top out ≈ 0.47, so at threshold 0.9 the
     * raw table is empty — an empty-vs-empty oracle would prove nothing.
     * Instead every vec_id ≡ 0 (mod [[TwinEvery]]) gets a DETERMINISTIC

@@ -532,14 +532,13 @@ object TextAnalysis {
 
   /** q190b — the Heaps fit itself, hash-gated separately from the curve.
     *
-    * Round 9's lesson (VERDICT r09 "What's wrong #1"): q190 used to
-    * cross-join `round(regr_slope(ln V, ln N), 4)` onto all 50 curve rows,
-    * and at sf0.01 the fit sits at a degenerate exact-zero point (the
-    * synthetic vocabulary saturates in bucket 0, so β rounds to 0.0) — a
-    * float regression ON a rounding boundary, where any cross-engine /
-    * cross-version last-ulp difference flips the whole frame's hash. The
-    * driver gate failed in r09 on exactly that while both local DuckDB
-    * layouts matched bit-for-bit. So: the curve (exact integers, engine-
+    * Why the fit is its own query: cross-joined onto all 50 curve rows,
+    * `round(regr_slope(ln V, ln N), 4)` sits at sf0.01 on a degenerate
+    * exact-zero point (the synthetic vocabulary saturates in bucket 0, so
+    * β rounds to 0.0) — a float regression ON a rounding boundary, where
+    * any cross-engine / cross-version last-ulp difference flips the whole
+    * frame's hash, even when local DuckDB layouts match bit-for-bit. So:
+    * the curve (exact integers, engine-
     * independent) keeps the DuckDB oracle above; the fit moves HERE and is
     * pinned as a bit-stability-checked golden (`pin_goldens.py`, the
     * repo's established mechanism for engine-float values — the oracle is
@@ -735,9 +734,8 @@ object TextAnalysis {
       .withColumn("c", col("n1") - col("a"))
       .withColumn("dd", col("n") - col("a") - col("b") - col("c"))
     // all products in DOUBLE: the 4-way marginal product reaches N⁴ and
-    // a·d reaches N², both past BIGINT at corpus scale (the ADVICE-r07
-    // overflow lesson applied at design time); both engines compose the
-    // identical left-associated expression
+    // a·d reaches N², both past BIGINT at corpus scale; both engines
+    // compose the identical left-associated expression
     val chi = cells.withColumn("chi2",
       round(col("n").cast("double")
         * pow(col("a").cast("double") * col("dd").cast("double")
@@ -852,7 +850,7 @@ object TextAnalysis {
     * standard k−1 terms (Hill's i = 1..k−1): the rank-k cut row's
     * ln(x_(k)/x_(k)) is exactly 0, so summing over all k rows and
     * dividing by k−1 IS the k−1-term mean — dividing by k instead
-    * biased α̂ upward by k/(k−1) (ADVICE-r08). */
+    * would bias α̂ upward by k/(k−1). */
   private val HillK = 200
 
   def hillTailIndex(s: SparkSession, d: String): DataFrame = {
@@ -894,7 +892,7 @@ object TextAnalysis {
     * train = eval corpus here, so these are RESUBSTITUTION numbers — the
     * honest protocol splits by q135's leakage-safe split first; the plan
     * is identical either way (one more filter on the scoring side). */
-  /** q212 stays LAZY and pred stays unmaterialized (audited r13): the
+  /** q212 stays LAZY and pred stays unmaterialized: the
     * three per-class aggregates' copies of pred canonicalize identically,
     * so everything below scored's final (doc_id, lang) exchange — the
     * corpus-scale scoring join and aggregates — executes ONCE via
@@ -918,7 +916,7 @@ object TextAnalysis {
     val pp = pred.groupBy(col("pred").as("lang")).agg(count(lit(1)).as("n_pred"))
     // broadcast: per-class frames are |langs| rows (~O(100) at any scale);
     // unhinted, the post-cache size estimates made the planner emit two
-    // SortMergeJoins here (the only SMJs in q212's r12 dump)
+    // SortMergeJoins here, the only SMJs in q212's plan
     sup.join(broadcast(tp), Seq("lang"), "left")
       .join(broadcast(pp), Seq("lang"), "left")
       .na.fill(0L, Seq("tp", "n_pred"))

@@ -12,8 +12,8 @@ object Bucketing {
   /** Write `df` as a bucketed managed table (sorted within buckets so the
     * sort-merge join also skips its sort; pass `sorted = false` when every
     * consumer joins shuffle_hash — co-partitioning needs only the bucket
-    * hash, and skipping the sort removes a full write-side sort pass —
-    * the r13 q182b case). */
+    * hash, and skipping the sort removes a full write-side sort pass, as
+    * q182b does). */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int = 8,
                     sorted: Boolean = true): Unit = {
     val w = df.write.bucketBy(buckets, key)

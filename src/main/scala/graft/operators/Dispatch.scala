@@ -70,7 +70,7 @@ object Dispatch {
     * naive corr shape (q203) touches the edge frame with no exchange and
     * q203b's bucket write is pure overhead (sf0.1: 1.4 vs 4.5 s); past it
     * the naive SMJ's two edge-frame sorts dominate and the bucketed moment
-    * form wins (sf5: 64 vs 86 s; sf10: 132 vs 248 s, BASELINE.md). The
+    * form wins (sf5: 64 vs 86 s; sf10: 132 vs 248 s). The
     * node population is LPA's. Gated by q203's corr-form oracle. */
   def assortativityAuto(s: SparkSession, d: String): DataFrame =
     if (broadcastSized(s, graphNodeRows(s, d))) Relational11.q203(s, d)
@@ -82,7 +82,7 @@ object Dispatch {
     * and at R=10/R=100 disjoint replication alike) and grows only with
     * real skew (9.72 at zipf R=10). q169 and q169b walls are equal at
     * ρ=5.89 (23.0 vs 23.3 s at sf1) and 5.4× apart at ρ=9.72 (134.4 vs
-    * 25.1 s at sf1z); κ sits between (BASELINE.md). */
+    * 25.1 s at sf1z); κ sits between. */
   val MaxMeanPostings = 8.0
 
   /** ρ = Σdf²/Σdf over the document frequencies of a hashed posting frame

@@ -11,7 +11,7 @@ import graft.core.Tables
   * run over the same parquet tables must agree on column names, schema, and
   * values after canonical ordering/rounding.
   *
-  * NUMERIC-COMPARE CONTRACT (the r03 postmortem, all four classes bit):
+  * NUMERIC-COMPARE CONTRACT (each of the four classes has broken a query):
   *  1. DTYPE: the driver's hash is dtype-sensitive. DuckDB `sum(<integer>)`
   *     returns HUGEINT → pandas float64, mismatching Spark's int64 on equal
   *     values — every integer-sum oracle column must be
@@ -136,7 +136,7 @@ object Relational {
     * to DECIMAL(18,2) makes every per-row product exact and the sum
     * associative — the aggregate is bit-identical under any partitioning
     * or merge order, which closed the last-ulp sf1 CLOSE drift a 1e11
-    * float sum showed against the oracle (round 8's q04/q05/q11 family).
+    * float sum showed against the oracle (q04/q05/q11).
     * Final cast to double keeps the published dtype. */
   private val dec2 = "decimal(18,2)"
 
@@ -274,8 +274,8 @@ object Relational {
       |  ON b.ts > a.ts AND b.ts <= a.ts + INTERVAL 1 HOUR
       |GROUP BY 1, 2""".stripMargin
 
-  /** q09b — the SCALE-SURVIVABLE member of the time-band family
-    * (VERDICT-r10 "What's missing #3"): q09's pair volume is semantically
+  /** q09b — the SCALE-SURVIVABLE member of the time-band family:
+    * q09's pair volume is semantically
     * quadratic — events²/hour pairs flow through the join no matter how
     * it is bucketed (measured 5423.5 s at sf10, 48% of the whole suite
     * wall), so the bounded form changes the GRANULARITY, not the plan:

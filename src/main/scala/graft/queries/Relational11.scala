@@ -676,7 +676,7 @@ object Relational11 {
     * machinery), not repartition+persist: a persisted frame's hash(src)
     * partitioning is NOT recognized through the AQE-wrapped
     * InMemoryRelation (an ENSURE_REQUIREMENTS Exchange re-shuffles the
-    * cached edges, plans/r12/q182b_..._after.txt), so every one of the
+    * cached edges), so every one of the
     * 10 phases would re-exchange the EDGE-SCALE frame. A bucketed scan
     * reports hash(src, 32) statically, so each phase's contrib join
     * consumes the edge side with zero exchange — at 100 TB the corpus-
@@ -1337,7 +1337,7 @@ object Relational11 {
     * — exact at any scale (the q211 overflow lesson) — and cast to
     * double only at the final closed form, so both engines evaluate the
     * identical IEEE expression: no corr() last-ulp drift at sf1/sf10.
-    * Measured sf5→sf10 step: see BASELINE.md (target ≤2× per 2×). */
+    * Target sf5→sf10 step: ≤2× wall per 2× data. */
   private[graft] def q203b(s: SparkSession, d: String): DataFrame = {
     val pairs = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
       .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),

@@ -145,9 +145,9 @@ object Relational12 {
     * a quality-filter pipeline (q134/q179) pages on when the filter's
     * scores drift away from its realized precision.
     *
-    * Exactness discipline (the r09 float-boundary lesson, applied up
-    * front): the per-doc score is floor-spelled to an INTEGER milli-score
-    * s10k once, and every bin statistic is then derived from exact BIGINT
+    * Exactness discipline (a float rounded on a boundary flips its hash
+    * on one last ulp): the per-doc score is floor-spelled to an INTEGER
+    * milli-score s10k once, and every bin statistic is then derived from exact BIGINT
     * sums — in particular n_b·|acc_b − conf_b| = |10⁴·L_b − S_b| / 10⁴
     * exactly, so the ECE numerator Σ_b |10⁴·L_b − S_b| is an exact
     * integer and the only float ops are single final divisions both
@@ -323,11 +323,10 @@ object Relational12 {
     * redaction on the privacy shelf.
     *
     * TWO noise modes, registered separately so the name never claims a
-    * guarantee the draw voids (VERDICT-r10 #2):
+    * guarantee the draw voids:
     *  - q220_dp_counts_replay — md5-class REPLAYABLE draw (the q60/q163
     *    testability precedent): uniform u from a product of two
-    *    affine-in-(week, type) modular forms — the ADVICE-r09 lesson, a
-    *    single affine form strides u by a constant per week and the
+    *    affine-in-(week, type) modular forms — a single affine form strides u by a constant per week and the
     *    noise sequence lattices — inverted through the Laplace CDF.
     *    Deterministic ⇒ oracle-gateable, and therefore NOT private
     *    against an adversary who has the code (they subtract the noise

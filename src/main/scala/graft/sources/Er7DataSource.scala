@@ -94,7 +94,7 @@ class Er7Table(path: String) extends Table with SupportsRead {
   override def name(): String = s"er7:$path"
   override def schema(): StructType = Er7Source.schema
   override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
+    Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new Er7ScanBuilder(path)
 }
@@ -132,12 +132,11 @@ class Er7ScanBuilder(path: String)
         case _ => true
       }
     }
-    new Er7Scan(files, required, path)
+    new Er7Scan(files, required)
   }
 }
 
-class Er7Scan(files: Seq[String], required: StructType, path: String = "")
-    extends Scan with Batch {
+class Er7Scan(files: Seq[String], required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -146,54 +145,6 @@ class Er7Scan(files: Seq[String], required: StructType, path: String = "")
     files.map(f => Er7InputPartition(f): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new Er7ReaderFactory(required.fieldNames)
-  override def toMicroBatchStream(checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new Er7MicroBatchStream(path, required.fieldNames)
-}
-
-/** Streaming form of the front door — the reference's A20 storage-event
-  * flow (new object lands → event → processing) as a custom V2
-  * MicroBatchStream: each `latestOffset` call lists the inbox and extends a
-  * monotone file log with unseen files (sorted listing order); an offset is
-  * simply the log length, so a micro-batch is the log slice
-  * `(start, end]` and replaying any committed range re-reads exactly the
-  * same files — deterministic offsets, idempotent with the engine's
-  * deterministic sha-256 message ids downstream. Files are assumed
-  * immutable-once-arrived and never deleted (the lake inbox contract);
-  * a production impl would persist the log per checkpoint like Spark's
-  * own file source does. */
-class Er7MicroBatchStream(path: String, columns: Array[String])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset}
-
-  private val discovered = scala.collection.mutable.ArrayBuffer.empty[String]
-  private val seen = scala.collection.mutable.HashSet.empty[String]
-
-  private def refresh(): Unit = synchronized {
-    Er7Source.listFiles(path).foreach { f =>
-      if (seen.add(f)) discovered += f
-    }
-  }
-
-  override def latestOffset(): SOffset = { refresh(); Er7Offset(discovered.length) }
-  override def initialOffset(): SOffset = Er7Offset(0)
-  override def deserializeOffset(json: String): SOffset = Er7Offset(json.toLong)
-  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] =
-    synchronized {
-      val (s, e) = (start.asInstanceOf[Er7Offset].n, end.asInstanceOf[Er7Offset].n)
-      if (discovered.length < e) refresh() // restart: rebuild the log first
-      discovered.slice(s.toInt, e.toInt)
-        .map(f => Er7InputPartition(f): InputPartition).toArray
-    }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new Er7ReaderFactory(columns)
-  override def commit(end: SOffset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-case class Er7Offset(n: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = n.toString
 }
 
 case class Er7InputPartition(file: String) extends InputPartition

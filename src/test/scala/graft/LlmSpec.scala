@@ -269,9 +269,11 @@ class LlmSpec extends AnyFunSuite with LocalSpark {
     // SQL surface via GraftExtensions, with LATERAL VIEW shape
     graft.functions.GraftExtensions.install(spark)
     df.createOrReplaceTempView("ngram_docs")
-    val viaSql = spark.sql(
-      "SELECT ngram FROM ngram_docs LATERAL VIEW word_ngrams(text, 3) t AS ngram")
-    assert(viaSql.collect().map(_.getString(0)).sorted.toSeq == want.map(_._2).sorted)
+    try {
+      val viaSql = spark.sql(
+        "SELECT ngram FROM ngram_docs LATERAL VIEW word_ngrams(text, 3) t AS ngram")
+      assert(viaSql.collect().map(_.getString(0)).sorted.toSeq == want.map(_._2).sorted)
+    } finally spark.catalog.dropTempView("ngram_docs")
   }
 
   test("simhash LSH pairs == brute-force hamming pairs") {
@@ -568,14 +570,22 @@ class LlmSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("binaryFile source ingests raw files as binary rows with metadata") {
-    val dir = "/root/reference/messages"
-    val n = new java.io.File(dir).listFiles().count(_.getName.endsWith(".txt"))
-    val df = Multimodal.readBinaryDir(spark, dir, "*.txt")
+    val dir = java.nio.file.Files.createTempDirectory("binary-files")
+    val sizes = Map("a.txt" -> 1, "b.txt" -> 17, "c.txt" -> 4096)
+    sizes.foreach { case (name, n) =>
+      java.nio.file.Files.write(dir.resolve(name), Array.tabulate[Byte](n)(i => (i % 251).toByte))
+    }
+    java.nio.file.Files.write(dir.resolve("d.bin"), Array.fill[Byte](33)(7))
+    val n = sizes.size
+    val df = Multimodal.readBinaryDir(spark, dir.toString, "*.txt")
     assert(df.columns.toSet == Set("path", "modificationTime", "length", "content"))
     val rows = df.select("path", "length", "content").collect()
     assert(rows.length == n, s"expected $n files, got ${rows.length}")
     assert(rows.forall(r => r.getAs[Array[Byte]]("content").length == r.getAs[Long]("length")),
       "content length must match the length metadata column")
+    assert(!rows.exists(_.getAs[String]("path").endsWith(".bin")), "the *.txt glob read the .bin file")
+    val got = rows.map(r => r.getAs[String]("path").split('/').last -> r.getAs[Long]("length")).toMap
+    assert(got == sizes.map { case (k, v) => k -> v.toLong }, s"file sizes: $got")
   }
 
   test("multimodal resize updates metadata and scales payloads; frame sampling strides") {

@@ -123,39 +123,6 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
     assert(got == want, "rows appended during compaction were dropped by the swap")
   }
 
-  test("optimizer rule: exploded join sides are never broadcast") {
-    import spark.implicits._
-    val docs = (0L until 50L).map(i => (i, s"w$i x$i y$i z$i")).toDF("id", "text")
-    def explodedJoin = {
-      val ex = docs.select(col("id"), explode(split(col("text"), " ")).as("w"))
-      val a = ex.select(col("id").as("a_id"), col("w"))
-      val b = ex.select(col("id").as("b_id"), col("w").as("w_r"))
-      a.join(b, col("w") === col("w_r") && col("a_id") < col("b_id"))
-    }
-    // without the rule: the tiny local-relation estimate rides through the
-    // Generate and the planner broadcasts the exploded side
-    val before = explodedJoin.queryExecution.executedPlan.toString
-    assert(before.contains("BroadcastHashJoin"),
-      s"precondition: static planner should broadcast here\n$before")
-    val saved = spark.experimental.extraOptimizations
-    try {
-      GraftExtensions.install(spark)
-      val after = explodedJoin.queryExecution.executedPlan.toString
-      assert(after.contains("ShuffledHashJoin"),
-        s"rule did not force the shuffled hash join:\n$after")
-      assert(!after.contains("BroadcastHashJoin"),
-        s"exploded side still broadcast:\n$after")
-      // a user-supplied hint must win over the rule
-      val ex = docs.select(col("id"), explode(split(col("text"), " ")).as("w"))
-      val hinted = ex.select(col("id").as("a_id"), col("w"))
-        .join(broadcast(ex.select(col("id").as("b_id"), col("w").as("w_r"))),
-              col("w") === col("w_r"))
-        .queryExecution.executedPlan.toString
-      assert(hinted.contains("BroadcastHashJoin"),
-        s"explicit broadcast hint overridden:\n$hinted")
-    } finally spark.experimental.extraOptimizations = saved
-  }
-
   test("range-clustered layout yields files with disjoint key ranges") {
     import graft.operators.Layout
     val sf = "/root/testdata/sf0.001"
