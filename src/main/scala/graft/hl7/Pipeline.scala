@@ -35,8 +35,8 @@ object Pipeline {
     * messages separated by blank lines (`messages/adt01.txt:10`).
     *
     * Each file is read whole as bytes (`binaryFile`) and cast to a string,
-    * which keeps its bytes as they are. The `wholetext` text reader gives
-    * the same rows but clones a Hadoop `JobConf` for every file.
+    * which keeps its bytes as they are. The text source's whole-file mode
+    * gives the same rows but clones a Hadoop `JobConf` for every file.
     *
     * The glob rides in `pathGlobFilter`, NOT in the path: a glob-in-path
     * makes the reader's streaming-sink probe getFileStatus the literal
@@ -45,8 +45,12 @@ object Pipeline {
     * q21 queries in a whole bench run); a plain directory path stats the
     * real directory. */
   def readMessages(spark: SparkSession, dir: String = MessagesDir): DataFrame =
-    spark.read.format("binaryFile").option("pathGlobFilter", "*.txt").load(dir)
-      .select(col("content").cast(StringType).as("file_text"),
+    inboxMessages(spark.read.format("binaryFile").option("pathGlobFilter", "*.txt").load(dir))
+
+  /** The messages of `files`, a batch or streaming `binaryFile` read of an
+    * inbox: `msg` from each file's `content`, `source` its file stem. */
+  private[graft] def inboxMessages(files: DataFrame): DataFrame =
+    files.select(col("content").cast(StringType).as("file_text"),
         regexp_extract(input_file_name(), "([^/]+)\\.txt", 1).as("source"))
       .transform(Er7Source.explodeMessages(_, "file_text"))
       .select("msg", "source")
@@ -183,20 +187,19 @@ object Pipeline {
       }
     }
 
-  /** Full batch flow: every event lands in the lake (the reference's
-    * unfiltered lake-writer subscription) — the ingested population plus the
-    * staged/error branches, one row per (message, zone). */
-  def allEvents(spark: SparkSession, dir: String = MessagesDir): DataFrame = {
-    val (ingested, staged) =
-      if (dir == MessagesDir) corpusCached(spark)
-      else { val i = ingest(readMessages(spark, dir)); (i, stage(i)) }
-    events(ingested, staged)
-  }
+  /** Full batch flow: the [[lakeRows]] of the inbox under `dir`. */
+  def allEvents(spark: SparkSession, dir: String = MessagesDir): DataFrame =
+    lakeRows(if (dir == MessagesDir) corpusCached(spark)._1 else ingest(readMessages(spark, dir)))
 
-  /** The lake's two event populations in one frame: the ingestion-zone
-    * envelope row of every `ingested` message and the `staged` (staged or
-    * error) branch rows, one row per (message, zone). */
-  def events(ingested: DataFrame, staged: DataFrame): DataFrame = {
+  /** The lake's rows for `ingested` messages, batch or streaming: every
+    * event lands, as the reference's unfiltered lake-writer subscription
+    * lands it (`core_stack.yml:107-172`). That is the ingestion-zone er7
+    * envelope row of each message plus its [[stage]] branch row (staged
+    * json or error txt), one row per (message, zone). Staged rows keep
+    * `segments`: the staging zone's json row is the parsed document
+    * (`parse_er7_lambda.py`), which Views and json lookups read. */
+  def lakeRows(ingested: DataFrame): DataFrame = {
+    val staged = stage(ingested)
     val ingestedEvents = ingested.select(
       col("msg"), col("source"), col("message_id"), col("protocol"),
       col("event"), col("format"),
@@ -235,7 +238,7 @@ object Pipeline {
     ).asInstanceOf[StructType])
   }
 
-  /** A16/A17 — partitioned lake sink + catalog append. Partition layout
+  /** A16/A17 — partitioned lake sink + catalog write. Partition layout
     * mirrors the reference's key scheme `zone/protocol=…`
     * (`core_stack.yml:151`); the catalog is a queryable table instead of
     * DynamoDB. At 100 TB the zone/protocol partitioning gives consumers
@@ -247,24 +250,20 @@ object Pipeline {
     * shuffle, parse). */
   def writeLake(events: DataFrame, lakeRoot: String): Unit = {
     val messages = s"$lakeRoot/messages"
-    writeMessages(events, "overwrite", messages)
-    writeCatalog(events.sparkSession.read.schema(CatalogSource).parquet(messages),
-      "overwrite", s"$lakeRoot/catalog")
+    writeMessages(events, messages)
+    catalogRows(events.sparkSession.read.schema(CatalogSource).parquet(messages))
+      .write.mode("overwrite").parquet(s"$lakeRoot/catalog")
   }
 
   /** The `messages` table's partition columns, in directory order. */
   private val PartitionColumns: Seq[String] = Seq("zone", "protocol")
 
-  /** Writes lake rows under `dir`, partitioned by [[PartitionColumns]]. */
-  private[graft] def writeMessages(rows: DataFrame, mode: String, dir: String): Unit =
-    rows.write.mode(mode).partitionBy(PartitionColumns: _*).parquet(dir)
-
-  /** Writes the [[catalogRows]] of lake rows under `dir`. */
-  private[graft] def writeCatalog(rows: DataFrame, mode: String, dir: String): Unit =
-    catalogRows(rows).write.mode(mode).parquet(dir)
+  /** Writes lake rows over `dir`, partitioned by [[PartitionColumns]]. */
+  private def writeMessages(rows: DataFrame, dir: String): Unit =
+    rows.write.mode("overwrite").partitionBy(PartitionColumns: _*).parquet(dir)
 
   /** Lake maintenance — small-file compaction (the A16 sink's long-run
-    * health). The streaming writer (foreachBatch) appends a handful of rows
+    * health). The streaming writer (foreachBatch) adds a few small files
     * per micro-batch; over months a 100 TB zone table accumulates millions
     * of tiny parquet files and scan planning/open costs dominate. Rewrite
     * the table into ~`targetBytes` files while preserving the zone/protocol
@@ -317,31 +316,33 @@ object Pipeline {
     val df = spark.read.option("basePath", messagesDir)
       .parquet(snapshot.map(f => s"$messagesDir/${f._1}"): _*)
     writeMessages(df.repartition(nFiles, PartitionColumns.map(col) :+
-        pmod(xxhash64(col("message_id")), lit(nFiles)): _*), "overwrite", tmp.toString)
+        pmod(xxhash64(col("message_id")), lit(nFiles)): _*), tmp.toString)
     beforeSwap()
     fs.rename(path, old)
     // carry files committed after the snapshot (racing appender) into the
     // compacted table, preserving their partition subpaths
-    dataFiles(fs, old).foreach { case (rel, _) =>
-      if (!snapSet.contains(rel)) {
-        val dest = new Path(tmp, rel)
-        fs.mkdirs(dest.getParent)
-        fs.rename(new Path(old, rel), dest)
-      }
-    }
+    moveFiles(fs, old, tmp, keep = rel => !snapSet.contains(rel))
     if (!fs.rename(tmp, path)) {
       // an appender recreated the live dir inside the swap window: merge
       // the compacted files into it instead of failing the promote
-      dataFiles(fs, tmp).foreach { case (rel, _) =>
-        val dest = new Path(path, rel)
-        fs.mkdirs(dest.getParent)
-        fs.rename(new Path(tmp, rel), dest)
-      }
+      moveFiles(fs, tmp, path)
       fs.delete(tmp, true)
     }
     fs.delete(old, true)
     nFiles
   }
+
+  /** Moves the data files under `from` that `keep` accepts to the same
+    * partition subpaths under `to`, each file name prefixed by `prefix`.
+    * A file that cannot be moved raises an IOException. */
+  private[graft] def moveFiles(fs: FileSystem, from: Path, to: Path, prefix: String = "",
+                               keep: String => Boolean = _ => true): Unit =
+    dataFiles(fs, from).filter(f => keep(f._1)).foreach { case (rel, _) =>
+      val src = new Path(from, rel)
+      val dest = new Path(new Path(to, rel).getParent, prefix + src.getName)
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(src, dest)) throw new java.io.IOException(s"cannot move $src to $dest")
+    }
 
   /** Committed data files under `dir`, as paths relative to it with their
     * lengths. `_SUCCESS`, `_temporary` and hidden files and directories are
@@ -349,7 +350,7 @@ object Pipeline {
     * through a hidden directory still lists. Walked with `listStatus`:
     * `listFiles` builds a located status per file, which on the local
     * filesystem forks a shell to read the file's permissions. */
-  private[hl7] def dataFiles(fs: FileSystem, dir: Path): Iterator[(String, Long)] = {
+  private[graft] def dataFiles(fs: FileSystem, dir: Path): Iterator[(String, Long)] = {
     def walk(d: Path, rel: String): Iterator[(String, Long)] =
       fs.listStatus(d).iterator
         .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))

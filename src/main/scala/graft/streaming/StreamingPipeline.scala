@@ -1,11 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 import graft.hl7.Pipeline
-import graft.sources.Er7Source
 
 /** Streaming variants of the pipeline (SURVEY.md §2B streaming surface).
   *
@@ -109,17 +110,16 @@ object StreamingPipeline {
   }
 
   /** A20 — storage-event source: new files in the inbox dir trigger
-    * processing, exactly the reference's CloudTrail→EventBridge flow. One
-    * message per file row; multi-message files are exploded like batch. */
+    * processing, exactly the reference's CloudTrail→EventBridge flow. The
+    * files are read as `binaryFile` (a streaming file source needs its
+    * schema declared) and projected by [[Pipeline.inboxMessages]], so a
+    * stream's messages and sources are the batch `readMessages` rows. */
   def messagesStream(spark: SparkSession, inboxDir: String,
                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream
-      .option("wholetext", "true")
+    val reader = spark.readStream.format("binaryFile").schema(BinaryFileFormat.schema)
       .option("pathGlobFilter", "*.txt") // glob as option, not in-path (see Pipeline.readMessages)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    Er7Source.explodeMessages(reader.text(inboxDir), "value")
-      .withColumn("source", lit("inbox"))
-      .select("msg", "source")
+    Pipeline.inboxMessages(reader.load(inboxDir))
   }
 
   /** A5 streaming — the dedup ledger as streaming state over the shared
@@ -134,32 +134,49 @@ object StreamingPipeline {
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("message_id")
 
-  /** A7+A16+A17 — multi-sink fan-out per micro-batch: one batch, two writes
-    * (zoned lake + catalog), idempotent under replay because message_id is
-    * deterministic (sha-256 of payload) and both writes are append-only
-    * keyed by it. */
+  /** A7+A16+A17 — the lake writer as a `foreachBatch` sink. Each
+    * micro-batch is written by [[Pipeline.writeLake]], so a streaming lake
+    * has the batch lake's layout and catalog. It writes any frame with the
+    * catalog's columns; [[run]] writes [[Pipeline.lakeRows]].
+    *
+    * A replayed batch lands once. A query that dies after a batch's files
+    * reached the lake but before Spark committed the batch replays it on
+    * restart, with the same id and rows. So batch `k` is first written
+    * whole, with overwrite, under `lakeRoot/_batch/k`. Then, table by
+    * table, any file an earlier attempt of batch `k` moved is deleted, and
+    * the new files are moved in under names that start with `batch-k-`.
+    * `_batch` is removed once the batch is in place, so one query at a time
+    * may write a lake root. */
   def lakeSink(events: DataFrame, lakeRoot: String, checkpoint: String): DataStreamWriter[Row] =
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        Pipeline.writeMessages(batch, "append", s"$lakeRoot/messages")
-        // an append cannot read its rows back as writeLake does, so the
-        // batch is persisted for its second write
-        Pipeline.writeCatalog(batch, "append", s"$lakeRoot/catalog")
-        batch.unpersist()
+        val staging = new Path(lakeRoot, s"_batch/$batchId")
+        Pipeline.writeLake(batch, staging.toString)
+        val fs = staging.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+        val prefix = s"batch-$batchId-"
+        for (table <- Seq("messages", "catalog")) {
+          val live = new Path(lakeRoot, table)
+          Pipeline.dataFiles(fs, live).map(f => new Path(live, f._1))
+            .filter(_.getName.startsWith(prefix)).foreach(fs.delete(_, false))
+          Pipeline.moveFiles(fs, new Path(staging, table), live, prefix)
+        }
+        fs.delete(staging.getParent, true)
         ()
       }
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
 
-  /** Full streaming pipeline: inbox → ingest(dedup) → stage(parse/branch) →
-    * zone → two-sink lake write. */
-  def run(spark: SparkSession, inboxDir: String, lakeRoot: String, checkpoint: String): Unit = {
-    val ingested = ingestStream(messagesStream(spark, inboxDir))
-    val staged = Pipeline.withZone(Pipeline.stage(ingested))
-    val q = lakeSink(staged.drop("segments"), lakeRoot, checkpoint).start()
-    q.awaitTermination()
+  /** Full streaming pipeline: inbox → ingest (dedup) → the batch
+    * pipeline's [[Pipeline.lakeRows]] → replay-safe lake write. The lake it
+    * leaves holds the batch lake's rows for the same inbox: both zones, with
+    * `segments`. A message sent in several files keeps the copy the stream
+    * read first, so its `source` may name another of them than the batch
+    * lake's does. A restart from `checkpoint` lands each message once. */
+  def run(spark: SparkSession, inboxDir: String, lakeRoot: String, checkpoint: String,
+          maxFilesPerTrigger: Option[Int] = None): Unit = {
+    val ingested = ingestStream(messagesStream(spark, inboxDir, maxFilesPerTrigger))
+    lakeSink(Pipeline.lakeRows(ingested), lakeRoot, checkpoint).start().awaitTermination()
   }
 
   /** q21b — the reference's ACTUAL topology replayed end-to-end through
@@ -169,21 +186,15 @@ object StreamingPipeline {
     * success/error branch (`trigger_lambda.py:25-36`) → zone mapping →
     * the REAL foreachBatch two-sink lake write (`core_stack.yml:107-172`'s
     * lake-writer subscription), then zone/format counts read back FROM THE
-    * LAKE — so the gate covers the sink's append idempotence and partition
-    * layout, not just the transform chain. `maxFilesPerTrigger=2` slices
-    * the 6-file corpus into ≥3 micro-batches: the dedup ledger and the
-    * lake appends must compose across batches to land the same populations
-    * the one-shot batch flow (q21_pipeline_zones) produces. Both event
-    * populations are written, exactly like `Pipeline.allEvents`: the
-    * ingestion-zone envelope rows AND the staged/error branch rows. */
+    * LAKE — so the gate covers the sink and its partition layout, not just
+    * the transform chain. `maxFilesPerTrigger=2` slices the 6-file corpus
+    * into ≥3 micro-batches: the dedup ledger and the lake writes must
+    * compose across batches to land the same populations the one-shot
+    * batch flow (q21_pipeline_zones) produces. */
   def q21StreamPipeline(s: SparkSession, d: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_q21b_").toString
-    val ingested = ingestStream(
-      messagesStream(s, Pipeline.MessagesDir, maxFilesPerTrigger = Some(2)))
-    val events = Pipeline.events(ingested, Pipeline.stage(ingested)).drop("segments")
     withStatePartitions(s, Pipeline.MessagesDir) {
-      val q = lakeSink(events, s"$tmp/lake", s"$tmp/ckpt").start()
-      q.awaitTermination()
+      run(s, Pipeline.MessagesDir, s"$tmp/lake", s"$tmp/ckpt", maxFilesPerTrigger = Some(2))
     }
     s.read.parquet(s"$tmp/lake/messages")
       .groupBy("zone", "format").agg(count(lit(1)).as("n_messages"))

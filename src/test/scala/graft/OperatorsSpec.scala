@@ -66,9 +66,16 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
     }
   }
 
+  /** The lake rows of the spec inbox, written under `tmp`. */
+  private def specEvents(tmp: String) = {
+    val inbox = java.nio.file.Paths.get(tmp, "inbox")
+    SpecInbox.write(inbox)
+    graft.hl7.Pipeline.allEvents(spark, inbox.toString)
+  }
+
   test("lake compaction shrinks file count and preserves every row") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val events = graft.hl7.Pipeline.allEvents(spark)
+    val events = specEvents(tmp)
     // fragment the write: many tasks -> one tiny file each, per partition
     events.repartition(40).write.mode("overwrite")
       .partitionBy("zone", "protocol").parquet(s"$tmp/messages")
@@ -101,7 +108,7 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
 
   test("append during compaction loses nothing (late files carried into the swap)") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-compact-race").toString
-    val events = graft.hl7.Pipeline.allEvents(spark)
+    val events = specEvents(tmp)
     val (first, late) = {
       val ids = events.select("message_id").distinct()
         .collect().map(_.getString(0)).sorted.toSeq

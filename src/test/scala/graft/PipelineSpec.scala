@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.hl7.Pipeline
+import graft.hl7.{Pipeline, Views}
 import graft.sources.Er7Source
 import graft.streaming.StreamingPipeline
 
@@ -156,26 +156,12 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
   // ------------------------------------------------------------------
   // Lake write and point retrieval over a hand-written inbox
 
-  private val adt = Seq(
-    "MSH|^~\\&|ADT1|GOOD HEALTH|REG|HOSP|20240101120000||ADT^A01|MSG0001|P|2.5",
-    "EVN|A01|20240101120000",
-    "PID|1||PAT123^^^HOSP^MR||DOE^JANE||19800101|F",
-    "PV1|1|I|W^389^1")
-
-  /** A valid ADT, an exact duplicate of it, an unparseable payload and the
-    * ADT with CRLF line endings: 3 distinct messages, 2 of which parse. */
-  private def writeInbox(dir: Path): Unit = {
-    Files.createDirectories(dir)
-    Files.writeString(dir.resolve("adt.txt"), adt.mkString("\n") + "\n")
-    Files.writeString(dir.resolve("adt_resent.txt"), adt.mkString("\n") + "\n")
-    Files.writeString(dir.resolve("junk.txt"), "I'm just a random number: 42\n")
-    Files.writeString(dir.resolve("adt_crlf.txt"), adt.mkString("\r\n") + "\r\n")
-  }
+  import SpecInbox.adt
 
   /** A batch lake under a dot-directory, with the events written. */
   private lazy val batchLake: (String, DataFrame) = {
     val tmp = Files.createTempDirectory("graft-retrieve")
-    writeInbox(tmp.resolve("inbox"))
+    SpecInbox.write(tmp.resolve("inbox"))
     val root = tmp.resolve(".runs/lake").toString
     val events = Pipeline.allEvents(spark, tmp.resolve("inbox").toString)
     Pipeline.writeLake(events, root)
@@ -229,22 +215,27 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     assert(Pipeline.retrieve(spark, root, miss).isEmpty)
   }
 
-  test("retrieve reads a lakeSink lake, which has no segments column") {
+  test("retrieve and Views read a streaming lake as they read the batch lake") {
+    val (batchRoot, _) = batchLake
     val tmp = Files.createTempDirectory("graft-retrieve-stream")
-    writeInbox(tmp.resolve("inbox"))
+    SpecInbox.write(tmp.resolve("inbox"))
     val root = tmp.resolve(".runs/lake").toString
-    StreamingPipeline.run(spark, tmp.resolve("inbox").toString, root, tmp.resolve("ckpt").toString)
-    assert(!spark.read.parquet(s"$root/messages").columns.contains("segments"))
+    StreamingPipeline.run(spark, tmp.resolve("inbox").toString, root, tmp.resolve("ckpt").toString,
+      maxFilesPerTrigger = Some(1))
     val all = ids(root)
-    assert(all.length == 3)
-    for (id <- all) {
-      val f = spark.read.parquet(s"$root/catalog").filter(col("message_id") === id)
-        .select("format").collect().map(_.getString(0)).toSeq
-      assert(f.length == 1) // the stream lake holds the staged branch only
-      assertSameAsJoin(root, id, None, Some(f.head))
-      for (g <- Pipeline.FormatOrder) assertSameAsJoin(root, id, Some(g), Some(g))
+    assert(all.length == 3 && all == ids(batchRoot))
+    val miss = "0" * 64
+    for (id <- all :+ miss; f <- None +: Pipeline.FormatOrder.map(Some(_))) {
+      def lookup(r: String) = Pipeline.retrieve(spark, r, id, f).drop("ingest_ts").collect().toSeq
+      assert(lookup(root) == lookup(batchRoot), s"id $id format $f")
+      // a hit's format-less lookup is the er7 original
+      val reference = if (id == miss) f else f.orElse(Some("er7"))
+      for (r <- Seq(root, batchRoot)) assertSameAsJoin(r, id, f, reference)
     }
-    assertSameAsJoin(root, "0" * 64, None, None)
+    def patients(r: String) = Views.patients(spark.read.parquet(s"$r/messages")
+      .filter(col("zone") === "staging")).collect().toSeq.sortBy(_.message_id)
+    assert(patients(root).length == 2)
+    assert(patients(root) == patients(batchRoot))
   }
 
   test("retrieve on a missing lake raises PATH_NOT_FOUND instead of returning empty") {
@@ -266,7 +257,7 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
 
   test("writeLake evaluates the events chain once") {
     val tmp = Files.createTempDirectory("graft-write-once")
-    writeInbox(tmp.resolve("inbox"))
+    SpecInbox.write(tmp.resolve("inbox"))
     val evaluated = spark.sparkContext.longAccumulator("events evaluated")
     // a nondeterministic filter is neither pushed down nor pruned: it runs
     // once per events row on every pass over the chain
@@ -344,7 +335,7 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     val reference = Pipeline.envelope(read).dropDuplicates("message_id")
     def counts(df: DataFrame) = df.groupBy("zone", "format").count().collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val want = counts(Pipeline.events(reference, Pipeline.stage(reference)))
+    val want = counts(Pipeline.lakeRows(reference))
     assert(counts(lake) == want)
     assert(want == Map(("ingestion", "er7") -> 3L, ("staging", "json") -> 2L, ("error", "txt") -> 1L))
   }
@@ -534,7 +525,7 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
 
   test("retrieve reads a lake rewritten over the same root, and misses the old lake's ids") {
     val tmp = Files.createTempDirectory("graft-rewrite")
-    writeInbox(tmp.resolve("old"))
+    SpecInbox.write(tmp.resolve("old"))
     writeLargeInbox(tmp.resolve("new"), 10)
     val root = tmp.resolve("lake").toString
     Pipeline.writeLake(Pipeline.allEvents(spark, tmp.resolve("old").toString), root)

@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -384,48 +390,107 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     assert(batch.map(r => (r(0), r(2))) == Seq((1L, 2L), (1L, 2L), (2L, 2L)))
   }
 
+  // ------------------------------------------------------------------
+  // The streaming lake against the batch lake of the same inbox
+
+  /** The spec inbox, plus the reference corpus where this host has it. */
+  private def inboxes(): Seq[String] = {
+    val own = Files.createTempDirectory("graft-stream-inbox")
+    SpecInbox.write(own)
+    own.toString +: Seq(Pipeline.MessagesDir).filter(d => Files.isDirectory(Paths.get(d)))
+  }
+
+  /** Micro-batches committed under `checkpoint`. */
+  private def committed(checkpoint: Path): Int = {
+    val it = Files.list(checkpoint.resolve("commits"))
+    try it.iterator().asScala.count(!_.getFileName.toString.startsWith(".")) finally it.close()
+  }
+
+  /** Asserts the lake under `root` is the batch lake of `inbox`, row for
+    * row: `messages` on every column, `catalog` on every column but
+    * `ingest_ts`; no message lands twice in a zone, and no `_batch`
+    * directory is left. */
+  private def assertBatchLake(root: Path, inbox: String): Unit = {
+    val batch = Files.createTempDirectory("graft-batch-lake").toString
+    Pipeline.writeLake(Pipeline.allEvents(spark, inbox), batch)
+    val messages = spark.read.parquet(s"$root/messages")
+    val repeated = messages.groupBy("message_id", "zone").count().filter(col("count") > 1)
+      .collect().toSeq
+    assert(repeated.isEmpty, s"messages landed more than once: $repeated")
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.mkString("|"))
+    for ((table, drop) <- Seq("messages" -> Nil, "catalog" -> Seq("ingest_ts"))) {
+      val got = spark.read.parquet(s"$root/$table").drop(drop: _*)
+      val want = spark.read.parquet(s"$batch/$table").drop(drop: _*)
+      assert(got.schema == want.schema, table)
+      assert(rows(got) == rows(want), table)
+    }
+    assert(!Files.exists(root.resolve("_batch")))
+  }
+
   test("streaming lake write equals the batch pipeline on the same corpus") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    StreamingPipeline.run(spark, Pipeline.MessagesDir,
-      s"$tmp/lake", s"$tmp/ckpt")
-    val streamed = spark.read.parquet(s"$tmp/lake/messages")
-    val batch = Pipeline.withZone(Pipeline.stage(Pipeline.ingest(
-      Pipeline.readMessages(spark))))
-    assert(streamed.count() == batch.count())
-    val a = streamed.groupBy("zone").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b = batch.groupBy("zone").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(a == b)
-    // catalog written too, one row per message
-    assert(spark.read.parquet(s"$tmp/lake/catalog").count() == batch.count())
-    // idempotence: re-running with the same checkpoint adds nothing
-    StreamingPipeline.run(spark, Pipeline.MessagesDir,
-      s"$tmp/lake", s"$tmp/ckpt")
-    assert(spark.read.parquet(s"$tmp/lake/messages").count() == batch.count())
+    for (inbox <- inboxes()) {
+      val tmp = Files.createTempDirectory("graft-stream")
+      val (lake, ckpt) = (tmp.resolve("lake"), tmp.resolve("ckpt"))
+      StreamingPipeline.run(spark, inbox, lake.toString, ckpt.toString, maxFilesPerTrigger = Some(1))
+      assert(committed(ckpt) >= 2, inbox)
+      assertBatchLake(lake, inbox)
+      // re-running with the same checkpoint adds nothing
+      StreamingPipeline.run(spark, inbox, lake.toString, ckpt.toString, maxFilesPerTrigger = Some(1))
+      assertBatchLake(lake, inbox)
+    }
   }
 
   test("q21b full-topology replay matches batch q21 zones across >=2 micro-batches") {
-    // q21b's oracle only checks the final counts; this pins the OTHER half
-    // of the claim — that the run is genuinely multi-batch (dedup ledger +
-    // lake appends composing across triggers, not one big batch). Same
-    // topology as q21StreamPipeline, with the query handle kept so the
-    // trigger count is observable.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q21b-spec").toString
-    val ingested = StreamingPipeline.ingestStream(
-      StreamingPipeline.messagesStream(spark, Pipeline.MessagesDir,
-        maxFilesPerTrigger = Some(2)))
-    val events = Pipeline.events(ingested, Pipeline.stage(ingested)).drop("segments")
-    val q = StreamingPipeline.lakeSink(events, s"$tmp/lake", s"$tmp/ckpt").start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    assert(dataBatches >= 2, s"expected >=2 data micro-batches, saw $dataBatches")
-    val streamed = spark.read.parquet(s"$tmp/lake/messages")
-      .groupBy("zone", "format").count().collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val batch = Pipeline.q21Zones(spark, "").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(streamed == batch, s"$streamed != $batch")
+    // q21b's slicing: two files per micro-batch, so the dedup ledger and
+    // the lake writes compose within a batch and across batches
+    for (inbox <- inboxes()) {
+      val tmp = Files.createTempDirectory("graft-q21b-spec")
+      StreamingPipeline.run(spark, inbox, tmp.resolve("lake").toString, tmp.resolve("ckpt").toString,
+        maxFilesPerTrigger = Some(2))
+      assert(committed(tmp.resolve("ckpt")) >= 2, inbox)
+      assertBatchLake(tmp.resolve("lake"), inbox)
+    }
+    if (Files.isDirectory(Paths.get(Pipeline.MessagesDir))) {
+      def zones(df: DataFrame) = df.collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(zones(StreamingPipeline.q21StreamPipeline(spark, "")) == zones(Pipeline.q21Zones(spark, "")))
+    }
+  }
+
+  test("a micro-batch replayed after a crash lands once") {
+    val tmp = Files.createTempDirectory("graft-stream-crash")
+    val all = tmp.resolve("all")
+    val files = SpecInbox.write(all)
+    val inbox = Files.createDirectories(tmp.resolve("inbox"))
+    val (lake, ckpt) = (tmp.resolve("lake"), tmp.resolve("ckpt"))
+    def drop(fs: Seq[Path]): Unit =
+      fs.foreach(f => Files.copy(f, inbox.resolve(f.getFileName), StandardCopyOption.COPY_ATTRIBUTES))
+    def run(): Unit = StreamingPipeline.run(spark, inbox.toString, lake.toString, ckpt.toString,
+      maxFilesPerTrigger = Some(1))
+    def lakeRows() = spark.read.parquet(s"$lake/messages").count()
+    // batches 0 and 1 commit; batch 2 reads junk.txt
+    val k = 2
+    drop(files.take(k))
+    run()
+    assert(committed(ckpt) == k)
+    val before = lakeRows()
+    // a regular file where the catalog directory is: batch k's messages
+    // reach the lake, then its catalog write fails and the query dies
+    // before the batch commits
+    val catalog = lake.resolve("catalog")
+    val aside = tmp.resolve("catalog-aside")
+    Files.move(catalog, aside)
+    Files.writeString(catalog, "")
+    drop(files.drop(k))
+    intercept[StreamingQueryException](run())
+    assert(committed(ckpt) == k)
+    assert(lakeRows() > before, "batch k failed before its messages reached the lake")
+    Files.delete(catalog)
+    Files.move(aside, catalog)
+    // the restart replays batch k, then runs the rest
+    run()
+    assert(committed(ckpt) == files.length)
+    assertBatchLake(lake, all.toString)
   }
 
   test("streaming twins read directory-layout tables (sf1 0-row regression)") {
