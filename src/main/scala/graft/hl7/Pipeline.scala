@@ -10,7 +10,6 @@ import org.apache.spark.sql.execution.datasources.PartitioningUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
-import graft.sources.Er7Source
 
 /** Spark-native re-expression of the reference's full data plane:
   *
@@ -52,8 +51,22 @@ object Pipeline {
   private[graft] def inboxMessages(files: DataFrame): DataFrame =
     files.select(col("content").cast(StringType).as("file_text"),
         regexp_extract(input_file_name(), "([^/]+)\\.txt", 1).as("source"))
-      .transform(Er7Source.explodeMessages(_, "file_text"))
+      .transform(explodeMessages(_, "file_text"))
       .select("msg", "source")
+
+  /** The file→messages split: messages are separated by a blank line
+    * (whitespace between two line breaks) and lose their trailing
+    * whitespace; empty messages are dropped. */
+  private val MessageSeparator = "(\\r?\\n)\\s*(\\r?\\n)+"
+  private val TrailingWhitespace = "\\s+$"
+
+  /** The split over the file-text column `text`: one row per message, in
+    * column `msg`. The split's regex reads the text as Java strings, so a
+    * byte that is not valid UTF-8 comes out as U+FFFD. */
+  private[graft] def explodeMessages(files: DataFrame, text: String): DataFrame =
+    files.withColumn("msg", explode(split(col(text), MessageSeparator)))
+      .withColumn("msg", regexp_replace(col("msg"), TrailingWhitespace, ""))
+      .filter(length(col("msg")) > 0)
 
   /** A2-A6 — the front-door envelope that batch and streaming ingest share:
     * the authorization filter (A3), the deterministic id (sha-256 of the
@@ -480,13 +493,17 @@ object Pipeline {
       .select(element_at(col("seg.fields")("PID-8"), 1).as("sex"))
       .groupBy("sex").agg(count(lit(1)).as("n_patients"))
 
-  /** The V2 front door (graft.sources.Er7DataSource) driving the same
-    * corpus: per-file message counts + payload bytes, with EqualTo file
-    * skipping exercised through the registered filter. */
+  /** The front door's per-file profile of the corpus: each source file's
+    * message count and the UTF-8 bytes of its messages, from
+    * [[readMessages]]. */
   def q21Er7Source(s: SparkSession, d: String): DataFrame =
-    s.read.format("er7").load(MessagesDir)
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_messages"), sum("n_bytes").as("total_bytes"))
+    sourceBytes(readMessages(s))
+
+  /** Per `source`: the message count and the sum of each message's UTF-8
+    * byte length. */
+  private[graft] def sourceBytes(messages: DataFrame): DataFrame =
+    messages.groupBy("source")
+      .agg(count(lit(1)).as("n_messages"), sum(octet_length(col("msg"))).as("total_bytes"))
 
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q21_pipeline_zones" -> q21Zones _,

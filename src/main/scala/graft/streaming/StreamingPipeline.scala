@@ -16,7 +16,9 @@ import graft.hl7.Pipeline
   * the dedup ledger is `dropDuplicates` state. The batch stages in
   * graft.hl7.Pipeline are pure DataFrame=>DataFrame narrow transforms, so
   * they compose unchanged onto a streaming source — one definition, two
-  * execution modes.
+  * execution modes. The streaming lake ([[run]]) streams only the inbox
+  * read and its dedup; the lake rows are the batch code's, built inside the
+  * sink from each micro-batch, so each message is read and deduped once.
   */
 object StreamingPipeline {
 
@@ -135,49 +137,63 @@ object StreamingPipeline {
       .dropDuplicatesWithinWatermark("message_id")
 
   /** A7+A16+A17 — the lake writer as a `foreachBatch` sink. Each
-    * micro-batch is written by [[Pipeline.writeLake]], so a streaming lake
-    * has the batch lake's layout and catalog. It writes any frame with the
-    * catalog's columns; [[run]] writes [[Pipeline.lakeRows]].
-    *
-    * A replayed batch lands once. A query that dies after a batch's files
-    * reached the lake but before Spark committed the batch replays it on
-    * restart, with the same id and rows. So batch `k` is first written
-    * whole, with overwrite, under `lakeRoot/_batch/k`. Then, table by
-    * table, any file an earlier attempt of batch `k` moved is deleted, and
-    * the new files are moved in under names that start with `batch-k-`.
-    * `_batch` is removed once the batch is in place, so one query at a time
-    * may write a lake root. */
+    * micro-batch of `events` is written by [[writeBatch]], so a streaming
+    * lake has the batch lake's layout and catalog. It writes any frame with
+    * the catalog's columns. */
   def lakeSink(events: DataFrame, lakeRoot: String, checkpoint: String): DataStreamWriter[Row] =
+    batchSink(events, checkpoint)(writeBatch(_, _, lakeRoot))
+
+  /** `events` into `write`, one micro-batch at a time, from `checkpoint`. */
+  private def batchSink(events: DataFrame, checkpoint: String)
+                       (write: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     events.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val staging = new Path(lakeRoot, s"_batch/$batchId")
-        Pipeline.writeLake(batch, staging.toString)
-        val fs = staging.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-        val prefix = s"batch-$batchId-"
-        for (table <- Seq("messages", "catalog")) {
-          val live = new Path(lakeRoot, table)
-          Pipeline.dataFiles(fs, live).map(f => new Path(live, f._1))
-            .filter(_.getName.startsWith(prefix)).foreach(fs.delete(_, false))
-          Pipeline.moveFiles(fs, new Path(staging, table), live, prefix)
-        }
-        fs.delete(staging.getParent, true)
-        ()
-      }
+      .foreachBatch(write)
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
 
-  /** Full streaming pipeline: inbox → ingest (dedup) → the batch
-    * pipeline's [[Pipeline.lakeRows]] → replay-safe lake write. The lake it
-    * leaves holds the batch lake's rows for the same inbox: both zones, with
-    * `segments`. A message sent in several files keeps the copy the stream
-    * read first, so its `source` may name another of them than the batch
-    * lake's does. A restart from `checkpoint` lands each message once. */
-  def run(spark: SparkSession, inboxDir: String, lakeRoot: String, checkpoint: String,
-          maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ingested = ingestStream(messagesStream(spark, inboxDir, maxFilesPerTrigger))
-    lakeSink(Pipeline.lakeRows(ingested), lakeRoot, checkpoint).start().awaitTermination()
+  /** Micro-batch `batchId` of lake rows into the lake under `lakeRoot` by
+    * [[Pipeline.writeLake]], so that a replayed batch lands once. A query
+    * that dies after a batch's files reached the lake but before Spark
+    * committed the batch replays it on restart, with the same id and rows.
+    * So batch `k` is first written whole, with overwrite, under
+    * `lakeRoot/_batch/k`. Then, table by table, any file an earlier attempt
+    * of batch `k` moved is deleted, and the new files are moved in under
+    * names that start with `batch-k-`. `_batch` is removed once the batch
+    * is in place, so one query at a time may write a lake root. */
+  private def writeBatch(rows: DataFrame, batchId: Long, lakeRoot: String): Unit = {
+    val staging = new Path(lakeRoot, s"_batch/$batchId")
+    Pipeline.writeLake(rows, staging.toString)
+    val fs = staging.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+    val prefix = s"batch-$batchId-"
+    for (table <- Seq("messages", "catalog")) {
+      val live = new Path(lakeRoot, table)
+      Pipeline.dataFiles(fs, live).map(f => new Path(live, f._1))
+        .filter(_.getName.startsWith(prefix)).foreach(fs.delete(_, false))
+      Pipeline.moveFiles(fs, new Path(staging, table), live, prefix)
+    }
+    fs.delete(staging.getParent, true)
   }
+
+  /** Full streaming pipeline: inbox → ingest (dedup) → the batch
+    * pipeline's [[Pipeline.lakeRows]] → replay-safe lake write. The stream
+    * reads each file once and dedups through one state store; the lake rows
+    * are built inside the sink from each micro-batch of ingested messages.
+    * A `foreachBatch` frame re-runs its stateful plan on every pass over
+    * it, and the lake rows are a union of two passes (one per zone). A
+    * persisted frame serves only one branch of that union from its cache
+    * (measured: the dedup still ran twice per batch), so the micro-batch is
+    * materialized once by an eager `localCheckpoint`, whose blocks Spark
+    * frees when the frame is dropped. The lake it leaves holds the batch
+    * lake's rows for the same inbox: both zones, with `segments`. A message
+    * sent in several files keeps the copy the stream read first, so its
+    * `source` may name another of them than the batch lake's does. A
+    * restart from `checkpoint` lands each message once. */
+  def run(spark: SparkSession, inboxDir: String, lakeRoot: String, checkpoint: String,
+          maxFilesPerTrigger: Option[Int] = None): Unit =
+    batchSink(ingestStream(messagesStream(spark, inboxDir, maxFilesPerTrigger)), checkpoint) {
+      (ingested, batchId) => writeBatch(Pipeline.lakeRows(ingested.localCheckpoint(true)), batchId, lakeRoot)
+    }.start().awaitTermination()
 
   /** q21b — the reference's ACTUAL topology replayed end-to-end through
     * Structured Streaming and gated by q21's precomputed-counts oracle:

@@ -3,12 +3,14 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.streaming.Trigger
 import graft.hl7.Pipeline
+import graft.streaming.StreamingPipeline
 
-/** DataSourceV2 front door (`format("er7")`): row parity with the composed
-  * text-scan reader, column pruning, and predicate-driven file skipping.
+/** The inbox's one reader (`Pipeline.inboxMessages`): the file→messages
+  * split, batch and streaming, and the per-source byte profile that
+  * q21_er7_source reports.
   *
   * Each corpus test runs over an inbox this spec writes, and also over the
   * reference corpus where that directory exists. */
@@ -17,63 +19,75 @@ class Er7SourceSpec extends AnyFunSuite with LocalSpark {
   /** The FIXTURES.md quirks the file→messages split meets, one per file:
     * a multi-message file whose separator line holds only whitespace, a
     * CRLF file, a backtick escape character in MSH-2, a non-ASCII en dash
-    * with trailing whitespace, and a non-`.txt` file both readers skip. */
+    * with trailing whitespace, a byte that is not valid UTF-8, and a
+    * non-`.txt` file the reader skips. */
   private lazy val fixtureInbox: String = {
     val dir = Files.createTempDirectory("er7-fixture")
-    def write(name: String, text: String): Unit =
-      Files.write(dir.resolve(name), text.getBytes(UTF_8))
-    write("adt01.txt",
+    def write(name: String, bytes: Array[Byte]): Unit = Files.write(dir.resolve(name), bytes)
+    write("adt01.txt", (
       "MSH|^~\\&|ADT|HOSP|LAKE|HOSP|20240101120000||ADT^A01|ADT0001|P|2.5\n" +
       "PID|1||P100^^^HOSP||DOE^JANE||19800101|F\n" +
       "DG1|1||I10^Essential hypertension^I10\n" +
       " \t \n" +
       "MSH|^~\\&|ADT|HOSP|LAKE|HOSP|20240101120500||ADT^A01|ADT0002|P|2.3\n" +
-      "PID|1||P101^^^HOSP||ROE^RICHARD||19750505|M\n")
-    write("adt02.txt",
+      "PID|1||P101^^^HOSP||ROE^RICHARD||19750505|M\n").getBytes(UTF_8))
+    write("adt02.txt", (
       "MSH|^~\\&|||LAKE|HOSP|20240102080000||ADT^A04|ADT0003|P|2.7\r\n" +
       "PID|1||P102^^^HOSP||POE^ANN||19900909|F\r\n" +
       "NK1|1|POE^JOHN|SPO\r\n" +
       "\r\n" +
       "MSH|^~\\&|||LAKE|HOSP|20240102080500||ADT^A04|ADT0004|P|2.7\r\n" +
-      "PID|1||P103^^^HOSP||LOE^MAX||19851212|M\r\n")
-    // one long message, so a length predicate splits the corpus
-    write("lab01.txt",
+      "PID|1||P103^^^HOSP||LOE^MAX||19851212|M\r\n").getBytes(UTF_8))
+    write("lab01.txt", (
       "MSH|^~\\`&|LAB|HOSP|LAKE|HOSP|20240103090000||ORU^R01|LAB0001|P|2.3\n" +
       "PID|1||P100^^^HOSP||DOE^JANE||19800101|F\n" +
       "OBR|1||ECG1|93000^ECG^CPT\n" +
       (1 to 6).map(i =>
         s"OBX|$i|TX|ECG&INTERP&L||{\\rtf1\\ansi line $i of the interpretation text}||||||F\n")
-        .mkString)
-    write("lab02.txt",
+        .mkString).getBytes(UTF_8))
+    write("lab02.txt", (
       "MSH|^~\\&|LAB|HOSP|LAKE|HOSP|20240104100000||ORU^R01|LAB0002|P|2.3\n" +
       "PID|1||P104^^^HOSP||MOE^LI||19700101|F\n" +
-      "OBX|1|ST|GLU^Glucose||90–110|mg/dL|70–110||||F   \n\n  \t\n")
+      "OBX|1|ST|GLU^Glucose||90–110|mg/dL|70–110||||F   \n\n  \t\n").getBytes(UTF_8))
+    // 0xFF is never valid UTF-8
+    write("lab03.txt",
+      "MSH|^~\\&|LAB|HOSP|LAKE|HOSP|20240105090000||ORU^R01|LAB0003|P|2.3\nPID|1||P105^^^HOSP||".getBytes(UTF_8) ++
+        Array(0xff.toByte) ++ "OE^BO||19600101|M\n".getBytes(UTF_8))
     write("notes.bin",
-      "MSH|^~\\&|SKIP|HOSP|LAKE|HOSP|20240105000000||ADT^A01|SKIP0001|P|2.5\n")
+      "MSH|^~\\&|SKIP|HOSP|LAKE|HOSP|20240105000000||ADT^A01|SKIP0001|P|2.5\n".getBytes(UTF_8))
     dir.toString
   }
 
   /** Messages per file in [[fixtureInbox]]. */
-  private val fixtureCounts = Map("adt01" -> 2L, "adt02" -> 2L, "lab01" -> 1L, "lab02" -> 1L)
+  private val fixtureCounts =
+    Map("adt01" -> 2L, "adt02" -> 2L, "lab01" -> 1L, "lab02" -> 1L, "lab03" -> 1L)
 
   private def inboxes: Seq[String] =
     fixtureInbox +: Seq(Pipeline.MessagesDir).filter(d => Files.isDirectory(Path.of(d)))
 
-  private def er7(dir: String): DataFrame = spark.read.format("er7").load(dir)
+  /** `(source, msg)` of each message, sorted, so repeats count. */
+  private def messages(df: DataFrame): Seq[(String, String)] =
+    df.select("source", "msg").collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
 
-  test("er7 source rows == Pipeline.readMessages rows") {
+  /** [[StreamingPipeline.messagesStream]] over `dir`, drained once with
+    * AvailableNow into a memory sink that is dropped again. */
+  private def streamed(dir: String): Seq[(String, String)] = {
+    val sink = s"er7_stream_${java.util.UUID.randomUUID().toString.take(8)}"
+    StreamingPipeline.messagesStream(spark, dir).writeStream.format("memory").queryName(sink)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    try messages(spark.table(sink)) finally spark.catalog.dropTempView(sink)
+  }
+
+  test("batch and streaming inbox reads give the same messages") {
     inboxes.foreach { dir =>
-      val v2 = er7(dir).select("source", "msg").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      val composed = Pipeline.readMessages(spark, dir).select("source", "msg").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(v2 == composed, s"V2 source diverged from the composed reader on $dir")
-      assert(v2.nonEmpty)
+      val batch = messages(Pipeline.readMessages(spark, dir))
+      assert(batch.nonEmpty)
+      assert(streamed(dir) == batch, s"the stream's messages diverged from the batch read on $dir")
     }
-    val bySource = er7(fixtureInbox).groupBy("source").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(bySource == fixtureCounts, s"fixture split wrong: $bySource")
-    val msgs = er7(fixtureInbox).select("msg").collect().map(_.getString(0))
+    val batch = messages(Pipeline.readMessages(spark, fixtureInbox))
+    val counts = batch.groupBy(_._1).map { case (s, ms) => s -> ms.length.toLong }
+    assert(counts == fixtureCounts, s"fixture split wrong: $counts")
+    val msgs = batch.map(_._2)
     assert(msgs.forall(m => m.startsWith("MSH|") && m == m.stripTrailing()),
       "a message kept a separator line or trailing whitespace")
     assert(msgs.exists(_.startsWith("MSH|^~\\`&|")), "backtick MSH-2 lost")
@@ -81,52 +95,31 @@ class Er7SourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("n_bytes matches the UTF-8 payload length") {
+    // (n_messages, total_bytes) per fixture file as the DataSourceV2
+    // `format("er7")` reader counted them before it was removed: it decoded
+    // each file to a Java string and summed its messages' UTF-8 lengths
+    val v2 = Map(
+      "adt01" -> (2L, 253L), "adt02" -> (2L, 218L), "lab01" -> (1L, 595L),
+      "lab02" -> (1L, 155L), "lab03" -> (1L, 106L))
+    // q21_er7_source's aggregate
+    def sourceBytes(dir: String) = Pipeline.sourceBytes(Pipeline.readMessages(spark, dir)).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(sourceBytes(fixtureInbox) == v2)
     inboxes.foreach { dir =>
-      er7(dir).collect().foreach { r =>
-        assert(r.getAs[Long]("n_bytes") == r.getAs[String]("msg").getBytes("UTF-8").length)
-      }
+      val utf8 = messages(Pipeline.readMessages(spark, dir)).groupBy(_._1)
+        .map { case (s, ms) => s -> (ms.length.toLong, ms.map(_._2.getBytes(UTF_8).length.toLong).sum) }
+      assert(sourceBytes(dir) == utf8, dir)
     }
+    val msg = messages(Pipeline.readMessages(spark, fixtureInbox)).toMap
     // the en dash is three UTF-8 bytes, so bytes and chars differ here
-    val lab02 = er7(fixtureInbox).filter(col("source") === "lab02").collect().head
-    assert(lab02.getAs[Long]("n_bytes") == lab02.getAs[String]("msg").length + 4)
-  }
-
-  test("column pruning reaches the scan") {
-    // planning needs an existing path, not the corpus's contents
-    val inbox = Files.createTempDirectory("er7-prune")
-    Files.writeString(inbox.resolve("adt.txt"), "MSH|^~\\&|A|B|C|D|20240101||ADT^A01|M1|P|2.5\n")
-    val df = spark.read.format("er7").load(inbox.toString).select("source")
-    val scan = df.queryExecution.executedPlan.toString
-    assert(scan.contains("columns=[source]"), s"scan not pruned:\n$scan")
-  }
-
-  test("source predicate prunes whole files from the scan") {
-    inboxes.foreach { dir =>
-      val df = er7(dir).filter(col("source") === "lab01")
-      val scan = df.queryExecution.executedPlan.toString
-      assert(scan.contains("files=1"), s"file skipping did not happen:\n$scan")
-      val all = er7(dir).filter(col("source").isin("lab01", "adt01"))
-      assert(all.queryExecution.executedPlan.toString.contains("files=2"))
-      // and the results are still exactly right
-      assert(df.select("source").distinct().collect().map(_.getString(0)).toSeq == Seq("lab01"))
-      assert(df.count() == Pipeline.readMessages(spark, dir)
-        .filter(col("source") === "lab01").count())
-    }
-  }
-
-  test("unsupported predicates are evaluated post-scan, not dropped") {
-    inboxes.foreach { dir =>
-      val long = er7(dir).filter(length(col("msg")) > 500)
-      val composed = Pipeline.readMessages(spark, dir).filter(length(col("msg")) > 500)
-      assert(long.count() == composed.count())
-    }
-    // the fixture has messages on both sides of the predicate
-    assert(er7(fixtureInbox).filter(length(col("msg")) > 500).count() == 1)
+    assert(v2("lab02")._2 == msg("lab02").length + 4)
+    // and the invalid byte is read as U+FFFD, also three bytes
+    assert(msg("lab03").contains('\uFFFD') && v2("lab03")._2 == msg("lab03").length + 2)
   }
 
   test("a missing path raises PATH_NOT_FOUND when the read is planned") {
     val missing = Files.createTempDirectory("er7-missing").resolve("nope").toString
-    val e = intercept[org.apache.spark.sql.AnalysisException](spark.read.format("er7").load(missing))
+    val e = intercept[AnalysisException](Pipeline.readMessages(spark, missing))
     assert(e.getCondition == "PATH_NOT_FOUND")
   }
 }

@@ -13,7 +13,6 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.hl7.{Pipeline, Views}
-import graft.sources.Er7Source
 import graft.streaming.StreamingPipeline
 
 /** Pipeline E2E vs goldens (SURVEY.md §5.2.2, Q21): replaces the reference's
@@ -279,7 +278,7 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     spark.read.option("wholetext", "true").option("pathGlobFilter", "*.txt")
       .textFile(dir).toDF("file_text")
       .withColumn("source", regexp_extract(input_file_name(), "([^/]+)\\.txt", 1))
-      .transform(Er7Source.explodeMessages(_, "file_text"))
+      .transform(Pipeline.explodeMessages(_, "file_text"))
       .select("msg", "source")
 
   test("readMessages keeps the bytes and sources of the wholetext reader") {

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -438,6 +438,36 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
       StreamingPipeline.run(spark, inbox, lake.toString, ckpt.toString, maxFilesPerTrigger = Some(1))
       assertBatchLake(lake, inbox)
     }
+  }
+
+  test("the streaming lake reads each file once through one dedup") {
+    val tmp = Files.createTempDirectory("graft-stream-once")
+    val inbox = tmp.resolve("inbox")
+    val files = SpecInbox.write(inbox)
+    // the progress of the run's query, told apart from any other query by
+    // its source, which names the inbox
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.sources.exists(_.description.contains(inbox.toString))) progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (progress.asScala.exists(_.id == e.id)) ended.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      StreamingPipeline.run(spark, inbox.toString, tmp.resolve("lake").toString,
+        tmp.resolve("ckpt").toString, maxFilesPerTrigger = Some(1))
+      // the listener bus delivers a query's progress before its end
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.streams.removeListener(listener)
+    val batches = progress.asScala.toSeq
+    assert(batches.length == files.length, "one micro-batch per file")
+    assert(batches.map(_.stateOperators.length).toSet == Set(1), "state operators per batch")
+    // each file holds one message; 3 of the 4 are distinct
+    assert(batches.map(_.numInputRows).sum == files.length, "input rows over all batches")
+    assert(batches.flatMap(_.stateOperators).map(_.numRowsUpdated).sum == 3, "dedup passes")
   }
 
   test("q21b full-topology replay matches batch q21 zones across >=2 micro-batches") {
